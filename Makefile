@@ -2,7 +2,7 @@
 # `make evidence` regenerates everything a registry edit invalidates;
 # `make check` is the fast freshness guard the pre-commit hook runs.
 
-.PHONY: evidence check catalog sf01 hooks test
+.PHONY: evidence check catalog sf01 hooks test perf
 
 evidence: catalog sf01 check
 
@@ -20,3 +20,9 @@ hooks:
 
 test:
 	python -m pytest tests/ -x -q
+
+# one untraced benchmark run: make perf W=stream_backfill SEED=11
+W ?= stream_backfill
+SEED ?= 11
+perf:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 15 --trace 0

@@ -70,6 +70,10 @@ class Web3LogDataSource(DataSource):
       max_blocks_per_batch  micro-batch admission cap (O-4), default 100
       finality_depth        blocks held back from head (O-5), default 10
       n_slices              partitions per micro-batch, default 4
+      max_rows_per_batch    AIMD row cap per micro-batch (O-4), default 10k
+      checkpoint_location   the query's checkpoint dir: holds the offset
+                            sidecar (default: chain_dir, shared by every
+                            query with the same filter)
     """
 
     @classmethod
@@ -135,13 +139,17 @@ class Web3LogStreamReader(DataSourceStreamReader):
         # sidecar so a recreated reader resumes latestOffset from the last
         # committed block instead of start_block (Spark restores the range
         # start from its own checkpoint; this keeps our end-computation and
-        # AIMD pace consistent with it)
+        # AIMD pace consistent with it).  The sidecar belongs to ONE query:
+        # it lives in that query's checkpoint_location when given — keyed
+        # by the filter alone, a fresh query would resume another query's
+        # offset and emit its whole backlog as one uncapped first batch
         import hashlib
 
         fid = hashlib.sha256(
             json.dumps([self.addresses, list(self.topics), self.start], sort_keys=True).encode()
         ).hexdigest()[:12]
-        self._sidecar = f"{self.chain_dir}/_source_offset_{fid}.json"
+        base = options.get("checkpoint_location") or self.chain_dir
+        self._sidecar = f"{base}/_source_offset_{fid}.json"
         try:
             with open(self._sidecar) as f:
                 self._last = json.load(f)

@@ -444,18 +444,6 @@ class JdbcEntry:
     def url_for_write(self) -> str:
         return self._store.url
 
-    def tail_df(self, spark, max_rows: int):
-        """The last ``max_rows`` rows as a DataFrame — O(tail): the indx
-        range predicate pushes into the JDBC query (the database walks
-        its primary-key index), never a full-table scan.  Returns None
-        when the entry is empty.  Same contract as ParquetEntry.tail_df;
-        makes the streaming ingest's replay guard backend-agnostic."""
-        last = self.last_index()
-        if last == 0:
-            return None
-        lo = max(last - max_rows, 0)
-        return self.df(spark).where(f"indx >= {int(lo)}")
-
     def df(self, spark):
         """The entry as a DataFrame — ``spark.read.jdbc``: a distributed
         scan with predicate pushdown on ``indx`` available to Catalyst

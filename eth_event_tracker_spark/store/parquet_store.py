@@ -21,9 +21,11 @@ Why this layout scales:
   - The whole entry is directly ``spark.read.parquet``-able with partition
     pruning on ``bucket`` (and row-group pruning on indx/block_num).
 
-Micro-batch appends go through pyarrow (driver-side, the head path is
-≤ backlog blocks); bulk backfill uses ``append_df`` (distributed Spark
-write).  Both produce the same layout.
+Micro-batch appends go through pyarrow (``store_logs``, driver-side):
+the head path's batches are ≤ backlog blocks and the finalized stream's
+are bounded by the source's row cap.  Only the Tracker's bulk backfill of
+an unbounded range uses ``append_df`` (distributed Spark write).  Both
+produce the same layout.
 
 Durability contract matches the reference: StoreLogs persists before the
 checkpoint advances (tracker.go:369-382), so a crash between the two
@@ -258,23 +260,6 @@ class ParquetEntry:
             from ..schemas import LOG_SCHEMA
 
             return spark.createDataFrame([], LOG_SCHEMA)
-        return spark.read.parquet(*files)
-
-    def tail_df(self, spark, max_rows: int):
-        """The trailing bucket(s) covering at least the last ``max_rows``
-        rows, as a DataFrame — O(tail), never O(entry).  The replay guard
-        uses this: a re-delivered micro-batch can only collide with the
-        final committed append, so only that suffix needs scanning.
-        Returns None when the entry is empty."""
-        lo_bucket = max(0, self._last_index - max_rows) // self.bucket_size
-        files = [
-            str(f)
-            for k in self._buckets()
-            if k >= lo_bucket
-            for f in self._bucket_files(k)
-        ]
-        if not files:
-            return None
         return spark.read.parquet(*files)
 
     def append_df(self, df) -> int:

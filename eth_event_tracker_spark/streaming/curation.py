@@ -25,7 +25,8 @@ bounded:
 
 At 100 TB of text that makes the per-batch guard O(hash column of the
 touched prefixes), the same bounded-replay-guard discipline as the log
-entry's ``dedup_against_tail`` (streaming/pipeline.py).
+entry's ``dedup_against_tail`` (streaming/pipeline.py), which walks back
+only over the entry's tail.
 
 Exactly-once: the anti-join makes appends idempotent — a replayed batch
 finds its own hashes already in the corpus and appends nothing. (The

@@ -1,16 +1,19 @@
 """End-to-end streaming ingest pipelines combining the `web3logs` source,
-the parquet entry store, and the changelog model.
+the entry stores, and the changelog model.
 
 Two-channel architecture (mirrors the reference's durable-store +
 event-channel split, SURVEY §1.3):
 
   1. **Finalized feed** — ``start_finalized_ingest``: readStream from the
      web3logs source (which never emits a block shallower than
-     finality_depth) → foreachBatch append into the per-filter entry.
-     Exactly-once: Spark's checkpoint serializes batches; the batch append
-     dedups on (block_hash, tx_index, log_index) against a replayed
-     suffix, upgrading the reference's at-least-once commit order
-     (tracker.go:369-382).
+     finality_depth) → foreachBatch commit into the per-filter entry, one
+     Spark action per micro-batch: the row-capped batch is collected,
+     checked against the entry's tail (``scan_tail``) and appended with
+     ``store_logs``, like the reference's one StoreLogs call per synced
+     batch.  Exactly-once: Spark's checkpoint serializes batches; the
+     commit dedups on (block_hash, tx_index, log_index) against a
+     replayed suffix, upgrading the reference's at-least-once commit
+     order (tracker.go:369-382).
 
   2. **Head changelog** — the Tracker's poll() emits Added/Removed for the
      mutable window; ``append_changelog`` persists them as
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import FilterConfig
+from ..operators.indexing import ORDER_COLS
 from .tracker import ChangelogEvent
 
 # deterministic natural key of a log row (unique per chain position)
@@ -43,41 +47,45 @@ def start_finalized_ingest(
 ):
     """Streaming query: web3logs → idempotent entry append.
 
-    ``store`` is any Store backend whose entries implement ``append_df``
-    and ``tail_df`` (parquet and JDBC both do) — the ingest and its
-    replay guard are backend-agnostic.
+    Each micro-batch commits with ONE Spark action: ``toArrow()`` lands
+    the batch on the driver, where it is ordered, passed through the
+    replay guard and appended with ``entry.store_logs`` — the writer the
+    head path uses, so the source is read once per batch.  The source's
+    admission caps bound what the driver holds: at most
+    ``max(max_rows_per_batch, one block's logs)`` rows per batch (the row
+    cap halves the block range down to a single block, never below).
 
-    ``metrics_log``: optional list; each micro-batch appends one dict of
-    OBSERVED metrics (Spark ``Observation`` — computed inside the write
-    job itself, no second pass over the batch): rows admitted past the
-    replay guard and their block range.  This is the C-5 progress
-    surface for the streaming path — a monitoring hook reads the list
-    (or ships it to its metrics backend) without touching the data."""
-    from pyspark.sql import Observation
+    ``store`` is any Store backend; its entries need only ``scan_tail``
+    and ``store_logs``, which all four backends implement.
 
+    ``metrics_log``: optional list; each micro-batch appends one dict
+    ``{batch_id, n_admitted, min_block, max_block}`` computed from the
+    rows admitted past the replay guard (block range None when nothing
+    was admitted) — the progress surface for the streaming path."""
     from ..sources.web3_source import register
 
     register(spark)
     entry = store.entry(config.filter_hash)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        admitted = dedup_against_tail(spark, entry, batch_df)
-        if metrics_log is None:
-            entry.append_df(admitted)
-            return
-        obs = Observation(f"ingest_{batch_id}")
-        admitted = admitted.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_admitted"),
-            F.min("block_num").alias("min_block"),
-            F.max("block_num").alias("max_block"),
-        )
-        entry.append_df(admitted)
-        metrics_log.append({"batch_id": batch_id, **obs.get})
+        rows = batch_df.toArrow().sort_by([(c, "ascending") for c in ORDER_COLS]).to_pylist()
+        admitted = dedup_against_tail(entry, rows)
+        entry.store_logs(admitted)
+        if metrics_log is not None:
+            blocks = [r["block_num"] for r in admitted]
+            metrics_log.append(
+                {
+                    "batch_id": batch_id,
+                    "n_admitted": len(admitted),
+                    "min_block": min(blocks, default=None),
+                    "max_block": max(blocks, default=None),
+                }
+            )
 
     reader = (
         spark.readStream.format("web3logs")
         .option("chain_dir", chain_dir)
+        .option("checkpoint_location", checkpoint_dir)
         .option("addresses", json.dumps(list(config.addresses)))
         .option("topics", json.dumps(list(config.topics)))
         .option("start_block", str(config.start_block))
@@ -92,21 +100,28 @@ def start_finalized_ingest(
     )
 
 
-def dedup_against_tail(spark: SparkSession, entry, batch_df: DataFrame) -> DataFrame:
+def dedup_against_tail(entry, rows: list[dict]) -> list[dict]:
     """Replay guard (exactly-once upgrade of the reference's at-least-once
-    commit order, tracker.go:369-382): drop batch rows whose natural key is
-    already stored.  Appends are sequential, so a re-delivered micro-batch
-    can only collide with the LAST committed append — the guard anti-joins
-    against the trailing bucket(s) covering one batch of rows, never the
-    whole (100 TB) entry."""
-    batch_df = batch_df.dropDuplicates(list(NATURAL_KEY))
-    n = batch_df.count()  # micro-batch sized; bounds the tail read
-    tail = entry.tail_df(spark, max_rows=max(n, 1))
-    if tail is None:
-        return batch_df
-    return batch_df.join(
-        F.broadcast(tail.select(*NATURAL_KEY)), list(NATURAL_KEY), "left_anti"
-    )
+    commit order, tracker.go:369-382): drop rows whose natural key is
+    already stored or repeats earlier in ``rows``.  Appends are
+    sequential and batches cover disjoint block ranges, so a re-delivered
+    micro-batch can only collide with the entry's tail: ``scan_tail``
+    walks back from the end while the rows' block hashes belong to this
+    batch and stops at the first row of an earlier one — O(batch), never
+    the whole entry."""
+    if not rows:
+        return []
+    seen = {
+        tuple(r[c] for c in NATURAL_KEY)
+        for r in entry.scan_tail({r["block_hash"] for r in rows})
+    }
+    admitted = []
+    for r in rows:
+        key = tuple(r[c] for c in NATURAL_KEY)
+        if key not in seen:
+            seen.add(key)
+            admitted.append(r)
+    return admitted
 
 
 def append_changelog(entry, event: ChangelogEvent) -> None:

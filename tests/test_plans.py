@@ -103,7 +103,7 @@ def test_asymmetric_filters_are_equality_joins(spark, sf_dir):
 
 
 def test_jdbc_indx_pushdown_into_scan(spark, tmp_path):
-    """VERDICT r4 #4: JdbcEntry.df/tail_df claim indx-range pushdown into
+    """VERDICT r4 #4: JdbcEntry.df claims indx-range pushdown into
     the JDBC scan — assert it from the physical plan, Derby-backed: the
     predicate appears as a *-handled PushedFilter AND inside the generated
     external WHERE clause, so the database walks its primary-key index
@@ -119,11 +119,11 @@ def test_jdbc_indx_pushdown_into_scan(spark, tmp_path):
         prov.advance(30, logs_per_block=1)
         e.store_logs([lg for b in prov.canonical for lg in b.logs()])
 
-        # tail_df: the O(tail) range predicate is source-handled
-        tail = e.tail_df(spark, max_rows=5)
+        # df() + range predicate: the O(tail) range is source-handled
+        tail = e.df(spark).where("indx >= 25")
         plan = plan_of(tail)
         assert "*GreaterThanOrEqual(indx,25)" in plan, (
-            "tail_df's indx range must be fully handled by the JDBC source"
+            "the indx range must be fully handled by the JDBC source"
         )
         assert 'WHERE ("indx" IS NOT NULL) AND ("indx" >= 25)' in plan, (
             "the generated external query must carry the range WHERE"
