@@ -5,29 +5,15 @@ LLM-data pipelines actually filter at scale (a cheap linear model
 distills expensive heuristics/human labels, then scores the whole
 corpus in one vectorized pass).
 
-Spark-first by construction: features are the existing JVM-side
-``hashed_tfidf_vectors`` (no vocabulary state, fixed dim), training is
-``pyspark.ml`` LogisticRegression (distributed L-BFGS — treeAggregate
-partials, the driver holds only the (dim+1)-float coefficient vector),
-and scoring is one ``transform`` — a broadcast of the coefficients into
-a per-row dot product, no shuffle.
-
-Bootstrap labeling: ``distill_quality_gate`` trains on the RULE gate's
-own keep/drop verdicts — rules label the training set, the model
+The model is fixed-iteration, integer-quantized batch gradient descent
+(``train_quality_gd_portable``) whose every decision a DuckDB twin
+replays bit-for-bit (the semantic_portable.py recipe): gradients are
+exact, order-independent integer sums and weight updates exact integer
+half-away divisions, so the scores do not depend on the partitioning.
+Bootstrap labeling: ``distill_quality_gate_portable`` trains on the RULE
+gate's own keep/drop verdicts — rules label the training set, the model
 generalizes them to a smooth score (the classic weak-supervision
-bootstrap).  Swap in human labels by calling
-``train_quality_classifier`` directly with any (id, label) frame.
-
-Determinism note: the L-BFGS tier converges to the same optimum but its
-float reduction order follows the partitioning, so trailing ulps of the
-scores can differ across cluster layouts — tests pin its BEHAVIOR
-(separable-data accuracy, agreement with the teacher gate, schema/row
-stability), not bytes.  The ENGINE-PORTABLE tier below
-(``distill_quality_gate_portable``) is the registry entry since round
-11: fixed-iteration, integer-quantized batch gradient descent whose
-every decision a DuckDB twin replays bit-for-bit (the
-semantic_portable.py recipe) — see its docstring for the arithmetic
-contract.
+bootstrap).  See the two docstrings for the arithmetic contract.
 
 No counterpart in the reference (`tracker.go` filters by address/topic
 equality only); this is the LLM-data surface.
@@ -40,101 +26,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import hashed_tfidf_vectors
-
-
-def train_quality_classifier(
-    df: DataFrame,
-    labels: DataFrame,
-    dim: int = 256,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_iter: int = 40,
-    reg_param: float = 1e-3,
-    feats: DataFrame | None = None,
-    tol: float = 1e-6,
-):
-    """Fit LR on hashed TF-IDF features against ``labels`` (id_col,
-    label ∈ {0.0, 1.0}).  Returns the fitted
-    ``LogisticRegressionModel`` — driver-side state is only the
-    coefficient vector, so the model broadcasts for free at scoring
-    time."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.functions import array_to_vector
-
-    if feats is None:
-        feats = hashed_tfidf_vectors(df, dim=dim, text_col=text_col, id_col=id_col)
-    train = feats.join(labels, id_col).select(
-        array_to_vector(F.col("vector")).alias("features"),
-        F.col("label").cast("double").alias("label"),
-    )
-    lr = LogisticRegression(
-        maxIter=max_iter, regParam=reg_param, standardization=False, tol=tol
-    )
-    return lr.fit(train)
-
-
-def score_quality(
-    df: DataFrame,
-    model,
-    dim: int = 256,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    feats: DataFrame | None = None,
-) -> DataFrame:
-    """(id_col, p_good): the model's keep probability per doc — one
-    feature pass + one broadcast dot product; rank by it, threshold it,
-    or feed it to select_keepers/weighted_sample as the quality
-    signal."""
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    if feats is None:
-        feats = hashed_tfidf_vectors(df, dim=dim, text_col=text_col, id_col=id_col)
-    scored = model.transform(
-        feats.select(id_col, array_to_vector(F.col("vector")).alias("features"))
-    )
-    return scored.select(
-        id_col,
-        F.element_at(vector_to_array("probability"), 2).alias("p_good"),
-    )
-
-
-def distill_quality_gate(
-    df: DataFrame,
-    dim: int = 256,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_iter: int = 40,
-    tol: float = 1e-6,
-) -> DataFrame:
-    """Rules → model bootstrap: label with the rule gate (keep = 1),
-    train, score EVERYTHING — including docs the rules could not judge
-    smoothly.  Output: (id_col, teacher_verdict, p_good)."""
-    from .text import quality_verdicts
-
-    verdicts = quality_verdicts(df, text_col=text_col)
-    labels = verdicts.select(
-        id_col, (F.col("verdict") == "keep").cast("double").alias("label")
-    )
-    # ONE feature pass shared by training and scoring (the TF-IDF
-    # pipeline is the expensive half; L-BFGS converges in ~10 rounds)
-    feats = hashed_tfidf_vectors(
-        df, dim=dim, text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=False)
-    model = train_quality_classifier(
-        df, labels, dim=dim, text_col=text_col, id_col=id_col,
-        max_iter=max_iter, feats=feats, tol=tol,
-    )
-    scores = score_quality(
-        df, model, dim=dim, text_col=text_col, id_col=id_col, feats=feats
-    )
-    return scores.join(
-        verdicts.withColumnRenamed("verdict", "teacher_verdict"), id_col
-    ).select(id_col, "teacher_verdict", "p_good")
-
 
 # ---------------------------------------------------------------------------
-# Engine-portable tier: fixed-iteration integer-quantized logistic GD
+# Fixed-iteration integer-quantized logistic GD
 # (round-10 verdict item 1 — the last rows-only entry with algorithmic
 # content, promoted with the recipe that promoted k-means in round 10).
 # ---------------------------------------------------------------------------

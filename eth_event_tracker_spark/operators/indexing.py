@@ -18,23 +18,6 @@ from pyspark.sql import functions as F
 ORDER_COLS = ("block_num", "tx_index", "log_index")
 
 
-def assign_indx(df: DataFrame, base: int = 0, partition_cols: tuple[str, ...] = ()) -> DataFrame:
-    """S-5 — assign consecutive `indx` starting at ``base`` (= LastIndex()
-    of the target entry), ordered by the canonical key.
-
-    Scale note: an unpartitioned row_number is a single-reducer sort — fine
-    per micro-batch (bounded by AIMD batch size), wrong for a 100 TB
-    backfill.  For bulk backfills pass ``partition_cols=("filter_hash",)``
-    so each filter's sequence is its own partition, or use
-    ``assign_indx_scalable`` for a two-phase global sequence."""
-    w = (
-        Window.partitionBy(*[F.col(c) for c in partition_cols])
-        if partition_cols
-        else Window.partitionBy()
-    ).orderBy(*[F.col(c) for c in ORDER_COLS])
-    return df.withColumn("indx", (F.row_number().over(w) - 1 + F.lit(base)).cast("long"))
-
-
 def assign_indx_scalable(df: DataFrame, base: int = 0) -> DataFrame:
     """Two-phase global sequence without a single-reducer sort: per-block
     cumulative offsets + row_number within block.
@@ -107,13 +90,6 @@ def last_index(df: DataFrame) -> DataFrame:
     return df.agg((F.coalesce(F.max("indx"), F.lit(-1)) + 1).alias("last_index"))
 
 
-def point_lookup(df: DataFrame, indx: int) -> DataFrame:
-    """S-7 — GetLog(indx) (store/store.go:34-35).  An equality predicate on
-    the sort/partition key: parquet row-group min-max stats skip everything
-    else."""
-    return df.where(F.col("indx") == F.lit(indx))
-
-
 def tail_truncate_predicate(n: int, hash_at_n: str | None):
     """A-2 — the set removed by a rollback to (n, hash): all logs with
     block_num > n, or at height n with a different block hash
@@ -125,14 +101,3 @@ def tail_truncate_predicate(n: int, hash_at_n: str | None):
     return pred
 
 
-def removed_logs(df: DataFrame, n: int, hash_at_n: str | None) -> DataFrame:
-    """A-2 + A-3 — the retraction set, emitted oldest-first
-    (revertLogs flips the walk order, tracker.go:756-761)."""
-    return df.where(tail_truncate_predicate(n, hash_at_n)).orderBy(*ORDER_COLS)
-
-
-def checkpoint_resume(df: DataFrame, last_block: int) -> DataFrame:
-    """O-3 — never re-scan at or below the checkpoint (tracker.go:611-666):
-    the resumed scan starts at last_block + 1.  On a partitioned table this
-    is partition pruning, not a filter."""
-    return df.where(F.col("block_num") > F.lit(last_block))

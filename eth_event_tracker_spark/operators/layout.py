@@ -15,7 +15,8 @@ plain DataFrame ops:
       these come from a per-snapshot quantile table and are reused)
     → bucket each column row-locally against its cuts  (no shuffle)
     → morton = interleave the bucket bits              (no shuffle)
-    → repartitionByRange(n_files, morton)              (the ONE shuffle)
+    → exact key histogram → count-balanced key ranges  (tiny aggregate)
+    → repartition(n_files, range id)                   (the ONE data shuffle)
     → sortWithinPartitions(morton) → one file per partition
 
 Quantile buckets rather than raw values: bit interleaving assumes
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _MAX_TOTAL_BITS = 63  # stay inside a signed long
+_HIST_BITS = 16  # key-prefix histogram resolution: collects ≤ 65536 rows
 
 
 def morton_interleave(cols: list, bits: int) -> "F.Column":
@@ -126,15 +128,51 @@ def write_zordered(
     z-order of ``cols``: range-partition on the morton key (files get
     contiguous, disjoint key ranges) and sort within each partition (so
     row groups inside a file are tight too), then drop the key — the
-    layout is the product, not a column."""
+    layout is the product, not a column.
+
+    The file ranges come from the data alone: an exact histogram of the
+    key's top ``_HIST_BITS`` bits (integer counts, order-independent)
+    puts each key prefix in file ``floor(n_files · rows before it /
+    rows)``.  ``repartitionByRange`` would sample its bounds with a seed
+    taken from the input RDD's id, so the same data written twice in one
+    session could land in different files."""
     keyed = zorder_key(df, cols, bits, cuts)
+    prefix = F.shiftright(F.col("_zkey"), max(0, bits * len(cols) - _HIST_BITS))
+    hist = keyed.groupBy(prefix.alias("p")).count().orderBy("p").collect()
+    total = sum(r["count"] for r in hist)
+    starts, before = {}, 0  # file id → first key prefix in it
+    for r in hist:
+        starts.setdefault(min(n_files - 1, before * n_files // total), r["p"])
+        before += r["count"]
+    file_id = F.lit(0)
+    for p in sorted(starts.values())[1:]:
+        file_id = file_id + (prefix >= F.lit(p)).cast("int")
+    slots = _hash_slot_keys(df.sparkSession, max(1, len(starts)))
+    slot_of = F.array(*[F.lit(v).cast("long") for v in slots])
     (
-        keyed.repartitionByRange(n_files, F.col("_zkey"))
+        keyed.repartition(len(slots), F.element_at(slot_of, file_id + 1))
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
         .write.mode("overwrite")
         .parquet(path)
     )
+
+
+def _hash_slot_keys(spark, n: int) -> list[int]:
+    """For each partition id i < n, a long that ``repartition(n, col)``
+    sends to partition i (HashPartitioning's id is
+    ``pmod(hash(col), n)``), so a column of these keys places rows
+    exactly, one partition per key."""
+    rows = (
+        spark.range(64 * n)
+        .groupBy(F.expr(f"pmod(hash(id), {n})").alias("p"))
+        .agg(F.min("id").alias("v"))
+        .collect()
+    )
+    keys = {r["p"]: r["v"] for r in rows}
+    if len(keys) < n:
+        raise RuntimeError(f"no hash key found for {n - len(keys)} of {n} partitions")
+    return [keys[i] for i in range(n)]
 
 
 def file_skip_fraction(spark, path: str, col: str, lo, hi) -> float:

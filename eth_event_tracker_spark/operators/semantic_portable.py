@@ -24,9 +24,9 @@ promoted pagerank (queries/relational.py pagerank_cosupply docstring):
 * argmax tie-breaks on lowest centroid id (numpy first-max ==
   ``row_number() OVER (ORDER BY score DESC, cid)``).
 
-Reference semantics: SemDeDup (Abbas et al. 2023) as in
-``similarity.semantic_dedup``; reference repo analogue: none (the Go
-tracker has no embedding ops) — this extends the LLM-data surface.
+Reference semantics: SemDeDup (Abbas et al. 2023); reference repo
+analogue: none (the Go tracker has no embedding ops) — this extends the
+LLM-data surface.
 
 100 TB shape: the driver holds only the k×d integer centroid matrix and
 the ≤max(k, 256)-row sample; assignment is an Arrow-batched pandas UDF
@@ -97,8 +97,10 @@ def build_portable_centroids(
     step integer-exact or fixed-order IEEE:
 
     * sample = first ``max(k, min(256, 32k))`` rows by
-      (hash60(id, "ivf"), id) — the engine-portable analogue of
-      ivf_build_centroids' xxhash64 order;
+      (hash60(id, "ivf"), id) — a deterministic, unbiased subset
+      whatever the id layout correlates with (an id-ordered prefix would
+      seed every centroid from one cluster when ids follow topic or
+      ingest time);
     * seed sims: exact integer dots, one cast, one divide by the two
       sqrt'd self-dot casts; argmin ties -> lowest sample index
       (list.index / DuckDB list_position semantics);
@@ -231,10 +233,17 @@ def semantic_dup_pairs_portable(
     n_rows: int | None = None,
 ) -> DataFrame:
     """Within-cluster pairs (id_a, id_b, cosine), id_a < id_b, cosine =
-    round(ordered-fold dot / (norm_a * norm_b), 9) on the RAW doubles —
-    identical arithmetic to similarity.semantic_dup_pairs; only the
-    cluster ASSIGNMENT differs (portable k-means above).  auto-k =
-    max(16, min(4096, N // 256)) — the linear-total-work contract."""
+    round(ordered-fold dot / (norm_a * norm_b), 9) on the RAW doubles
+    (the cosine_near_dup_pairs rounding) over candidates that meet
+    through an equality join on the portable k-means centroid_id.
+    Pairs split across clusters are invisible by design — the SemDeDup
+    recall trade for a bounded candidate set.  auto-k =
+    max(16, min(4096, N // 256)) — the linear-total-work contract: a
+    fixed k grows within-cluster candidates as (N/k)², k ∝ N keeps the
+    expected cluster size constant.  ``collapse_exact`` groups
+    bit-identical vectors before the join and expands afterwards
+    (identical vectors quantize identically, hence share a cluster, so
+    the pair set is unchanged)."""
     from .similarity import _dbl_dot, _expand_exact_groups
 
     if n_clusters is None:
@@ -350,13 +359,13 @@ def topic_balanced_portable(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Engine-portable twin of text.topic_balanced_sample: integer
-    hashed-TFIDF cells → the portable k-means → per-topic deterministic
-    hash cap (splits.per_stratum_cap, already oracle-proven).  Every
-    decision — feature hash, seeding, Lloyd rounds, assignment argmax,
-    cap ranking — replays bit-for-bit in the DuckDB twin.  Docs whose
-    text yields no tokens have no feature cells and are excluded, the
-    same contract as the xxhash64 tier."""
+    """Topic-balanced sample: integer hashed-TFIDF cells → the
+    portable k-means → per-topic deterministic hash cap
+    (splits.per_stratum_cap, already oracle-proven), so a dominant topic
+    is capped while minority topics survive whole.  Every decision —
+    feature hash, seeding, Lloyd rounds, assignment argmax, cap ranking
+    — replays bit-for-bit in the DuckDB twin.  Docs whose text yields
+    no tokens have no feature cells and are excluded."""
     from .splits import per_stratum_cap
 
     vecs = hashed_tfidf_units(df, dim, text_col, id_col).localCheckpoint(eager=False)
@@ -423,9 +432,10 @@ def ivf_topk_portable(
     integer-sum centroids (the index build), each query probes its
     ``n_probe`` nearest centroids by the portable score, candidates meet
     via the centroid_id equality join, and the probed buckets rerank on
-    the exact ordered-fold cosine of the RAW doubles — the
-    similarity.ivf_topk contract (q_id, c_id, rank, cosine), every
-    decision replayable by the SQL twin."""
+    the exact ordered-fold cosine of the RAW doubles.  Output
+    (q_id, c_id, rank ≤ k, cosine), ties by c_id; ``exclude_self``
+    (default True) drops q_id == c_id pairs.  Every decision is
+    replayable by the SQL twin."""
     from .similarity import _dbl_dot
 
     cq = corpus.select(id_col, vec_col, quantized(F.col(vec_col)).alias("vq")).localCheckpoint(
@@ -474,18 +484,26 @@ def ivf_tune_nprobe_portable(
     vec_col: str = "embedding",
     exclude_self: bool = True,
 ) -> tuple[int, list[dict]]:
-    """Engine-portable twin of similarity.ivf_tune_nprobe — the same
-    one-job whole-curve shape (candidates annotated with probe position,
-    exploded to levels, one window pass), with the two non-replayable
-    pieces replaced:
+    """Pick the SMALLEST ``n_probe`` whose mean recall@k on the query
+    sample meets ``target_recall`` — the closed loop the recall monitor
+    (similarity.ann_recall) only reports on.
 
-    * probe order comes from probe_portable's lexsort over the portable
-      scores (np.argsort's unstable quicksort could order tied centroids
-      differently from the twin's ROW_NUMBER);
-    * the per-level mean recall is an exact-integer mean: per-query
-      recall (an exact ints ratio) quantizes to 1e-9 units — exact,
-      recalls are multiples of 1/k — and the level mean is
-      SUM(units)/n/1e9, order-independent (F.avg over doubles is not)."""
+    Returns ``(n_probe, curve)`` where curve is
+    ``[{"n_probe": p, "mean_recall": r}, ...]`` for every level 1 ..
+    ``max_probe`` (default ``n_centroids``; probing every centroid is
+    the exact scan, so any target ≤ 1.0 is met).  The whole curve is
+    one job: candidates carry the probe position of their bucket,
+    explode to every level they are visible at, and one window
+    partitioned by (q_id, level) ranks all levels at once.
+
+    Both float-order seams are replayable: probe order comes from
+    probe_portable's lexsort over the portable scores (np.argsort's
+    unstable quicksort could order tied centroids differently from the
+    twin's ROW_NUMBER), and the per-level mean recall is an
+    exact-integer mean — per-query recall (an exact ints ratio)
+    quantizes to 1e-9 units (exact: recalls are multiples of 1/k) and
+    the level mean is SUM(units)/n/1e9, order-independent (F.avg over
+    doubles is not)."""
     from .similarity import _dbl_dot, cosine_topk_exact
     from pyspark.sql import Window
 
@@ -588,8 +606,9 @@ def pq_train_portable(
     hash60-ordered sample of e6-QUANTIZED vectors, every step exact or
     fixed-order —
 
-    * seeds = the first k sample rows' subspace slices (cycled when the
-      sample is shorter), exactly similarity.pq_train's rule;
+    * seeds = the first k sample rows' subspace slices, cycled when
+      the sample is shorter than k (surplus centroids start on
+      duplicated seeds; encode's first-minimum argmin still works);
     * assignment: integer squared distances (order-independent exact
       sums — euclidean needs no fold discipline at all), first-minimum
       ties;
@@ -599,9 +618,9 @@ def pq_train_portable(
       trick of carrying raw sums does not apply: scale changes
       distances) stays replayable.
 
-    Returns (m, k, d/m) python ints.  Unlike similarity.pq_train this
-    trains on quantized units; the ~1e-6 relative quantization noise is
-    far below the k=16-codes resolution (recall pinned in tests)."""
+    Returns (m, k, d/m) python ints.  Training runs on quantized units;
+    the ~1e-6 relative quantization noise is far below the k=16-codes
+    resolution (recall pinned in tests)."""
     qdf = corpus.select(id_col, quantized(F.col(vec_col)).alias("vq"))
     sample = (
         qdf.orderBy(hash60(F.col(id_col).cast("string"), F.lit("pq")), id_col)
@@ -689,8 +708,9 @@ def pq_adc_topk_portable(
 ) -> DataFrame:
     """ADC scan over integer LUTs (Σ_s lut[s][code_s] — exact BIGINT,
     order-free) + exact ordered-fold rerank on the raw doubles of the
-    shortlist·k survivors; same output contract as similarity.
-    pq_adc_topk: (q_id, vec_id, dist, rank ≤ k), ties by id."""
+    shortlist·k survivors.  Output (q_id, vec_id, dist, rank ≤ k), ties
+    by id; ``exclude_self`` (default True) drops q_id == c_id pairs —
+    pass False for cross-table id spaces."""
 
     m = len(books)
     n_cent = len(books[0])
@@ -765,8 +785,9 @@ def semantic_dedup_portable(
 ) -> DataFrame:
     """Portable SemDeDup end-to-end: portable within-cluster pairs →
     min-id connected components → drop non-minimum members; returns the
-    surviving rows of ``df`` unchanged (same contract as
-    similarity.semantic_dedup).
+    surviving rows of ``df`` unchanged.  Chains (A~B, B~C) collapse to
+    ONE keeper even when A~C itself was never a candidate — components,
+    not per-pair rules, make the decision.
 
     DECISION FORM over exact-duplicate groups (round-11; the sf≈30
     smoke caught the quadratic: 3× the sf10 data took 8.4× the time —

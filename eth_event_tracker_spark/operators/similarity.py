@@ -15,8 +15,9 @@ Three tiers:
 
 Scale notes: brute force is O(Q×N×d) — fine for reranking within buckets,
 wrong as a global scan; LSH reduces candidates per query to a bucket.
-A production IVF variant would k-means the corpus and probe nearest
-centroids; the bucketing/join skeleton is identical to ann_lsh.
+The k-means tiers (IVF, its n_probe tuner, SemDeDup) and product
+quantization live in ``semantic_portable``; they reuse ``_dbl_dot``,
+``cosine_topk_exact`` and ``_expand_exact_groups`` from here.
 """
 
 from __future__ import annotations
@@ -296,244 +297,6 @@ def ann_lsh_topk(
     )
 
 
-# ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the cluster-then-probe scale path
-# ---------------------------------------------------------------------------
-def ivf_build_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "np.ndarray":
-    """Deterministic mini k-means: seed centroids by greedy
-    farthest-point (k-center) selection over a bounded id-ordered sample
-    — naive first-k seeding collapses when the data's id order is
-    correlated with its clusters (all seeds land in one cluster and the
-    minority clusters never get a centroid) — then ``n_iters`` Lloyd
-    rounds where assignment is an Arrow-batched argmax (numpy) and the
-    update is a Spark groupBy mean — both distributed, no driver-side
-    data pass beyond the sample and the k×d centroid matrix."""
-    n_sample = max(n_centroids, min(256, 32 * n_centroids))
-    # hash-ordered sample: an id-ordered prefix is whatever the data's id
-    # layout correlates with (ingest time, topic, source) — hash order is
-    # a deterministic unbiased subset of any corpus
-    first = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(id_col), id_col)
-        .limit(n_sample)
-        .collect()
-    )
-    if not first:
-        raise ValueError("ivf_build_centroids: corpus is empty — nothing to cluster")
-    sample = np.stack([np.array(r[1], dtype=np.float64) for r in first])
-    sn = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    chosen = [0]
-    min_sim = sn @ sn[0]
-    while len(chosen) < min(n_centroids, len(sample)):
-        nxt = int(np.argmin(min_sim))  # farthest by cosine; ties → lowest index
-        chosen.append(nxt)
-        min_sim = np.maximum(min_sim, sn @ sn[nxt])
-    while len(chosen) < n_centroids:  # degenerate: fewer sample rows than k
-        chosen.append(chosen[len(chosen) % len(sample)])
-    cents = sample[chosen].copy()
-    for _ in range(n_iters):
-        assigned = ivf_assign(corpus, cents, id_col, vec_col)
-        means = (
-            assigned.select("centroid_id", F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        new = cents.copy()
-        by_c: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_c.setdefault(r.centroid_id, {})[r.pos] = r.m
-        for ci, posmap in by_c.items():
-            new[ci] = np.array([posmap[p] for p in sorted(posmap)])
-        cents = new
-    return cents
-
-
-def ivf_assign(df: DataFrame, centroids, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Tag each vector with its nearest centroid (cosine) — vectorized."""
-    from pyspark.sql.functions import pandas_udf
-
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-
-    @pandas_udf("int")
-    def nearest(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        return pd.Series(np.argmax(m @ cn.T, axis=1).astype(np.int32))
-
-    return df.withColumn("centroid_id", nearest(F.col(vec_col)))
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """IVF ANN: assign corpus to centroids once (the 'index build' — at
-    100 TB this is a partitioned write clustered by centroid_id), then for
-    each query probe its ``n_probe`` nearest centroids and exact-rerank
-    only those buckets. Candidates meet via an equality join on
-    centroid_id — the same no-cross-join shape as LSH."""
-    cents = ivf_build_centroids(corpus, n_centroids, 2, id_col, vec_col)
-    corpus_tagged = ivf_assign(corpus, cents, id_col, vec_col).select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"), "centroid_id"
-    )
-    return _ivf_probe_rerank(
-        queries, cents, corpus_tagged, k, n_probe, id_col, vec_col, exclude_self
-    )
-
-
-def _ivf_probe_rerank(
-    queries: DataFrame,
-    cents: "np.ndarray",
-    corpus_tagged: DataFrame,
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Probe ``n_probe`` nearest centroids per query and exact-rerank the
-    probed buckets — shared by the build-inline and persisted-index
-    paths.  ``corpus_tagged`` carries (c_id, cv, centroid_id)."""
-    from pyspark.sql.functions import pandas_udf
-
-    cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-
-    @pandas_udf("array<int>")
-    def probe_of(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        sims = m @ cn.T
-        order = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
-
-    qb = (
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
-        .withColumn("centroid_id", F.explode(probe_of(F.col("qv"))))
-    )
-    cand = qb.join(corpus_tagged, "centroid_id")
-    if exclude_self:
-        cand = cand.where(F.col("q_id") != F.col("c_id"))
-    dot = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nq = F.sqrt(F.aggregate(F.transform("qv", lambda x: x.cast("double") * x.cast("double")), F.lit(0.0), lambda a, x: a + x))
-    nc = F.sqrt(F.aggregate(F.transform("cv", lambda x: x.cast("double") * x.cast("double")), F.lit(0.0), lambda a, x: a + x))
-    scored = cand.withColumn("cosine", dot / (nq * nc))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", "cosine")
-    )
-
-
-def ivf_write_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist an IVF index: train centroids once, write the tagged
-    corpus partitioned by ``centroid_id`` (one directory per inverted
-    list) plus the tiny k×d centroid table at ``<path>/centroids``.
-
-    This is the build-once/probe-many shape vector search actually runs
-    at 100 TB: the k-means and the full-corpus assignment pass are paid
-    once per index build, and every later query batch reads only the
-    centroid table (driver-sized) and the probed inverted lists — the
-    clustered layout means a probe's equality join touches ~n_probe/k of
-    the corpus bytes."""
-    cents = ivf_build_centroids(corpus, n_centroids, n_iters, id_col, vec_col)
-    spark = corpus.sparkSession
-    cent_rows = [(int(i), [float(x) for x in cents[i]]) for i in range(len(cents))]
-    (
-        spark.createDataFrame(cent_rows, "centroid_id int, vector array<double>")
-        .coalesce(1)
-        .write.mode("error")
-        .parquet(f"{path}/centroids")
-    )
-    (
-        ivf_assign(corpus, cents, id_col, vec_col)
-        .select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"), "centroid_id")
-        .repartition("centroid_id")
-        .write.mode("error")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/vectors")
-    )
-
-
-def ivf_append_to_index(
-    incoming: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Extend a persisted IVF index with new vectors: assign ``incoming``
-    against the STORED centroids (no retrain — the index's geometry must
-    stay stable or every prior assignment silently goes stale) and append
-    to the clustered inverted lists.  The corpus-extension shape for
-    vector search, mirroring the MinHash signature sidecar in streaming
-    curation.  Re-train (``ivf_write_index`` to a new path) when the data
-    distribution has drifted enough that probe recall sags."""
-    spark = incoming.sparkSession
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.stack(
-        [
-            np.array(r.vector, dtype=np.float64)
-            for r in sorted(cent_rows, key=lambda r: r.centroid_id)
-        ]
-    )
-    (
-        ivf_assign(incoming, cents, id_col, vec_col)
-        .select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"), "centroid_id")
-        .repartition("centroid_id")
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/vectors")
-    )
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Probe a persisted IVF index (see :func:`ivf_write_index`).
-    Identical output contract to :func:`ivf_topk` over the same corpus
-    and parameters; the corpus is never re-trained or re-assigned."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.stack(
-        [
-            np.array(r.vector, dtype=np.float64)
-            for r in sorted(cent_rows, key=lambda r: r.centroid_id)
-        ]
-    )
-    tagged = spark.read.parquet(f"{path}/vectors")
-    return _ivf_probe_rerank(queries, cents, tagged, k, n_probe, id_col, vec_col, exclude_self)
-
-
 def cosine_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.3,
@@ -806,627 +569,6 @@ def cosine_near_dup_pairs_lsh(
     )
 
 
-# ---------------------------------------------------------------------------
-# Semantic dedup (SemDeDup, Abbas et al. 2023): k-means-cluster the
-# embedding space, then near-dup only WITHIN clusters — the quadratic
-# pair search is confined to each cluster, and cluster count scales with
-# the corpus so expected cluster size (hence per-cluster cost) stays a
-# constant.  The 100 TB discipline: pick ``n_clusters ∝ N`` and the
-# total pair work is O(N · E[cluster size]), linear in the corpus.
-# ---------------------------------------------------------------------------
-def semantic_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.85,
-    n_clusters: int | None = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids=None,
-    collapse_exact: bool = True,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Within-cluster pairs with cosine ≥ threshold: (id_a, id_b, cosine),
-    id_a < id_b.  Candidates meet through an EQUALITY join on
-    centroid_id (never a global self-join); cosines are the exact
-    ordered-fold doubles, rounded like cosine_near_dup_pairs.  Pairs
-    whose members land in different clusters are invisible by design —
-    that recall trade-off against a bounded candidate set is the SemDeDup
-    contract (measured in tests against the exact tier).
-
-    ``n_clusters=None`` auto-scales the cluster count with the corpus:
-    k = floor(N / 256) (floor 16, cap 4096 — the centroid matrix lives
-    on the driver, so k is bounded; beyond the cap, shard the corpus
-    first).
-    A FIXED k makes within-cluster candidates grow (N/k)² — quadratic in
-    the corpus; k ∝ N keeps expected cluster size constant, so total
-    pair work is linear.
-
-    ``collapse_exact`` (default on) groups bit-identical vectors before
-    the within-cluster join and expands afterwards — same fix and same
-    bit-equality argument as cosine_near_dup_pairs_lsh: identical
-    vectors always land in the same cluster (ivf_assign's argmax is
-    deterministic on identical input), so the expanded pair set equals
-    the uncollapsed join's exactly (pinned in
-    tests/test_round9_scale.py)."""
-    if n_clusters is None:
-        # k = floor(N/256), floor 16, cap 4096 — exactly the documented
-        # contract (round-9 advice dropped a stray +1); callers that
-        # already know the row count pass n_rows and skip the count()
-        if n_rows is None:
-            n_rows = df.count()
-        n_clusters = max(16, min(4096, n_rows // 256))
-    cents = centroids if centroids is not None else ivf_build_centroids(df, n_clusters, 2, id_col, vec_col)
-    if collapse_exact:
-        # centroids come from the FULL corpus (above) so assignment —
-        # hence the candidate set — is identical to the uncollapsed run
-        return _expand_exact_groups(
-            df,
-            lambda reps: semantic_dup_pairs(
-                reps, threshold, n_clusters, id_col, vec_col,
-                centroids=cents, collapse_exact=False,
-            ),
-            threshold,
-            id_col,
-            vec_col,
-            round_digits=9,
-        )
-    v = F.col(vec_col)
-    tagged = (
-        ivf_assign(df.select(id_col, vec_col), cents, id_col, vec_col)
-        # norms are per-ROW, so fold them before the pair join (O(N)
-        # folds, not O(pairs)); checkpoint so the Arrow-stage assignment
-        # and the norm fold run once, not once per join branch
-        .withColumn("nrm", F.sqrt(_dbl_dot(v, v)))
-        .localCheckpoint(eager=False)
-    )
-    a = tagged.select(
-        "centroid_id", F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("nrm").alias("na")
-    )
-    b = tagged.select(
-        "centroid_id", F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col("nrm").alias("nb")
-    )
-    return (
-        a.join(b, "centroid_id")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.round(_dbl_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 9),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    threshold: float = 0.85,
-    n_clusters: int | None = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids=None,
-    collapse_exact: bool = True,
-) -> DataFrame:
-    """SemDeDup end-to-end: within-cluster cosine pairs → connected
-    components → keep the min-id representative of each semantic-dup
-    group; returns the surviving rows of ``df`` unchanged.  Chains
-    (A~B, B~C) collapse to ONE keeper even when A~C itself was never a
-    candidate — components, not per-pair rules, make the decision
-    (operators/dedup.dup_clusters)."""
-    from .dedup import dup_clusters
-
-    pairs = semantic_dup_pairs(
-        df, threshold, n_clusters, id_col, vec_col, centroids, collapse_exact
-    )
-    comps = dup_clusters(pairs, "id_a", "id_b")
-    drops = comps.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return df.join(drops, id_col, "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — the compressed-domain ANN tier.
-#
-# At 100 TB a float32 corpus is 4·d bytes/vector; PQ stores m single-byte
-# centroid codes (m=8, d=64 → 32× smaller), and queries scan CODES with a
-# per-query lookup table (ADC) instead of touching the raw vectors — only
-# the shortlist is reranked exactly.  Train-on-a-sample is the standard
-# recipe (the codebooks are m·k·(d/m) floats — driver-resident like the
-# IVF centroid matrix); encode and ADC scoring are pure JVM expressions
-# (ordered double folds, no Arrow seam, whole-stage codegen).
-# ---------------------------------------------------------------------------
-def pq_train(
-    corpus: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    n_iters: int = 4,
-    n_train: int = 1024,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "np.ndarray":
-    """Per-subspace Lloyd k-means on a deterministic bounded sample
-    (``n_train`` rows by HASH order — TakeOrdered, never a full collect;
-    an id-ordered prefix would train the codebooks on whatever the id
-    layout correlates with, the same bias fixed in ivf_build_centroids).
-    Returns codebooks shaped (m, k, d/m) float64."""
-    sample = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(id_col), id_col)
-        .limit(n_train)
-        .collect()
-    )
-    if not sample:
-        raise ValueError("pq_train: corpus is empty — nothing to train on")
-    x = np.stack([np.asarray(r[1], dtype=np.float64) for r in sample])
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-    if x.shape[0] < k:
-        # fewer sample rows than centroids (round-5 advice: used to crash
-        # on a numpy shape mismatch) — pad seeds by cycling the sample,
-        # the same degenerate-corpus policy as ivf_build_centroids;
-        # surplus centroids collapse onto duplicated seeds and encode/ADC
-        # still function (argmin picks the first minimum)
-        reps = -(-k // x.shape[0])  # ceil
-        x_seed = np.tile(x, (reps, 1))[:k]
-    else:
-        x_seed = x
-    books = np.empty((m, k, dsub))
-    for s in range(m):
-        xs = x[:, s * dsub : (s + 1) * dsub]
-        cents = x_seed[:k, s * dsub : (s + 1) * dsub].copy()  # deterministic seed
-        for _ in range(n_iters):
-            d2 = ((xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            for j in range(k):
-                mask = assign == j
-                if mask.any():
-                    cents[j] = xs[mask].mean(axis=0)
-        books[s] = cents
-    return books
-
-
-def _sq_dist_fold(subvec, centroid: "np.ndarray"):
-    """Ordered-fold squared euclidean distance between an array slice and
-    a literal centroid — same bit-portable fold discipline as _dbl_dot."""
-    lit = F.array(*[F.lit(float(c)) for c in centroid])
-    return F.aggregate(
-        F.zip_with(subvec, lit, lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: "np.ndarray",
-    vec_col: str = "embedding",
-    out_col: str = "pq_codes",
-) -> DataFrame:
-    """Append ``out_col``: array<int> of m nearest-centroid codes.  Pure
-    JVM: per subspace, k ordered-fold distances + array_position(min) —
-    first-minimum tie-break, matching np.argmin.
-
-    Expression-size note: an earlier form unrolled m·k separate
-    ``aggregate`` folds (128 lambda trees for m=8,k=16) and spent
-    seconds in analysis/codegen before touching a row.  This form nests
-    TWO higher-order lambdas over a constant-folded codebook literal —
-    same arithmetic, same evaluation order per (subspace, centroid),
-    tree size O(m·k literals + 2 lambdas)."""
-    m, k, dsub = codebooks.shape
-    books = F.array(
-        *[
-            F.array(*[F.array(*[F.lit(float(v)) for v in codebooks[s, j]]) for j in range(k)])
-            for s in range(m)
-        ]
-    )
-    v = F.col(vec_col)
-    dists = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.transform(
-            F.element_at(books, s + 1),
-            lambda cv: F.aggregate(
-                F.zip_with(
-                    F.slice(v, s * dsub + 1, F.lit(dsub)),
-                    cv,
-                    lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-                ),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ),
-        ),
-    )
-    codes = F.transform(dists, lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"))
-    return df.withColumn(out_col, codes)
-
-
-def pq_adc_topk(
-    queries: DataFrame,
-    corpus_codes: DataFrame,
-    codebooks: "np.ndarray",
-    k: int = 5,
-    shortlist: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """ADC search + exact rerank.
-
-    Driver builds each query's (m·n_cent) lookup table of subspace
-    distances (tiny: queries are the small side by contract), the table
-    rides the broadcast join, and the corpus CODES are scored with one
-    indexed-transform fold — the raw vectors are read only for the
-    ``shortlist·k`` candidates per query that survive, which are exactly
-    reranked on true squared distance.  Output: (q_id, vec_id, dist,
-    rank ≤ k) — ties broken by id, and ``exclude_self`` (default True)
-    drops q_id == c_id pairs, like every other tier (round-5 advice:
-    this tier used to lack the filter, so corpus-drawn queries returned
-    themselves at rank 1; pass False for cross-table id spaces)."""
-    m, n_cent, dsub = codebooks.shape
-    qrows = queries.select(id_col, vec_col).collect()
-    lut_rows = []
-    for r in qrows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        lut = np.empty(m * n_cent)
-        for s in range(m):
-            qs = qv[s * dsub : (s + 1) * dsub]
-            lut[s * n_cent : s * n_cent + n_cent] = ((codebooks[s] - qs) ** 2).sum(axis=1)
-        lut_rows.append((int(r[0]), [float(v) for v in lut], [float(v) for v in qv]))
-    spark = queries.sparkSession
-    luts = spark.createDataFrame(
-        lut_rows, f"q_id long, lut array<double>, qv array<double>"
-    )
-    # ADC scan touches ONLY (id, codes): the raw vectors never enter the
-    # scan or the shortlist shuffle — they are joined back for just the
-    # shortlist·k survivors per query (the compressed-domain contract).
-    scored = corpus_codes.select(
-        F.col(id_col).alias("c_id"), codes_col
-    ).crossJoin(F.broadcast(luts.drop("qv"))).select(
-        "q_id",
-        "c_id",
-        F.expr(
-            f"aggregate(transform({codes_col}, (c, s) -> element_at(lut, s * {n_cent} + c + 1)), "
-            "0D, (acc, x) -> acc + x)"
-        ).alias("adc_dist"),
-    )
-    if exclude_self:
-        scored = scored.where(F.col("q_id") != F.col("c_id"))
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "c_id")
-    short = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= shortlist * k)
-        .join(
-            corpus_codes.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv")),
-            "c_id",
-        )
-        .join(F.broadcast(luts.select("q_id", "qv")), "q_id")
-    )
-    exact = short.withColumn(
-        "dist",
-        F.aggregate(
-            F.zip_with("qv", "cv", lambda a, b: (a - b.cast("double")) * (a - b.cast("double"))),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    w2 = Window.partitionBy("q_id").orderBy("dist", "c_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("q_id", F.col("c_id").alias(id_col), "dist", "rank")
-    )
-
-
-def pq_write_index(
-    corpus: DataFrame,
-    path: str,
-    m: int = 8,
-    k: int = 16,
-    n_train: int = 1024,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist a PQ index: codebooks at ``<path>/codebooks`` (m·k tiny
-    rows) and ONE columnar table at ``<path>/vectors`` holding
-    (c_id, pq_codes, cv).  No second copy of anything: parquet is
-    columnar, so the ADC scan that selects only (c_id, pq_codes) reads
-    just the code pages — m bytes/vector of I/O — while the rerank's
-    vector fetch reads the cv pages for the shortlist join.  Build-once
-    /probe-many, like :func:`ivf_write_index`."""
-    books = pq_train(corpus, m, k, n_train=n_train, id_col=id_col, vec_col=vec_col)
-    spark = corpus.sparkSession
-    rows = [
-        (int(s), int(j), [float(x) for x in books[s, j]])
-        for s in range(m)
-        for j in range(k)
-    ]
-    (
-        spark.createDataFrame(rows, "s int, j int, vector array<double>")
-        .coalesce(1)
-        .write.mode("error")
-        .parquet(f"{path}/codebooks")
-    )
-    (
-        pq_encode(corpus, books, vec_col=vec_col)
-        .select(F.col(id_col).alias("c_id"), "pq_codes", F.col(vec_col).alias("cv"))
-        .write.mode("error")
-        .parquet(f"{path}/vectors")
-    )
-
-
-def _pq_load_books(spark, path: str) -> "np.ndarray":
-    rows = spark.read.parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r.s for r in rows)
-    k = 1 + max(r.j for r in rows)
-    dsub = len(rows[0].vector)
-    books = np.empty((m, k, dsub))
-    for r in rows:
-        books[r.s, r.j] = np.array(r.vector, dtype=np.float64)
-    return books
-
-
-def pq_append_to_index(
-    incoming: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Extend a persisted PQ index: encode ``incoming`` against the
-    STORED codebooks (no retrain — stored codes must stay comparable)
-    and append.  Re-train to a new path when distribution drift degrades
-    quantization error."""
-    spark = incoming.sparkSession
-    books = _pq_load_books(spark, path)
-    (
-        pq_encode(incoming, books, vec_col=vec_col)
-        .select(F.col(id_col).alias("c_id"), "pq_codes", F.col(vec_col).alias("cv"))
-        .write.mode("append")
-        .parquet(f"{path}/vectors")
-    )
-
-
-def pq_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    shortlist: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Search a persisted PQ index — identical output contract to
-    :func:`pq_adc_topk` with the same codebooks."""
-    books = _pq_load_books(spark, path)
-    stored = spark.read.parquet(f"{path}/vectors").select(
-        F.col("c_id").alias(id_col), "pq_codes", F.col("cv").alias(vec_col)
-    )
-    return pq_adc_topk(
-        queries,
-        stored,
-        books,
-        k=k,
-        shortlist=shortlist,
-        id_col=id_col,
-        vec_col=vec_col,
-        exclude_self=exclude_self,
-    )
-
-
-def ivfpq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 3,
-    m: int = 8,
-    pq_k: int = 16,
-    shortlist: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """IVF-PQ: the two scale levers composed — IVF probing bounds WHICH
-    rows a query touches (~n_probe/n_centroids of the corpus, equality
-    join on centroid_id), PQ codes bound HOW MANY BYTES each touched row
-    costs (m codes, ADC lookup-table scoring), and the exact euclidean
-    rerank runs only on the ADC shortlist.  This is the FAISS
-    IVFADC layout re-expressed as DataFrame ops; at 100 TB the encoded
-    corpus is written partitioned by centroid_id once (compose
-    pq_encode with ivf_write_index's layout) and both levers turn into
-    partition pruning + column pruning on the same table."""
-    cents = ivf_build_centroids(corpus, n_centroids, 2, id_col, vec_col)
-    books = pq_train(corpus, m, pq_k, id_col=id_col, vec_col=vec_col)
-    encoded = pq_encode(
-        ivf_assign(corpus, cents, id_col, vec_col), books, vec_col=vec_col
-    ).select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"), "centroid_id", "pq_codes"
-    )
-
-    # per-query probe list (driver-side centroid math, like _ivf_probe_rerank)
-    cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    n_cent = pq_k
-    dsub = books.shape[2]
-    qrows = queries.select(id_col, vec_col).collect()
-    probe_rows = []
-    for r in qrows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        sims = (qv / np.linalg.norm(qv)) @ cn.T
-        probes = [int(x) for x in np.argsort(-sims)[:n_probe]]
-        lut = np.empty(m * n_cent)
-        for s in range(m):
-            qs = qv[s * dsub : (s + 1) * dsub]
-            lut[s * n_cent : s * n_cent + n_cent] = ((books[s] - qs) ** 2).sum(axis=1)
-        probe_rows.append((int(r[0]), probes, [float(v) for v in lut], [float(v) for v in qv]))
-    spark = queries.sparkSession
-    qdf = spark.createDataFrame(
-        probe_rows, "q_id long, probes array<int>, lut array<double>, qv array<double>"
-    ).select("q_id", F.explode("probes").alias("centroid_id"), "lut", "qv")
-
-    # equality join on centroid_id: each query's ADC scan touches only
-    # its probed inverted lists, reading (id, codes) — not raw vectors
-    cand = encoded.drop("cv").join(F.broadcast(qdf.drop("qv")), "centroid_id")
-    scored = cand.select(
-        "q_id",
-        "c_id",
-        F.expr(
-            f"aggregate(transform(pq_codes, (c, s) -> element_at(lut, s * {n_cent} + c + 1)), "
-            "0D, (acc, x) -> acc + x)"
-        ).alias("adc_dist"),
-    )
-    if exclude_self:
-        scored = scored.where(F.col("q_id") != F.col("c_id"))
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "c_id")
-    short = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= shortlist * k)
-        .join(encoded.select("c_id", "cv"), "c_id")
-        .join(F.broadcast(qdf.select("q_id", "qv").distinct()), "q_id")
-    )
-    exact = short.withColumn(
-        "dist",
-        F.aggregate(
-            F.zip_with("qv", "cv", lambda a, b: (a - b.cast("double")) * (a - b.cast("double"))),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    w2 = Window.partitionBy("q_id").orderBy("dist", "c_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("q_id", F.col("c_id").alias(id_col), "dist", "rank")
-    )
-
-
-def ivf_tune_nprobe(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    target_recall: float = 0.9,
-    max_probe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> tuple[int, list[dict]]:
-    """Pick the SMALLEST ``n_probe`` whose mean recall@k on the query
-    sample meets ``target_recall`` — the closed loop the recall monitor
-    (:func:`ann_recall`) only reports on (round-7 verdict item 5:
-    'expose an ann_recall-driven probe selection helper so the monitor
-    closes the loop instead of just reporting').
-
-    Returns ``(n_probe, curve)`` where curve is
-    ``[{"n_probe": p, "mean_recall": r}, ...]`` for every probe level
-    evaluated (ascending, stops at the first level meeting target).
-    ``max_probe`` defaults to ``n_centroids``; probing every centroid
-    degenerates to the exact scan, so recall is 1.0 there and the search
-    always terminates for any target ≤ 1.0.
-
-    Cost shape (100 TB): centroids are built once, the corpus is
-    assigned once, and the candidate table — every (query, candidate)
-    pair within the query's ``max_probe`` nearest buckets, annotated
-    with the PROBE POSITION of the bucket it came from — is
-    materialized ONCE; the ENTIRE curve then evaluates in ONE job: each
-    candidate explodes to the probe levels it participates in
-    (level > probe_pos, ≤ max_probe rows per candidate), one window
-    partitioned by (q_id, level) ranks every level simultaneously, and
-    the truth semi-join + per-level mean reduce to |max_probe| rows on
-    the driver.  No per-level driver round-trips — the iterative-loop
-    discipline the graph operators follow, applied to parameter search.
-    The exact ground-truth pass is priced by the query sample, exactly
-    like :func:`ann_recall`."""
-    from pyspark.sql.functions import pandas_udf
-
-    max_probe = min(max_probe or n_centroids, n_centroids)
-    cents = ivf_build_centroids(corpus, n_centroids, 2, id_col, vec_col)
-    tagged = ivf_assign(corpus, cents, id_col, vec_col).select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv"), "centroid_id"
-    )
-    cn_mat = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-
-    @pandas_udf("array<int>")
-    def probe_order(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        order = np.argsort(-(m @ cn_mat.T), axis=1)[:, :max_probe].astype(np.int32)
-        return pd.Series(list(order))
-
-    qb = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
-    ).select("q_id", "qv", F.posexplode(probe_order(F.col("qv"))).alias("probe_pos", "centroid_id"))
-    cand = qb.join(tagged, "centroid_id")
-    if exclude_self:
-        cand = cand.where(F.col("q_id") != F.col("c_id"))
-    nq = F.sqrt(_dbl_dot(F.col("qv"), F.col("qv")))
-    nc = F.sqrt(_dbl_dot(F.col("cv"), F.col("cv")))
-    scored = cand.select(
-        "q_id",
-        "c_id",
-        "probe_pos",
-        (_dbl_dot(F.col("qv"), F.col("cv")) / (nq * nc)).alias("cosine"),
-    )
-
-    truth = cosine_topk_exact(queries, corpus, k, id_col, vec_col)
-    if exclude_self:
-        truth = truth.where(F.col("q_id") != F.col("c_id"))
-    truth = truth.select("q_id", "c_id")
-    n_truth = truth.groupBy("q_id").agg(F.count("*").alias("n_truth"))
-
-    # explode each candidate to every probe level it is visible at, rank
-    # all levels in one window pass, measure recall per (q_id, level),
-    # then mean per level — one job for the whole curve
-    lev = scored.select(
-        "q_id",
-        "c_id",
-        "cosine",
-        F.explode(
-            F.sequence(F.col("probe_pos") + 1, F.lit(max_probe))
-        ).alias("level"),
-    )
-    w = Window.partitionBy("q_id", "level").orderBy(F.desc("cosine"), F.asc("c_id"))
-    topk = (
-        lev.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "level")
-    )
-    hits = topk.join(truth, ["q_id", "c_id"], "left_semi")
-    levels = n_truth.sparkSession.range(1, max_probe + 1).select(
-        F.col("id").cast("int").alias("level")
-    )
-    per_q = (
-        n_truth.crossJoin(F.broadcast(levels))
-        .join(
-            hits.groupBy("q_id", "level").agg(F.count("*").alias("n_hit")),
-            ["q_id", "level"],
-            "left",
-        )
-        .select(
-            "level",
-            (
-                F.coalesce("n_hit", F.lit(0)).cast("double")
-                / F.col("n_truth").cast("double")
-            ).alias("recall"),
-        )
-    )
-    rows = (
-        per_q.groupBy("level")
-        .agg(F.avg("recall").alias("mean_recall"))
-        .orderBy("level")
-        .collect()
-    )
-    curve = [
-        {"n_probe": int(r.level), "mean_recall": float(r.mean_recall or 0.0)}
-        for r in rows
-    ]
-    chosen = next(
-        (pt["n_probe"] for pt in curve if pt["mean_recall"] >= target_recall),
-        max_probe,
-    )
-    return chosen, curve
-
-
 def ann_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
     """Per-query recall of an ANN tier against exact ground truth — the
     operational health check a production retrieval pipeline runs on a
@@ -1438,7 +580,7 @@ def ann_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
     same k.  Output: (q_id, n_truth, n_hit, recall) per query; aggregate
     with one more tiny mean/min for the dashboard number and alert when
     a shifted corpus drags recall under target (re-train centroids /
-    re-derive planes — see ivf_append_to_index's drift caveat).
+    re-derive planes).
 
     100 TB shape: both inputs are |sample|·k rows by construction —
     one broadcast-size semi join + two bounded aggregates; the expensive

@@ -69,14 +69,6 @@ def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3, id_col: str
     )
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace token count + BPE-ish regex token count (words and
-    punctuation as separate tokens)."""
-    return df.withColumn("n_ws_tokens", F.size(words(F.col(text_col)))).withColumn(
-        "n_bpe_tokens", F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_TOKEN_RE), 0))
-    )
-
-
 def quality_scores(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -639,10 +631,9 @@ def bpe_segment(df: DataFrame, merges: list[tuple[str, str]], text_col: str = "t
 
 
 # ---------------------------------------------------------------------------
-# Feature-hashed TF-IDF vectors + topic-balanced sampling — the
-# cluster-then-rebalance shape (D4 / DoReMi-class corpus mixing): embed
-# cheaply without a model, cluster, then cap dominant topics so the
-# training mix is not whatever the crawl happened to over-collect.
+# Feature-hashed TF-IDF vectors: embed cheaply without a model (the
+# topic-balanced sampler clusters integer cells of the same features:
+# semantic_portable.topic_balanced_portable).
 # ---------------------------------------------------------------------------
 def hashed_tfidf_vectors(
     df: DataFrame, dim: int = 64, text_col: str = "text", id_col: str = "doc_id"
@@ -702,31 +693,6 @@ def hashed_tfidf_vectors(
             .alias("vector"),
         )
     )
-
-
-def topic_balanced_sample(
-    df: DataFrame,
-    n_topics: int = 8,
-    per_topic_cap: int = 1000,
-    dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Cap each discovered topic cluster at ``per_topic_cap`` docs:
-    hashed TF-IDF vectors → mini k-means (the IVF trainer — driver holds
-    only k×dim floats) → per-cluster deterministic hash cap (the
-    per-stratum-cap shape with centroid_id as the stratum).  Returns the
-    surviving rows of ``df``; composes with curate() like any filter."""
-    from .similarity import ivf_assign, ivf_build_centroids
-    from .splits import per_stratum_cap
-
-    vecs = hashed_tfidf_vectors(df, dim, text_col, id_col).localCheckpoint(eager=False)
-    cents = ivf_build_centroids(vecs, n_topics, 2, id_col, "vector")
-    assigned = ivf_assign(vecs, cents, id_col, "vector").select(id_col, "centroid_id")
-    kept = per_stratum_cap(
-        df.join(assigned, id_col), per_topic_cap, stratum_col="centroid_id", key_col=id_col
-    )
-    return kept.drop("centroid_id")
 
 
 def fuzzy_pairs(

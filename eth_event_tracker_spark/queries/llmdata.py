@@ -2564,9 +2564,7 @@ FROM pf JOIN verd v USING (doc_id)
     "own verdicts; gradients are exact order-independent integer sums "
     "(the property L-BFGS's float partials lack), weight updates exact "
     "integer half-away divisions, and the DuckDB twin replays training "
-    "end-to-end through 8 unrolled GD rounds; the L-BFGS tier stays as "
-    "library code (classifier.distill_quality_gate) with its own "
-    "behavior pins",
+    "end-to-end through 8 unrolled GD rounds",
 )
 def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.classifier import distill_quality_gate_portable
@@ -3134,7 +3132,7 @@ FROM curve CROSS JOIN pick
 @register(
     "ann_nprobe_tuning_curve",
     _ann_nprobe_curve_oracle_sql(),
-    doc="ivf_tune_nprobe's recall-vs-probe curve on the embeddings "
+    doc="ivf_tune_nprobe_portable's recall-vs-probe curve on the embeddings "
     "fixture — ORACLE-GRADED (round 10): portable probe order (lexsort "
     "== the twin's ROW_NUMBER) and an exact-integer-units level mean "
     "replace the two float-order seams, so the whole curve plus the "

@@ -41,9 +41,7 @@ append-only changelog table consumers fold with
 
 from __future__ import annotations
 
-import hashlib
 import json
-import os
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -56,7 +54,7 @@ from pyspark.sql.types import StructType
 from ..reorg import ReorgTooDeepError
 from ..schemas import CHANGELOG_STREAM_SCHEMA
 from .file_chain import FileChainReader
-from .web3_source import _parse_topics
+from .web3_source import _parse_topics, load_offset_sidecar, save_offset_sidecar
 
 
 class BlockListPartition(InputPartition):
@@ -77,6 +75,9 @@ class Web3ChangelogDataSource(DataSource):
       max_rows_per_batch    AIMD row cap (server-limit analogue), default 10000
       max_block_backlog     rollback bound = offset tail size (A-1), default 10
       n_slices              added-range partitions per batch, default 4
+      checkpoint_location   the query's checkpoint dir: holds the offset
+                            sidecar (default: chain_dir, shared by every
+                            query with the same filter)
     """
 
     @classmethod
@@ -101,21 +102,10 @@ class Web3ChangelogStreamReader(DataSourceStreamReader):
         self.max_rows = int(options.get("max_rows_per_batch", 10_000))
         self.backlog = int(options.get("max_block_backlog", 10))
         self.n_slices = max(1, int(options.get("n_slices", 4)))
-        self._pace = float(self.nominal)
-        fid = hashlib.sha256(
-            json.dumps(
-                ["changelog", self.addresses, list(self.topics), self.start],
-                sort_keys=True,
-            ).encode()
-        ).hexdigest()[:12]
-        self._sidecar = f"{self.chain_dir}/_source_offset_{fid}.json"
-        self._last: dict | None = None
-        try:
-            with open(self._sidecar) as f:
-                self._last = json.load(f)
-                self._pace = float(self._last.get("pace", self.nominal))
-        except (OSError, ValueError):
-            pass  # fresh start
+        self._sidecar, self._last = load_offset_sidecar(
+            options, ["changelog", self.addresses, list(self.topics), self.start]
+        )
+        self._pace = float((self._last or {}).get("pace", self.nominal))
 
     # -- offsets ------------------------------------------------------------
     def initialOffset(self) -> dict:
@@ -223,10 +213,7 @@ class Web3ChangelogStreamReader(DataSourceStreamReader):
     def commit(self, end: dict) -> None:
         # Spark's WAL is authoritative (O-3); the sidecar re-seeds _last
         # when the reader object is recreated on restart
-        tmp = f"{self._sidecar}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(end, f)
-        os.replace(tmp, self._sidecar)
+        save_offset_sidecar(self._sidecar, end)
 
 
 def register(spark) -> None:

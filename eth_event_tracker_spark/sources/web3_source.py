@@ -46,6 +46,40 @@ def _parse_topics(opt: str | None) -> tuple[str | None, ...]:
     return tuple(None if t in ("", "null", "*") else t for t in json.loads(opt))
 
 
+def load_offset_sidecar(options, key: list) -> tuple[str, dict | None]:
+    """Path and last committed offset of a stream reader's sidecar.
+
+    ``commit()`` mirrors the engine checkpoint into the sidecar so a
+    recreated reader resumes ``latestOffset`` from the last committed
+    offset instead of ``start_block`` (Spark restores the range start
+    from its own checkpoint; the sidecar keeps the reader's end
+    computation and AIMD pace consistent with it).  The sidecar belongs
+    to ONE query: it lives in that query's ``checkpoint_location`` when
+    given — keyed by the filter ``key`` alone, a fresh query would resume
+    another query's offset.  Without the option it falls back to
+    ``chain_dir``.  An absent or torn sidecar loads as ``None``."""
+    import hashlib
+
+    fid = hashlib.sha256(json.dumps(key, sort_keys=True).encode()).hexdigest()[:12]
+    base = options.get("checkpoint_location") or options["chain_dir"]
+    path = f"{base}/_source_offset_{fid}.json"
+    try:
+        with open(path) as f:
+            return path, json.load(f)
+    except (OSError, ValueError):
+        return path, None
+
+
+def save_offset_sidecar(path: str, end: dict) -> None:
+    """Atomic tmp+rename write: a torn write must not poison restarts."""
+    import os
+
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(end, f)
+    os.replace(tmp, path)
+
+
 def _row_iter(chain_dir: str, start: int, end: int, addresses, topics) -> Iterator[tuple]:
     reader = FileChainReader(chain_dir)
     for lg in reader.get_logs(start, end, addresses, topics):
@@ -134,28 +168,10 @@ class Web3LogStreamReader(DataSourceStreamReader):
         self.finality_depth = int(options.get("finality_depth", 10))
         self.n_slices = max(1, int(options.get("n_slices", 4)))
         self.max_rows = int(options.get("max_rows_per_batch", 10_000))  # the 10k server cap
-        self._pace = float(self.nominal)
-        # restart recovery: commit() mirrors the engine checkpoint into a
-        # sidecar so a recreated reader resumes latestOffset from the last
-        # committed block instead of start_block (Spark restores the range
-        # start from its own checkpoint; this keeps our end-computation and
-        # AIMD pace consistent with it).  The sidecar belongs to ONE query:
-        # it lives in that query's checkpoint_location when given — keyed
-        # by the filter alone, a fresh query would resume another query's
-        # offset and emit its whole backlog as one uncapped first batch
-        import hashlib
-
-        fid = hashlib.sha256(
-            json.dumps([self.addresses, list(self.topics), self.start], sort_keys=True).encode()
-        ).hexdigest()[:12]
-        base = options.get("checkpoint_location") or self.chain_dir
-        self._sidecar = f"{base}/_source_offset_{fid}.json"
-        try:
-            with open(self._sidecar) as f:
-                self._last = json.load(f)
-                self._pace = float(self._last.get("pace", self.nominal))
-        except (OSError, ValueError):
-            pass  # absent or torn sidecar → fall back to start_block
+        self._sidecar, self._last = load_offset_sidecar(
+            options, [self.addresses, list(self.topics), self.start]
+        )
+        self._pace = float((self._last or {}).get("pace", self.nominal))
 
     def initialOffset(self) -> dict:
         return {"block": self.start, "pace": self.nominal}
@@ -164,8 +180,7 @@ class Web3LogStreamReader(DataSourceStreamReader):
         # fresh view of the chain each trigger (head may have advanced)
         reader = FileChainReader(self.chain_dir)
         final_head = reader.head().number - self.finality_depth
-        cur = getattr(self, "_last", None)
-        start = cur["block"] if cur else self.start
+        start = self._last["block"] if self._last else self.start
         if final_head < start:
             return {"block": start, "pace": int(self._pace)}
         # AIMD admission: halve if last batch would exceed the row cap,
@@ -204,14 +219,8 @@ class Web3LogStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         # Spark's checkpoint log is the authoritative commit record (O-3);
-        # the sidecar only seeds latestOffset on reader re-creation.
-        # Atomic tmp+rename: a torn write must not poison restarts.
-        import os
-
-        tmp = f"{self._sidecar}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(end, f)
-        os.replace(tmp, self._sidecar)
+        # the sidecar only seeds latestOffset on reader re-creation
+        save_offset_sidecar(self._sidecar, end)
 
 
 def register(spark) -> None:

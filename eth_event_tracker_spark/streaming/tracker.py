@@ -29,6 +29,7 @@ from dataclasses import dataclass, field
 from ..config import KEY_CHAIN_ID, KEY_GENESIS, FilterConfig, key_filter, key_last_block
 from ..reorg import BlockDiff, HeadWindow, ReorgTooDeepError, reconcile
 from ..sources.mock_chain import Header, TooMuchDataError
+from ..sources.rpc_provider import RpcError
 from ..store import ParquetStore
 
 
@@ -205,13 +206,16 @@ class Tracker:
         """Retries PROVIDER ERRORS 5×500 ms (tracker.go:806-812: a lagging
         node may not serve a fresh head hash yet); an empty list is a valid
         answer (block with no matching logs) and returns immediately —
-        retrying on empty would cost head_retry RPCs per quiet block."""
+        retrying on empty would cost head_retry RPCs per quiet block.
+        Only RPC errors and transport errors (urllib's URLError and socket
+        timeouts are OSErrors) are retried; anything else is a bug and
+        propagates on the first call."""
         for attempt in range(self.head_retry):
             try:
                 return self.provider.get_logs_by_hash(
                     block_hash, self.config.addresses, self.config.topics
                 )
-            except Exception:
+            except (RpcError, OSError):
                 if attempt == self.head_retry - 1:
                     raise
                 if self.head_retry_delay:

@@ -78,10 +78,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
 # ---------------------------------------------------------------------------
 # logs — the event-log fact table (schema: postgresql_store.go:208-217)
 # ---------------------------------------------------------------------------
@@ -170,12 +166,6 @@ def topic1_pool(n: int = 7) -> list[str]:
     import hashlib
 
     return ["0x" + hashlib.sha256(f"t1{i}".encode()).hexdigest() for i in range(n)]
-
-
-def block_hash_of(num: int) -> str:
-    import hashlib
-
-    return "0x" + hashlib.sha256(f"blk{num}".encode()).hexdigest()
 
 
 # ---------------------------------------------------------------------------

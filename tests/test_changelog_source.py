@@ -37,6 +37,7 @@ def _run(spark, cdir, out, ckpt, **opts):
         .start()
     )
     _drain(q)
+    return q
 
 
 def test_stream_reorg_changelog_matches_batch_tracker(registered, tmp_path):
@@ -234,6 +235,32 @@ def test_two_streams_same_chain_distinct_filters(registered, tmp_path):
         assert stream_cl == batch_cl and len(stream_cl) > 0, sig
         # and the filter actually selected a strict subset
         assert {r.topics[0] for r in got.collect()} == {sig}
+
+
+def test_fresh_checkpoint_keeps_batch_caps(registered, tmp_path):
+    """The offset sidecar belongs to one query: a fresh query (new
+    checkpoint, new output) on a chain another query already drained
+    starts at block 0, keeps the per-batch block cap and emits the same
+    changelog."""
+    prov = MockProvider()
+    prov.advance(45, logs_per_block=1)
+    cdir = str(tmp_path / "chain")
+    dump_chain(prov, cdir)
+
+    def run(tag):
+        out, ckpt = str(tmp_path / f"out{tag}"), str(tmp_path / f"ckpt{tag}")
+        q = _run(registered, cdir, out, ckpt, max_blocks_per_batch=15,
+                 checkpoint_location=ckpt)
+        rows = sorted(
+            (r.action, r.tx_hash, r.block_num, r.block_hash)
+            for r in registered.read.parquet(out).collect()
+        )
+        return rows, [p["numInputRows"] for p in q.recentProgress]
+
+    first, _ = run(1)
+    second, batch_rows = run(2)
+    assert len(first) == 45 and second == first
+    assert batch_rows and all(n <= 15 for n in batch_rows)
 
 
 def test_restart_with_sidecar_ahead_of_wal(tmp_path):

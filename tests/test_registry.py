@@ -299,3 +299,17 @@ def test_window_order_is_import_order_independent():
     canonical = list(queries.all_queries())
     assert got[:50] == list(queries._WINDOW)
     assert got == canonical  # the FULL registry order, not just the window
+
+
+def test_benford_excludes_zero_cent_amounts(spark):
+    """Amounts in (0, 0.005) round to 0 cents — digit '0' has no grid
+    row, so they must not count in n_tot (round-8 advice)."""
+    from eth_event_tracker_spark.queries.relational import benford_digits
+
+    df = spark.createDataFrame(
+        [(0.001,), (0.004,), (1.0,), (2.0,), (3.0,)], "amt double"
+    )
+    rows = {r.digit: r for r in benford_digits(df, "amt").collect()}
+    # only the three >= 1-cent amounts count
+    assert sum(r.n_obs for r in rows.values()) == 3
+    assert abs(rows[1].obs_p - 1.0 / 3.0) < 1e-9

@@ -183,6 +183,39 @@ def test_head_retry_on_lagging_node(serve, tmp_path):
     assert blocks_with_by_hash >= 2
 
 
+def test_by_hash_programming_error_is_not_retried(tmp_path, monkeypatch):
+    """Only RPC and transport errors are retried: a bug in the provider
+    (here a TypeError) surfaces on the first by-hash call, with no
+    retries and no sleeps."""
+    from eth_event_tracker_spark.streaming import tracker as tracker_mod
+
+    class BrokenByHash(MockProvider):
+        calls = 0
+
+        def get_logs_by_hash(self, block_hash, addresses=(), topics=()):
+            BrokenByHash.calls += 1
+            raise TypeError("bad argument")
+
+    import time
+
+    sleeps: list[float] = []
+
+    class Clock:  # the tracker module's clock, sleeps recorded not slept
+        def __getattr__(self, name):
+            return getattr(time, name)
+
+        def sleep(self, s):
+            sleeps.append(s)
+
+    monkeypatch.setattr(tracker_mod, "time", Clock())
+    prov = BrokenByHash()
+    prov.advance(15, logs_per_block=1)
+    t = Tracker(prov, ParquetStore(tmp_path), FilterConfig(), head_retry_delay=0.5)
+    with pytest.raises(TypeError, match="bad argument"):
+        t.sync()
+    assert BrokenByHash.calls == 1 and sleeps == []
+
+
 def test_empty_blocks_do_not_retry(serve, tmp_path):
     """ADVICE r1: an empty by-hash result is a valid answer — one RPC per
     quiet block, not head_retry of them."""

@@ -101,6 +101,7 @@ def _pipelines(docs, embs, n_planes, n_clusters):
     SemDeDup's version of the same knob (n_clusters ∝ N holds expected
     cluster size — hence within-cluster pair work per row — constant)."""
     from eth_event_tracker_spark.operators import dedup as OPD
+    from eth_event_tracker_spark.operators import semantic_portable as OPP
     from eth_event_tracker_spark.operators import similarity as OPS
     from eth_event_tracker_spark.operators import text as OPT
 
@@ -132,7 +133,7 @@ def _pipelines(docs, embs, n_planes, n_clusters):
         return OPT.unigram_logprob(docs).count()
 
     def semdedup():
-        return OPS.semantic_dedup(embs, threshold=0.95, n_clusters=n_clusters).count()
+        return OPP.semantic_dedup_portable(embs, threshold=0.95, n_clusters=n_clusters).count()
 
     def pq():
         # codebook trains on a FIXED-size sample (corpus-independent
@@ -140,8 +141,8 @@ def _pipelines(docs, embs, n_planes, n_clusters):
         # the shortlist — output is always 5 queries x top-5
         q = embs.where(F.col("vec_id") < 5)
         c = embs.where(F.col("vec_id") >= 5)
-        books = OPS.pq_train(c, m=8, k=16)
-        return OPS.pq_adc_topk(q, OPS.pq_encode(c, books), books, k=5).count()
+        books = OPP.pq_train_portable(c, m=8, k=16)
+        return OPP.pq_adc_topk_portable(q, OPP.pq_encode_portable(c, books), books, k=5).count()
 
     def bpe():
         # corpus pass -> vocab-sized pair table; suffixed replicas grow

@@ -49,7 +49,7 @@ def test_registry_entry_in_pinned_range(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# ivf_tune_nprobe: the monitor closed into a loop (round-7 verdict item 5).
+# ivf_tune_nprobe_portable: the monitor closed into a loop (round-7 verdict item 5).
 # Fixture geometry: three tight 2-D direction clusters at 0/20/40 degrees;
 # boundary queries at 10/30 degrees have true neighbours in TWO adjacent
 # clusters, so probing one bucket cannot reach the target and probing two
@@ -77,13 +77,12 @@ def _tune_fixture(spark):
 
 
 def test_ivf_tune_nprobe_minimal_probe_meets_target(spark):
-    from eth_event_tracker_spark.operators.similarity import (
-        ann_recall,
-        ivf_tune_nprobe,
+    from eth_event_tracker_spark.operators.semantic_portable import (
+        ivf_tune_nprobe_portable,
     )
 
     queries, corpus = _tune_fixture(spark)
-    n_probe, curve = ivf_tune_nprobe(
+    n_probe, curve = ivf_tune_nprobe_portable(
         queries,
         corpus,
         k=6,
@@ -108,10 +107,99 @@ def test_ivf_tune_nprobe_minimal_probe_meets_target(spark):
 
 
 def test_ivf_tune_nprobe_trivial_target_picks_one(spark):
-    from eth_event_tracker_spark.operators.similarity import ivf_tune_nprobe
+    from eth_event_tracker_spark.operators.semantic_portable import (
+        ivf_tune_nprobe_portable,
+    )
 
     queries, corpus = _tune_fixture(spark)
-    n_probe, curve = ivf_tune_nprobe(
+    n_probe, curve = ivf_tune_nprobe_portable(
         queries, corpus, k=2, n_centroids=3, target_recall=0.0, exclude_self=False
     )
     assert n_probe == 1 and curve[0]["n_probe"] == 1
+
+
+def test_mmr_rerank_string_ids(spark):
+    """mmr_rerank must work for any orderable id type (round-8 advice:
+    the tuple tie-break used -id, which raises on strings)."""
+    from eth_event_tracker_spark.operators.similarity import mmr_rerank
+
+    q = spark.createDataFrame([("q0", [1.0, 0.0])], "vec_id string, embedding array<float>")
+    c = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [1.0, 0.0]), ("c", [0.6, 0.8])],
+        "vec_id string, embedding array<float>",
+    )
+    rows = mmr_rerank(q, c, k=3, fetch_k=10, lam=0.3).collect()
+    assert [r.rank for r in rows] == [1, 2, 3]
+    # candidates a and b are identical → the score tie breaks id-asc
+    assert rows[0].c_id == "a"
+    assert rows[0].q_id == "q0" and isinstance(rows[0].c_id, str)
+
+
+def test_mmr_matches_python_model_on_planted_ties(spark):
+    """Property pin for the oracle-promoted MMR: on a corpus with
+    duplicate vectors (score ties) and a tiny candidate pool, the
+    operator must equal a direct python replay of the greedy contract
+    (same ordered-fold arithmetic, ties (score desc, id asc))."""
+    import math
+
+    from eth_event_tracker_spark.operators.similarity import mmr_rerank
+
+    lam, k = 0.3, 4
+    q_vec = [1.0, 0.0, 0.0]
+    corpus = {
+        10: [1.0, 0.0, 0.0],   # identical to query
+        11: [1.0, 0.0, 0.0],   # duplicate of 10 -> tie, id-asc must win
+        12: [0.0, 1.0, 0.0],   # orthogonal (diverse)
+        13: [0.6, 0.8, 0.0],
+        14: [0.6, 0.8, 0.0],   # duplicate of 13
+    }
+    q = spark.createDataFrame([(0, q_vec)], "vec_id long, embedding array<float>")
+    c = spark.createDataFrame(
+        [(i, v) for i, v in corpus.items()], "vec_id long, embedding array<float>"
+    )
+    got = [
+        (r.rank, r.c_id, r.relevance, r.mmr_score)
+        for r in mmr_rerank(q, c, k=k, fetch_k=10, lam=lam).collect()
+    ]
+
+    import numpy as np
+
+    # the column is array<float>: round-trip through float32 like storage
+    corpus = {i: [float(np.float32(x)) for x in v] for i, v in corpus.items()}
+    q_vec = [float(np.float32(x)) for x in q_vec]
+
+    def fold(a, b):
+        s = 0.0
+        for x, y in zip(a, b):
+            s = s + float(x) * float(y)
+        return s
+
+    # python replay of the contract
+    def cos(a, b):
+        return fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
+
+    rel = {i: round(cos(q_vec, v), 9) for i, v in corpus.items()}
+    order = sorted(corpus, key=lambda i: (-rel[i], i))
+    norms = {i: math.sqrt(fold(v, v)) or 1.0 for i, v in corpus.items()}
+    sim = {
+        (i, j): fold(corpus[i], corpus[j]) / (norms[i] * norms[j])
+        for i in corpus
+        for j in corpus
+    }
+    chosen, expect = [], []
+    remaining = list(order)
+    while remaining and len(chosen) < k:
+        scores = {
+            i: lam * rel[i]
+            - (1.0 - lam) * (max(sim[(i, c)] for c in chosen) if chosen else 0.0)
+            for i in remaining
+        }
+        pick = min(remaining, key=lambda i: (-scores[i], i))
+        expect.append(
+            (len(chosen) + 1, pick, float(round(rel[pick], 9)), float(round(scores[pick], 9)))
+        )
+        chosen.append(pick)
+        remaining.remove(pick)
+    assert got == expect
+    # at diversity-heavy lambda the duplicate of the first pick defers
+    assert got[0][1] == 10 and got[1][1] == 12

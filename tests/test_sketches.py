@@ -519,41 +519,45 @@ def test_new_operators_handle_empty_inputs(spark):
 
 
 def test_degenerate_corpora_for_trainers(spark):
-    """pq_train / ivf_build_centroids on corpora smaller than k (round-5
-    advice: pq_train crashed on a numpy shape mismatch) and on empty
-    corpora (clear error, not np.stack internals)."""
+    """PQ and IVF training on corpora smaller than k (round-5 advice:
+    PQ training crashed on a numpy shape mismatch) and on empty corpora
+    (clear error, not np.stack internals)."""
     import numpy as np
     import pytest
 
-    from eth_event_tracker_spark.operators import similarity as OPS
+    from eth_event_tracker_spark.operators import semantic_portable as OPP
 
-    # 3 rows, k=16 centroids: seeds pad by cycling the sample
+    # 3 rows, k=16 centroids: PQ seeds pad by cycling the sample
     rows = [(i, [float(i), float(i + 1), 0.5, -1.0] * 8) for i in range(3)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    books = OPS.pq_train(df, m=8, k=16, n_train=64)
-    assert books.shape == (8, 16, 4)
-    assert np.isfinite(books).all()
+    books = OPP.pq_train_portable(df, m=8, k=16, n_train=64)
+    assert np.array(books).shape == (8, 16, 4)
     # the trained codebooks still encode: 3 rows → 3 code vectors in range
-    codes = OPS.pq_encode(df, books).select("pq_codes").collect()
+    codes = OPP.pq_encode_portable(df, books).select("pq_codes").collect()
     assert len(codes) == 3 and all(0 <= c < 16 for r in codes for c in r[0])
 
-    cents = OPS.ivf_build_centroids(df, n_centroids=16, n_iters=1)
-    assert cents.shape == (16, 32) and np.isfinite(cents).all()
+    # IVF stops at one centroid per sample row and still probes
+    qdf = df.select("vec_id", OPP.quantized(F.col("embedding")).alias("vq"))
+    cents = OPP.build_portable_centroids(qdf, 16, n_iters=1)
+    assert len(cents) == 3 and all(len(c) == 32 for c in cents)
+    got = OPP.ivf_topk_portable(df, df, k=2, n_centroids=16, n_probe=16).collect()
+    assert {r.q_id for r in got} == {0, 1, 2}
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="empty"):
-        OPS.pq_train(empty)
+        OPP.pq_train_portable(empty)
     with pytest.raises(ValueError, match="empty"):
-        OPS.ivf_build_centroids(empty)
+        OPP.ivf_topk_portable(empty, empty)
 
 
 def test_pq_tiers_exclude_self_consistently(spark):
     """Self-exclusion is one convention across ALL ANN tiers (round-5
-    advice: pq_adc_topk returned corpus-drawn queries at rank 1 while
-    ivfpq filtered unconditionally).  Default True drops q_id == c_id;
+    advice: the PQ tier returned corpus-drawn queries at rank 1 while
+    others filtered unconditionally).  Default True drops q_id == c_id;
     exclude_self=False admits coinciding ids from distinct tables."""
     import numpy as np
 
+    from eth_event_tracker_spark.operators import semantic_portable as OPP
     from eth_event_tracker_spark.operators import similarity as OPS
 
     rng = np.random.default_rng(7)
@@ -561,34 +565,29 @@ def test_pq_tiers_exclude_self_consistently(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = df.where(F.col("vec_id") < 4)  # queries DRAWN FROM the corpus
 
-    books = OPS.pq_train(df, m=8, k=16, n_train=40)
-    codes = OPS.pq_encode(df, books)
+    books = OPP.pq_train_portable(df, m=8, k=16, n_train=40)
+    codes = OPP.pq_encode_portable(df, books)
 
-    got = OPS.pq_adc_topk(q, codes, books, k=3).collect()
+    got = OPP.pq_adc_topk_portable(q, codes, books, k=3).collect()
     assert all(r.q_id != r.vec_id for r in got), "self-match must be excluded by default"
     assert {r.q_id for r in got} == {0, 1, 2, 3}
 
-    kept = OPS.pq_adc_topk(q, codes, books, k=3, exclude_self=False).collect()
+    kept = OPP.pq_adc_topk_portable(q, codes, books, k=3, exclude_self=False).collect()
     selfs = [r for r in kept if r.q_id == r.vec_id]
     assert len(selfs) == 4 and all(r.rank == 1 and r.dist == 0.0 for r in selfs), (
         "exclude_self=False must admit the exact self-match at rank 1"
     )
-
-    got2 = OPS.ivfpq_topk(q, df, k=3, n_centroids=4, n_probe=4, m=8, pq_k=16).collect()
-    assert all(r.q_id != r.vec_id for r in got2)
-    kept2 = OPS.ivfpq_topk(
-        q, df, k=3, n_centroids=4, n_probe=4, m=8, pq_k=16, exclude_self=False
-    ).collect()
-    assert any(r.q_id == r.vec_id and r.rank == 1 for r in kept2)
 
     got3 = OPS.ann_lsh_topk(q, df, k=3, n_planes=4).collect()
     assert all(r.q_id != r.c_id for r in got3)
     kept3 = OPS.ann_lsh_topk(q, df, k=3, n_planes=4, exclude_self=False).collect()
     assert any(r.q_id == r.c_id and r.rank == 1 for r in kept3)
 
-    got4 = OPS.ivf_topk(q, df, k=3, n_centroids=4, n_probe=4).collect()
+    got4 = OPP.ivf_topk_portable(q, df, k=3, n_centroids=4, n_probe=4).collect()
     assert all(r.q_id != r.c_id for r in got4)
-    kept4 = OPS.ivf_topk(q, df, k=3, n_centroids=4, n_probe=4, exclude_self=False).collect()
+    kept4 = OPP.ivf_topk_portable(
+        q, df, k=3, n_centroids=4, n_probe=4, exclude_self=False
+    ).collect()
     assert any(r.q_id == r.c_id and r.rank == 1 for r in kept4)
 
 
