@@ -80,24 +80,3 @@ def point_lookup_seq(df: DataFrame, indx: int, base: int = 0) -> DataFrame:
         .where(F.col("indx") == F.lit(indx))
         .drop("_off")
     )
-
-
-def last_index(df: DataFrame) -> DataFrame:
-    """S-8 — LastIndex() = 1 + max(indx); the reference implements it as a
-    reverse cursor / ORDER BY indx DESC LIMIT 1 (bolt_store.go:132-144,
-    postgresql_store.go:98-107) — i.e. top-1 sort ≡ max().  Spark's
-    max() aggregate is partial+final (map-side combine), no full sort."""
-    return df.agg((F.coalesce(F.max("indx"), F.lit(-1)) + 1).alias("last_index"))
-
-
-def tail_truncate_predicate(n: int, hash_at_n: str | None):
-    """A-2 — the set removed by a rollback to (n, hash): all logs with
-    block_num > n, or at height n with a different block hash
-    (removeLogs, tracker.go:717-754).  The Go reverse-walk is an index-scan
-    trick; relationally it is just this predicate."""
-    pred = F.col("block_num") > F.lit(n)
-    if hash_at_n is not None:
-        pred = pred | ((F.col("block_num") == F.lit(n)) & (F.col("block_hash") != F.lit(hash_at_n)))
-    return pred
-
-

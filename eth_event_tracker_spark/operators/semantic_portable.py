@@ -298,9 +298,9 @@ def hashed_tfidf_units(
     df: DataFrame, dim: int = 32, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, vq array<long>): signed feature hashing of smooth TF-IDF
-    into exact INTEGER cells — the engine-portable twin of
-    text.hashed_tfidf_vectors (which hashes with xxhash64 and sums
-    float weights, neither replayable by the SQL oracle).
+    into exact INTEGER cells — the engine's one TF-IDF embedding.  The
+    hash and the weights are integer so the SQL oracle can replay them
+    exactly (xxhash64 and summed float weights could not be).
 
     * index = hash60(term, "tfidx") mod dim; sign from one more
       hash60 bit — both pure-SQL in either engine;

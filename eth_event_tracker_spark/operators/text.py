@@ -630,71 +630,6 @@ def bpe_segment(df: DataFrame, merges: list[tuple[str, str]], text_col: str = "t
     return out
 
 
-# ---------------------------------------------------------------------------
-# Feature-hashed TF-IDF vectors: embed cheaply without a model (the
-# topic-balanced sampler clusters integer cells of the same features:
-# semantic_portable.topic_balanced_portable).
-# ---------------------------------------------------------------------------
-def hashed_tfidf_vectors(
-    df: DataFrame, dim: int = 64, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, vector array<double>): signed feature hashing of smooth
-    TF-IDF weights into a fixed ``dim`` — no vocabulary table, no model.
-    Index = xxhash64(term) mod dim; sign = one more hash bit (the
-    classic bias-cancelling trick).  All JVM: the token stream
-    aggregates to (doc, term, tf) with map-side combine, idf is a
-    term-keyed aggregate over that table, and the vector assembles via
-    map_from_entries + one sequence transform.  L2-normalized so the
-    vectors drop into every cosine operator (k-means, SemDeDup, PQ)."""
-    toks = df.select(
-        F.col(id_col), F.explode(words(F.col(text_col))).alias("term")
-    ).where(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf")).localCheckpoint(
-        eager=False
-    )
-    n_docs = df.select(id_col).distinct().agg(F.count("*").alias("_n"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    weighted = (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            F.col(id_col),
-            F.pmod(F.xxhash64("term"), F.lit(dim)).cast("int").alias("idx"),
-            (
-                F.when(F.pmod(F.xxhash64("term", F.lit(1)), F.lit(2)) == 0, F.lit(1.0)).otherwise(-1.0)
-                * F.col("tf")
-                * (F.log((F.col("_n") + 1) / (F.col("df") + 1)) + 1.0)
-            ).alias("w"),
-        )
-    )
-    cells = weighted.groupBy(id_col, "idx").agg(F.sum("w").alias("v"))
-    vec = (
-        cells.groupBy(id_col)
-        .agg(F.map_from_entries(F.collect_list(F.struct("idx", "v"))).alias("m"))
-        .select(
-            id_col,
-            F.expr(f"transform(sequence(0, {dim - 1}), i -> coalesce(m[i], 0D))").alias("raw"),
-        )
-    )
-    norm = F.sqrt(
-        F.aggregate(F.transform("raw", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    # materialize the norm as a COLUMN before it appears inside the
-    # normalizing lambda: Spark re-evaluates a captured non-lambda
-    # subtree per array element (no CSE inside transform — the round-9
-    # O(n²) HOF finding, docs/SCALE.md §88), so the inline form folded
-    # the 64-element self-dot 64 times per row
-    return (
-        vec.withColumn("nrm", norm)
-        .select(
-            id_col,
-            F.when(F.col("nrm") == 0, F.col("raw"))
-            .otherwise(F.transform("raw", lambda x: x / F.col("nrm")))
-            .alias("vector"),
-        )
-    )
-
-
 def fuzzy_pairs(
     df: DataFrame, col: str, max_dist: int = 2, q: int = 2
 ) -> DataFrame:

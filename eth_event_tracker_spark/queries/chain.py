@@ -119,15 +119,6 @@ def logs_indx_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# S-8 — LastIndex as max aggregate (bolt_store.go:132-144, pg :98-107);
-# folded into the `logs_point_lookup` driver slot (single-row crossJoin)
-# ---------------------------------------------------------------------------
-def logs_last_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    logs = OPI.assign_indx_scalable(derived_logs(spark, sf_dir))
-    return OPI.last_index(logs)
-
-
-# ---------------------------------------------------------------------------
 # S-7 — point lookup by indx (store/store.go:34-35) + S-8 LastIndex in one
 # driver slot: both single-row results, crossJoined (Catalyst broadcasts)
 # ---------------------------------------------------------------------------

@@ -1,7 +1,6 @@
 from .inmem_store import InMemEntry, InMemStore
 from .jdbc_store import JdbcEntry, JdbcStore
 from .parquet_store import ParquetEntry, ParquetStore
-from .sql_store import SqlEntry, SqlStore
 
 __all__ = [
     "InMemEntry",
@@ -10,6 +9,4 @@ __all__ = [
     "JdbcStore",
     "ParquetEntry",
     "ParquetStore",
-    "SqlEntry",
-    "SqlStore",
 ]

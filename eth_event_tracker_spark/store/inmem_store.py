@@ -3,7 +3,7 @@ inmem backend (store/inmem/inmem_store.go): same interface as
 ParquetStore/ParquetEntry, list-backed, no durability.  Exists to prove
 the store interface is pluggable (the reference runs one conformance
 suite against inmem/bolt/pg — tests/test_store_conformance.py does the
-same against parquet/inmem) and for fast unit composition."""
+same against parquet/inmem/jdbc) and for fast unit composition."""
 
 from __future__ import annotations
 
@@ -78,6 +78,18 @@ class InMemEntry:
                 break
         victims.reverse()
         return victims
+
+    def truncate_above_block(self, block_num: int) -> int:
+        """Drop the contiguous tail of rows with block_num > ``block_num``
+        and return how many were removed (ParquetEntry semantics)."""
+        keep = len(self._rows)
+        while keep and self._rows[keep - 1]["block_num"] > block_num:
+            keep -= 1
+        if keep == len(self._rows):
+            return 0
+        removed = len(self._rows) - keep
+        self.remove_logs(self._rows[keep]["indx"])
+        return removed
 
     def compact(self, bucket: int | None = None) -> int:
         return 0  # nothing to compact in memory

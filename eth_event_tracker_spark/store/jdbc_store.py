@@ -1,33 +1,98 @@
-"""JDBC Store/Entry backend — the *distributed* SQL path that completes
-parity with the reference's server-side PostgreSQL store
-(/root/reference/store/postgresql/postgresql_store.go:110-150: executors
-write straight to the database, nothing funnels through the driver).
+"""JDBC Store/Entry backend — the engine's SQL store and the twin of the
+reference's server-side PostgreSQL store (store/postgresql/
+postgresql_store.go:79-239: executors write straight to the database,
+nothing funnels through the driver).
 
-Where ``sql_store.SqlStore`` is the embedded twin (SQLite file, bulk path
-honestly documented as toLocalIterator-bounded), this backend takes any
-JDBC URL and runs the bulk append as ``df.write.jdbc`` — every partition
-task opens its own connection and inserts its rows — and exposes the
-entry as a ``spark.read.jdbc`` scan.  Driver-side point operations (KV
-get/set, point lookup, tail scan, truncate) go through
-``java.sql.DriverManager`` on the session JVM: O(1)/O(reorg-depth) row
-traffic, the same envelopes as the reference's driver-side pg calls.
+Parity with the reference's SQL mapping:
+  - a single ``kv(key, val)`` table with upsert Set
+    (postgresql_store.go:71-76 ``ON CONFLICT (key) DO UPDATE``);
+  - one ``logs_<filterhash>`` table per entry, created lazily on
+    GetEntry (postgresql_store.go:79-88, DDL at :226-239), plus the
+    ``log_index`` column that LOG_SCHEMA carries and the reference's DDL
+    drops;
+  - ``LastIndex`` = max(indx)+1 (:98-108), ``RemoveLogs`` =
+    ``DELETE WHERE indx >= ?`` (:153-158), per-batch ``StoreLogs``
+    (:111-150).
+
+The backend takes any JDBC URL and runs the bulk append as
+``df.write.jdbc`` — every partition task opens its own connection and
+inserts its rows — and exposes the entry as a ``spark.read.jdbc`` scan.
+Driver-side point operations (KV get/set, point lookup, tail scan,
+truncate) go through ``java.sql.DriverManager`` on the session JVM:
+O(1)/O(reorg-depth) row traffic, the same envelopes as the reference's
+driver-side pg calls.
 
 The sandbox ships no database server; the conformance suite runs against
 **Apache Derby embedded** (already on Spark's classpath for the Hive
 metastore) via ``jdbc:derby:<dir>;create=true`` — a single-JVM database,
 which ``local[*]`` is.  Against a real server the same code takes
-``jdbc:postgresql://host/db`` plus the driver jar; nothing here is
-Derby-specific except the idempotent-DDL error code.
+``jdbc:postgresql://host/db`` plus the driver jar; any other URL runs the
+``generic`` dialect.
 
-Row codec: identical stringly encoding to the reference and sql_store
-(topics comma-joined with '' ⇄ [] and NULL ⇄ None; data 0x-hex), applied
-JVM-side (concat_ws/hex expressions) on the bulk path so the distributed
-writes stay in whole-stage codegen.
+Row codec (this module is its one home): the reference's stringly
+encoding (postgresql_store.go:124-141) — topics comma-joined with
+'' ⇄ [] and NULL ⇄ None, data as 0x-hex text — decoded back to native
+list/bytes on read so rows round-trip identically to the parquet/inmem
+backends.  Driver-side writes use ``_encode``; the bulk path applies the
+same rule JVM-side (array_join/hex expressions) so the distributed writes
+stay in whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from .sql_store import _COLUMNS, _decode, _encode, _table_name
+import re
+
+_COLUMNS = (
+    "indx",
+    "log_index",
+    "tx_index",
+    "tx_hash",
+    "block_num",
+    "block_hash",
+    "address",
+    "topics",
+    "data",
+)
+
+_NAME_OK = re.compile(r"^[0-9a-zA-Z_]+$")
+
+
+def _table_name(filter_hash: str) -> str:
+    # the reference interpolates "logs_" + hash into DDL (:80); hashes are
+    # hex so a strict identifier check is both safe and parity-preserving
+    if not _NAME_OK.match(filter_hash):
+        raise ValueError(f"filter hash {filter_hash!r} is not a SQL-safe identifier")
+    return f"logs_{filter_hash}"
+
+
+def _encode(lg: dict, indx: int) -> tuple:
+    topics = lg.get("topics")
+    data = lg.get("data")
+    return (
+        indx,
+        lg.get("log_index"),
+        lg.get("tx_index"),
+        lg.get("tx_hash"),
+        lg.get("block_num"),
+        lg.get("block_hash"),
+        lg.get("address"),
+        # empty list encodes as "" (decoded back to []); NULL is reserved
+        # for a true None — anonymous events legally carry topics=[] and
+        # must round-trip identically to the parquet/inmem backends (the
+        # reference's own pg codec is ambiguous here, postgresql_store.go:179-190;
+        # our conformance bar is backend agreement, not bug parity)
+        None if topics is None else ",".join(topics),
+        "0x" + bytes(data).hex() if data is not None else None,
+    )
+
+
+def _decode(row: tuple, columns: tuple = _COLUMNS) -> dict:
+    d = dict(zip(columns, row))
+    raw_topics = d["topics"]
+    d["topics"] = None if raw_topics is None else ([] if raw_topics == "" else raw_topics.split(","))
+    d["data"] = bytes.fromhex(d["data"][2:]) if d["data"] else None
+    return d
+
 
 _BIGINT_COLS = {"indx", "log_index", "tx_index", "block_num"}
 
@@ -331,15 +396,43 @@ class JdbcEntry:
         finally:
             st.close()
 
+    def truncate_above_block(self, block_num: int) -> int:
+        """Drop the tail of rows with block_num > ``block_num`` and return
+        how many were removed (ParquetEntry.truncate_above_block
+        semantics: appends are block-ordered, so that suffix is
+        contiguous and starts at the smallest such indx)."""
+        ps = self._conn.prepareStatement(
+            f'SELECT MIN("indx") FROM {self.table} WHERE "block_num" > ?'
+        )
+        try:
+            ps.setLong(1, int(block_num))
+            rs = ps.executeQuery()
+            rs.next()
+            boundary = rs.getLong(1)
+            if rs.wasNull():
+                return 0
+        finally:
+            ps.close()
+        removed = self.last_index() - boundary
+        self.remove_logs(boundary)
+        return removed
+
     def compact(self, bucket: int | None = None) -> int:
         return 0  # nothing to compact: SQL storage is not file-bucketed
 
     def compact_changelog(self, spark, finalized_below: int) -> dict:
-        """Changelog retention as ONE server-side DELETE (the JDBC twin of
-        ParquetEntry.compact_changelog; see SqlEntry.compact_changelog for
-        the semantics and the uncorrelated-IN rationale).  The database
-        does the O(finalized) work; no row crosses the driver.  The
-        global max-indx row is exempt so last_index never regresses."""
+        """Changelog retention as ONE server-side DELETE — the SQL twin of
+        ParquetEntry.compact_changelog (prune_changelog semantics): below
+        the finality horizon, drop every row superseded by a later row of
+        the same natural key, and every fully-retracted key's final
+        'remove'.  The entry's global max-indx row is exempt so
+        ``last_index`` (MAX+1) never regresses and appends stay monotonic.
+        The doomed set is an uncorrelated IN-subquery, materialized before
+        any row is removed: a correlated DELETE could evaluate a row's
+        EXISTS after its superseding row was already deleted and wrongly
+        resurrect a fully-retracted key.  The database does the
+        O(finalized) work; no row crosses the driver.  ``spark`` unused
+        (interface parity)."""
 
         def _count() -> int:
             st = self._conn.createStatement()
@@ -446,8 +539,8 @@ class JdbcEntry:
 
     def df(self, spark):
         """The entry as a DataFrame — ``spark.read.jdbc``: a distributed
-        scan with predicate pushdown on ``indx`` available to Catalyst
-        (vs sql_store.df()'s documented driver materialization)."""
+        scan with predicate pushdown on ``indx`` available to Catalyst;
+        no row passes through the driver."""
         from pyspark.sql import functions as F
 
         raw = spark.read.jdbc(self._store.url, self.table, properties=self._jdbc_props())

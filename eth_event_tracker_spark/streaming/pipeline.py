@@ -56,7 +56,7 @@ def start_finalized_ingest(
     cap halves the block range down to a single block, never below).
 
     ``store`` is any Store backend; its entries need only ``scan_tail``
-    and ``store_logs``, which all four backends implement.
+    and ``store_logs``, which all three backends implement.
 
     ``metrics_log``: optional list; each micro-batch appends one dict
     ``{batch_id, n_admitted, min_block, max_block}`` computed from the
@@ -405,7 +405,7 @@ def maintain_changelog(
     Call it wherever the deployment already runs maintenance (after a
     poll cycle, from a cron'd job): each run rewrites only the few
     store buckets newly crossing the horizon.  ``entry`` is any backend's
-    changelog entry (all four implement ``compact_changelog``).  Returns
+    changelog entry (all three implement ``compact_changelog``).  Returns
     the backend's compaction stats; no-op dict when there is no
     checkpoint yet.
 

@@ -1237,33 +1237,6 @@ def test_bpe_merge_overlap_left_first(spark):
     assert seg == {"aaa": ["aa", "a"], "aaaa": ["aa", "aa"], "baaab": ["b", "aa", "a", "b"]}
 
 
-def test_hashed_tfidf_vectors_properties(spark):
-    """Unit-norm, fixed dim, deterministic, and vocab-disjoint topic
-    groups land near-orthogonal while same-vocab docs stay close."""
-    import numpy as np
-
-    from eth_event_tracker_spark.operators.text import hashed_tfidf_vectors
-
-    topics = {
-        "chem": "acid base molecule reaction catalyst bond electron orbital",
-        "law": "court judge statute plaintiff verdict appeal contract tort",
-    }
-    rows = []
-    for i in range(20):
-        t = "chem" if i < 10 else "law"
-        w = topics[t].split()
-        rows.append((i, " ".join(w[i % 4 :] + w[: i % 4] + w[:3])))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: np.array(r.vector) for r in hashed_tfidf_vectors(df, dim=32).collect()}
-    assert all(abs(np.linalg.norm(v) - 1.0) < 1e-9 for v in out.values())
-    assert all(len(v) == 32 for v in out.values())
-    out2 = {r.doc_id: np.array(r.vector) for r in hashed_tfidf_vectors(df, dim=32).collect()}
-    assert all((out[k] == out2[k]).all() for k in out)
-    intra = np.mean([out[0] @ out[j] for j in range(1, 10)])
-    cross = np.mean([out[0] @ out[j] for j in range(10, 20)])
-    assert intra > 0.8 and cross < 0.3, (intra, cross)
-
-
 def test_fuzzy_pairs_matches_brute_force(spark):
     from eth_event_tracker_spark.operators.text import fuzzy_pairs
 

@@ -116,15 +116,13 @@ def test_replay_guard_reads_only_tail_bucket(tmp_path, monkeypatch):
     assert {r["block_num"] for r in out} == {b.block_number for b in prov.canonical[-5:]}
 
 
-@pytest.mark.parametrize("backend", ["parquet", "jdbc", "sql"])
+@pytest.mark.parametrize("backend", ["parquet", "jdbc"])
 def test_redelivered_batch_admits_nothing(spark, tmp_path, backend):
     """Drain a chain, drop the last commit record from the checkpoint and
     restart: Spark re-runs that batch with the same offsets, and the
     replay guard must admit none of its rows.  On parquet the batch
     straddles a bucket boundary, so the tail walk crosses buckets."""
     from types import SimpleNamespace
-
-    from eth_event_tracker_spark.store import SqlStore
 
     from .test_store_conformance import _derby_store
 
@@ -135,10 +133,8 @@ def test_redelivered_batch_admits_nothing(spark, tmp_path, backend):
             entry=lambda fh: parquet_store.entry(fh, bucket_size=bucket_size),
             close=lambda: None,
         )
-    elif backend == "jdbc":
-        store = _derby_store(spark, tmp_path)
     else:
-        store = SqlStore(tmp_path / "store.db")
+        store = _derby_store(spark, tmp_path)
     prov = MockProvider()
     prov.advance(40, logs_per_block=2)
     cdir = str(tmp_path / "chain")

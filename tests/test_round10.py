@@ -201,24 +201,6 @@ def test_views_as_of_snapshot_equals_full_replay(spark, tmp_path):
         cdf.unpersist()
 
 
-def test_tfidf_norm_materialized_once_in_plan(spark, sf_dir):
-    """hashed_tfidf_vectors' L2 norm (a 64-element fold) must appear in
-    the optimized plan exactly ONCE, as its own projected column — never
-    inside the normalizing transform's lambda, where Spark would
-    re-evaluate it per array element (the round-9 O(n²) HOF finding;
-    this instance cost the classifier ~0.9 s/call at sf0.1)."""
-    from eth_event_tracker_spark.operators.text import hashed_tfidf_vectors
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = (
-        hashed_tfidf_vectors(docs, dim=64)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert plan.count("aggregate(") == 1
-
-
 def test_lsh_bucket_running_fold_matches_cumsum_reference():
     """The running-accumulator per-plane dot (round-10 memory fix) must be
     bit-identical to the cumulative-sum last column it replaced — both

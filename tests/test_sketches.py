@@ -476,7 +476,6 @@ def test_new_operators_handle_empty_inputs(spark):
         bpe_pair_counts,
         bpe_train,
         fuzzy_pairs,
-        hashed_tfidf_vectors,
     )
     from eth_event_tracker_spark.streaming.pipeline import (
         incremental_agg,
@@ -488,7 +487,6 @@ def test_new_operators_handle_empty_inputs(spark):
     assert fuzzy_pairs(empty_docs, "text").count() == 0
     assert bpe_pair_counts(empty_docs).count() == 0
     assert bpe_train(empty_docs, n_merges=3) == []
-    assert hashed_tfidf_vectors(empty_docs, dim=8).count() == 0
 
     empty_keys = spark.createDataFrame([], "key string")
     assert cms_build(empty_keys, "key", d=2, w=8).count() == 0

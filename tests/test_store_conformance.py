@@ -8,8 +8,14 @@ from __future__ import annotations
 import pytest
 
 from eth_event_tracker_spark.sources.mock_chain import mock
-from eth_event_tracker_spark.store import JdbcStore, ParquetStore, SqlStore
-from eth_event_tracker_spark.store.inmem_store import InMemStore
+from eth_event_tracker_spark.store import (
+    InMemEntry,
+    InMemStore,
+    JdbcEntry,
+    JdbcStore,
+    ParquetEntry,
+    ParquetStore,
+)
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -22,15 +28,15 @@ def _derby_store(spark, tmp_path) -> JdbcStore:
     return JdbcStore(spark, f"jdbc:derby:{tmp_path}/derby;create=true", driver=DERBY_DRIVER)
 
 
-@pytest.fixture(params=["parquet", "inmem", "sqlite", "jdbc"])
+@pytest.fixture(params=["parquet", "inmem", "jdbc"])
 def make_store(request, tmp_path, spark):
     """Backend-agnostic store factory — the reference runs one suite
     against every backend (store/testing.go, against inmem/bolt/pg); so
-    do we, against parquet/inmem/sqlite/jdbc-derby."""
+    do we, against parquet/inmem/jdbc-derby.  Parquet returns a fresh
+    handle on the same directory per call (a reopen); inmem and jdbc
+    return the same store."""
     if request.param == "parquet":
         return lambda: ParquetStore(tmp_path)
-    if request.param == "sqlite":
-        return lambda s=SqlStore(tmp_path / "store.db"): s  # same db per test
     if request.param == "jdbc":
         s = _derby_store(spark, tmp_path)
         request.addfinalizer(s.close)
@@ -43,6 +49,31 @@ def _logs(tag, n, num):
     for i in range(n):
         b.log(f"{tag:x}{i:02x}")
     return b.logs()
+
+
+# Every entry method the library calls on a backend-neutral entry
+# (Tracker, the finalized stream, changelog maintenance, SQL views).
+ENTRY_CONTRACT = (
+    "last_index",
+    "store_logs",
+    "remove_logs",
+    "get_log",
+    "all_logs",
+    "scan_tail",
+    "truncate_above_block",
+    "df",
+    "compact_changelog",
+    "time_travel_horizon",
+)
+
+
+@pytest.mark.parametrize("entry_cls", [InMemEntry, ParquetEntry, JdbcEntry])
+def test_entry_defines_full_contract(entry_cls):
+    """Static guard, no Spark: each backend's entry class defines every
+    method the library calls, so a backend cannot miss one that only a
+    rarely run path (such as restart recovery) reaches."""
+    missing = [m for m in ENTRY_CONTRACT if not callable(getattr(entry_cls, m, None))]
+    assert missing == []
 
 
 def test_kv_set_get_update(make_store):
@@ -180,16 +211,19 @@ def test_entry_compaction(tmp_path):
     assert e.last_index() == 38
 
 
-def test_tracker_runs_on_inmem_backend(tmp_path):
-    """The tracker is store-agnostic: full sync + live reorg on the
-    in-memory backend (WithStore(inmem) in the reference's tests)."""
+def test_tracker_runs_on_backend(make_store):
+    """The tracker is store-agnostic (WithStore(...) in the reference's
+    tests): full sync + live reorg, then a restart after a crash between
+    ``store_logs`` and the checkpoint write — the fresh tracker drops the
+    uncommitted rows above the checkpoint and re-fetches them once."""
     from eth_event_tracker_spark.config import FilterConfig
     from eth_event_tracker_spark.sources.mock_chain import MockProvider
     from eth_event_tracker_spark.streaming import Tracker
 
     prov = MockProvider()
     prov.advance(25, logs_per_block=1)
-    t = Tracker(prov, InMemStore(), FilterConfig())
+    cfg = FilterConfig()
+    t = Tracker(prov, make_store(), cfg)
     t.sync()
     assert t.entry.last_index() == 25
     prov.fork(3, logs_per_block=2)
@@ -198,6 +232,16 @@ def test_tracker_runs_on_inmem_backend(tmp_path):
     assert sum(len(e.added) for e in events) == 6
     chain = [lg["tx_hash"] for b in prov.canonical for lg in b.logs()]
     assert [r["tx_hash"] for r in t.entry.all_logs()] == chain
+
+    # crash: one batch stored above the checkpoint, checkpoint never written
+    prov.advance(4, logs_per_block=1)
+    t.entry.store_logs([lg for b in prov.canonical[-4:] for lg in b.logs()])
+    restarted = Tracker(prov, make_store(), cfg)
+    restarted.sync()
+    rows = restarted.entry.all_logs()
+    chain = [lg["tx_hash"] for b in prov.canonical for lg in b.logs()]
+    assert [r["tx_hash"] for r in rows] == chain
+    assert [r["indx"] for r in rows] == list(range(len(chain)))
 
 
 def test_entry_truncate_crash_recovery(tmp_path):
@@ -251,98 +295,69 @@ def test_scan_tail_stops_at_boundary(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# SQL backend specifics (postgresql_store.go parity)
+# SQL backend specifics (postgresql_store.go parity), on embedded Derby;
+# the JDBC backend is the distributed SQL path
+# (postgresql_store.go:110-150 server-side semantics)
 # ---------------------------------------------------------------------------
-def test_sql_kv_persistence(tmp_path):
+def test_sql_kv_persistence(tmp_path, spark):
     """Durability across store reopen — the property the reference's pg
-    users rely on."""
-    db = tmp_path / "store.db"
-    s = SqlStore(db)
+    users rely on.  ``close`` deboots the embedded database."""
+    s = _derby_store(spark, tmp_path)
     s.set("k", "v")
     s.close()
-    assert SqlStore(db).get("k") == "v"
+    s = _derby_store(spark, tmp_path)
+    try:
+        assert s.get("k") == "v"
+    finally:
+        s.close()
 
 
-def test_sql_entry_reopen_recovers_index(tmp_path):
-    db = tmp_path / "store.db"
-    s = SqlStore(db)
+def test_sql_entry_reopen_recovers_index(tmp_path, spark):
+    s = _derby_store(spark, tmp_path)
     s.entry("f1").store_logs(_logs(0x1, 5, 1))
     s.close()
-    e = SqlStore(db).entry("f1")
-    assert e.last_index() == 5
-    e.store_logs(_logs(0x2, 2, 2))
-    assert [r["indx"] for r in e.all_logs()] == list(range(7))
+    s = _derby_store(spark, tmp_path)
+    try:
+        e = s.entry("f1")
+        assert e.last_index() == 5
+        e.store_logs(_logs(0x2, 2, 2))
+        assert [r["indx"] for r in e.all_logs()] == list(range(7))
+    finally:
+        s.close()
 
 
-def test_sql_row_roundtrip_native_types(tmp_path):
+def test_sql_row_roundtrip_native_types(tmp_path, spark):
     """topics/data use the reference's stringly encoding in the table
     (comma-joined, 0x-hex — postgresql_store.go:124-141) but must come
     back as native list/bytes, identical to the other backends."""
-    e = SqlStore(tmp_path / "s.db").entry("f1")
-    [orig] = _logs(0x7, 1, 1)
-    e.store_logs([dict(orig)])
-    got = e.get_log(0)
-    assert got["topics"] == orig["topics"]
-    assert got["data"] == orig["data"]
-    assert isinstance(got["data"], bytes)
-    # raw stored form is the reference's encoding
-    raw = e._conn.execute(f"SELECT topics, data FROM {e.table}").fetchone()
-    assert raw[0] == ",".join(orig["topics"])
-    assert raw[1] == "0x" + orig["data"].hex()
-
-
-def test_sql_filter_hash_must_be_identifier(tmp_path):
-    import pytest as _pytest
-
-    s = SqlStore(tmp_path / "s.db")
-    with _pytest.raises(ValueError):
-        s.entry("bad-hash; DROP TABLE kv")
-
-
-def test_tracker_runs_on_sql_backend(tmp_path):
-    """Full sync + live reorg on the SQL backend (the reference's
-    TestStore-over-pg scenario, tracker-side)."""
-    from eth_event_tracker_spark.config import FilterConfig
-    from eth_event_tracker_spark.sources.mock_chain import MockProvider
-    from eth_event_tracker_spark.streaming import Tracker
-
-    prov = MockProvider()
-    prov.advance(25, logs_per_block=1)
-    t = Tracker(prov, SqlStore(tmp_path / "store.db"), FilterConfig())
-    t.sync()
-    assert t.entry.last_index() == 25
-    prov.fork(3, logs_per_block=2)
-    events = t.poll()
-    assert sum(len(e.removed) for e in events) == 3
-    assert sum(len(e.added) for e in events) == 6
-    chain = [lg["tx_hash"] for b in prov.canonical for lg in b.logs()]
-    assert [r["tx_hash"] for r in t.entry.all_logs()] == chain
-
-
-# ---------------------------------------------------------------------------
-# JDBC backend specifics — the distributed SQL path
-# (postgresql_store.go:110-150 server-side semantics)
-# ---------------------------------------------------------------------------
-def test_tracker_runs_on_jdbc_backend(tmp_path, spark):
-    """Full sync + live reorg on the JDBC backend — the reference's
-    pg-backed tracker scenario with executor-side writes."""
-    from eth_event_tracker_spark.config import FilterConfig
-    from eth_event_tracker_spark.sources.mock_chain import MockProvider
-    from eth_event_tracker_spark.streaming import Tracker
-
     s = _derby_store(spark, tmp_path)
     try:
-        prov = MockProvider()
-        prov.advance(25, logs_per_block=1)
-        t = Tracker(prov, s, FilterConfig())
-        t.sync()
-        assert t.entry.last_index() == 25
-        prov.fork(3, logs_per_block=2)
-        events = t.poll()
-        assert sum(len(e.removed) for e in events) == 3
-        assert sum(len(e.added) for e in events) == 6
-        chain = [lg["tx_hash"] for b in prov.canonical for lg in b.logs()]
-        assert [r["tx_hash"] for r in t.entry.all_logs()] == chain
+        e = s.entry("f1")
+        [orig] = _logs(0x7, 1, 1)
+        e.store_logs([dict(orig)])
+        got = e.get_log(0)
+        assert got["topics"] == orig["topics"]
+        assert got["data"] == orig["data"]
+        assert isinstance(got["data"], bytes)
+        # raw stored form is the reference's encoding
+        st = s._conn.createStatement()
+        try:
+            rs = st.executeQuery(f'SELECT "topics", "data" FROM {e.table}')
+            assert rs.next()
+            raw = (rs.getString(1), rs.getString(2))
+        finally:
+            st.close()
+        assert raw[0] == ",".join(orig["topics"])
+        assert raw[1] == "0x" + orig["data"].hex()
+    finally:
+        s.close()
+
+
+def test_sql_filter_hash_must_be_identifier(tmp_path, spark):
+    s = _derby_store(spark, tmp_path)
+    try:
+        with pytest.raises(ValueError):
+            s.entry("bad-hash; DROP TABLE kv")
     finally:
         s.close()
 
@@ -389,32 +404,13 @@ def test_jdbc_append_df_matches_store_logs_no_driver_rows(tmp_path, spark, monke
         s2.close()
 
 
-def test_sql_append_df_matches_store_logs(tmp_path, spark):
-    """The distributed-indx bulk path lands the same rows as the
-    driver-side path."""
-    from eth_event_tracker_spark.schemas import RAW_LOG_SCHEMA
-
-    logs = [lg for b in range(1, 9) for lg in _logs(b, 3, b)]
-    e1 = SqlStore(tmp_path / "a.db").entry("f1")
-    e1.store_logs(logs)
-    e2 = SqlStore(tmp_path / "b.db").entry("f1")
-    cols = [f.name for f in RAW_LOG_SCHEMA.fields]
-    df = spark.createDataFrame([tuple(lg[c] for c in cols) for lg in logs], RAW_LOG_SCHEMA)
-    n = e2.append_df(df)
-    assert n == len(logs)
-    assert e2.last_index() == e1.last_index()
-    assert e2.all_logs() == e1.all_logs()
-    # spark-side view agrees
-    assert e2.df(spark).count() == len(logs)
-
-
 def test_changelog_roundtrip_and_compaction(make_store, spark):
     """Round 5: the changelog model is backend-agnostic.  change_type
     rows round-trip on every backend (previously the SQL codecs silently
     dropped the tag), current_view reconstructs the live set from the
     backend's df(), and compact_changelog collapses finalized churn
     server-side while the live view stays bit-identical — the
-    prune_changelog semantics, now enforced x4 backends."""
+    prune_changelog semantics, enforced on every backend."""
     from eth_event_tracker_spark.streaming.pipeline import current_view
 
     clog = make_store().changelog_entry("cl")

@@ -2,7 +2,8 @@
 reference's randomized tracker test (TestTrackerSyncerRandom,
 /root/reference/tracker_test.go:369-482): random op sequences, with the
 in-memory backend as the executable model and the durable backends
-(parquet file layout, SQLite) required to agree after every step.
+(parquet file layout, JDBC over embedded Derby) required to agree after
+every step.
 
 The golden conformance cases (test_store_conformance.py) pin known
 shapes; this finds the unknown ones — interleavings of append /
@@ -19,7 +20,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from eth_event_tracker_spark.sources.mock_chain import mock
-from eth_event_tracker_spark.store import ParquetStore, SqlStore
+from eth_event_tracker_spark.store import ParquetStore
 from eth_event_tracker_spark.store.inmem_store import InMemStore
 
 # an op is one of:
@@ -96,35 +97,25 @@ def test_parquet_store_matches_inmem_model(ops):
         _run_ops(ops, lambda: ParquetStore(Path(tmp)), reopen)
 
 
-@settings(max_examples=20, deadline=None)
-@given(ops=_OPS)
-def test_sqlite_store_matches_inmem_model(ops):
-    with tempfile.TemporaryDirectory() as tmp:
-        db = Path(tmp) / "s.db"
-
-        def reopen(old):
-            old.close()
-            s = SqlStore(db)
-            return s, s.entry("f1")
-
-        _run_ops(ops, lambda: SqlStore(db), reopen)
-
-
 @settings(max_examples=10, deadline=None)
 @given(ops=_OPS)
 def test_jdbc_store_matches_inmem_model(ops, spark):
     """Same model-based fuzz over the JDBC backend (driver-side ops —
-    the distributed append path has its own parity test).  Fewer
-    examples: each one boots and deboots an embedded Derby database."""
+    the distributed append path has its own parity test).  ``reopen``
+    deboots the embedded Derby database and boots it again, so the
+    entry must come back from the table alone.  Fewer examples: each
+    one boots and deboots an embedded Derby database."""
     from .test_store_conformance import _derby_store
 
     with tempfile.TemporaryDirectory() as tmp:
-        store = _derby_store(spark, Path(tmp))
+        stores = [_derby_store(spark, Path(tmp))]
         try:
 
             def reopen(old):
-                return old, old.entry("f1")  # embedded db stays booted
+                old.close()
+                stores.append(_derby_store(spark, Path(tmp)))
+                return stores[-1], stores[-1].entry("f1")
 
-            _run_ops(ops, lambda: store, reopen)
+            _run_ops(ops, lambda: stores[0], reopen)
         finally:
-            store.close()
+            stores[-1].close()
