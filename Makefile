@@ -2,7 +2,7 @@
 # `make evidence` regenerates everything a registry edit invalidates;
 # `make check` is the fast freshness guard the pre-commit hook runs.
 
-.PHONY: evidence check catalog sf01 hooks test perf
+.PHONY: evidence check catalog sf01 hooks test perf perf-ab
 
 evidence: catalog sf01 check
 
@@ -28,3 +28,9 @@ W ?= stream_backfill
 SEED ?= 11
 perf:
 	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 15 --trace 0
+
+# same-host A/B, alternating order: make perf-ab W=head_follow BASE=HEAD PAIRS=10
+BASE ?= HEAD
+PAIRS ?= 10
+perf-ab:
+	python3 tools/perf_ab.py --base $(BASE) --workload $(W) --pairs $(PAIRS) --seed0 $(SEED)

@@ -18,8 +18,11 @@ Why this layout scales:
     of finalized history.
   - Appends write new files; existing files are immutable (object-store
     friendly, no read-modify-write of data).
-  - The whole entry is directly ``spark.read.parquet``-able with partition
-    pruning on ``bucket`` (and row-group pruning on indx/block_num).
+  - Spark reads the entry as its non-empty ``bucket=<k>`` directories
+    with the entry's declared schema, so planning a read runs no Spark
+    job (no per-file listing, no footer schema inference).  The
+    DataFrame has no ``bucket`` column; range filters on ``indx`` and
+    ``block_num`` prune by row-group statistics.
 
 Micro-batch appends go through pyarrow (``store_logs``, driver-side):
 the head path's batches are ≤ backlog blocks and the finalized stream's
@@ -34,6 +37,7 @@ replays a suffix — dedupable by deterministic (block_hash, log_index).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -57,6 +61,24 @@ ARROW_LOG_SCHEMA = pa.schema(
 )
 
 _LOG_COLS = [f.name for f in ARROW_LOG_SCHEMA]
+
+
+_COMPACT_TMP = "_compact.tmp"  # hidden: neither _bucket_files nor Spark reads it
+
+
+def _max_indx(f: Path) -> int:
+    """Largest indx in a data file, from its footer statistics (both
+    pyarrow and Spark write them); -1 for a file with no rows."""
+    md = pq.read_metadata(f)
+    j = md.schema.names.index("indx")
+    return max(
+        (
+            md.row_group(i).column(j).statistics.max
+            for i in range(md.num_row_groups)
+            if md.row_group(i).num_rows
+        ),
+        default=-1,
+    )
 
 
 def _atomic_write_json(path: Path, obj) -> None:
@@ -130,6 +152,10 @@ class ParquetEntry:
         if self._meta_path.exists():
             meta_obj = json.loads(self._meta_path.read_text())
             meta = meta_obj["last_index"]
+            if meta_obj.get("compacting"):
+                # crash mid-compaction after its intent commit: finish it
+                self._finish_compact(meta_obj["compacting"])
+                _atomic_write_json(self._meta_path, {"last_index": meta})
             if meta_obj.get("truncating"):
                 # crash mid-truncation: the truncate intent was committed
                 # before file deletion — finish the job (rows >= meta are
@@ -251,16 +277,31 @@ class ParquetEntry:
 
     # -- distributed access --------------------------------------------------
     def df(self, spark):
-        """The entry as a Spark DataFrame (partition-pruned on bucket).
-        Unordered — an orderBy here would force a global sort exchange on
-        every read; callers that need the sequence order by `indx` (which
-        parquet row-group stats make cheap to range-filter)."""
-        files = [str(f) for k in self._buckets() for f in self._bucket_files(k)]
-        if not files:
-            from ..schemas import LOG_SCHEMA
+        """The entry as a Spark DataFrame with the entry's declared
+        schema; building it runs no Spark job.  There is no ``bucket``
+        column: range filters on ``indx``/``block_num`` prune by parquet
+        row-group statistics.  Unordered — an orderBy here would force a
+        global sort exchange on every read; callers that need the
+        sequence order by ``indx``."""
+        return self._read(spark, self._buckets())
 
-            return spark.createDataFrame([], LOG_SCHEMA)
-        return spark.read.parquet(*files)
+    @functools.cached_property
+    def _spark_schema(self):
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        return from_arrow_schema(self.schema)
+
+    def _read(self, spark, buckets: list[int]):
+        """The rows of ``buckets`` as one DataFrame.  Spark gets the
+        bucket directories, not their files, and the declared schema:
+        above 32 paths Spark lists files with a job of one task per path,
+        and without a schema it runs a footer job to infer one.  Spark
+        skips the ``_``/``.``-prefixed debris as ``_bucket_files`` does,
+        so the files read are exactly those."""
+        dirs = [str(self.path / f"bucket={k}") for k in buckets if self._bucket_files(k)]
+        if not dirs:
+            return spark.createDataFrame([], self._spark_schema)
+        return spark.read.schema(self._spark_schema).parquet(*dirs)
 
     def append_df(self, df) -> int:
         """Bulk path: append a Spark DataFrame of raw logs (no indx).
@@ -285,38 +326,53 @@ class ParquetEntry:
         self._commit_meta()
         return n
 
-    def scan_tail(self, block_hashes: set[str]) -> list[dict]:
+    def _tail_start(self, column: str, in_tail) -> tuple[int | None, list[Path]]:
         """Reverse tail walk (removeLogs's cursor walk, tracker.go:717-754):
-        collect rows from the end while their block_hash is in the removed
-        set; stop at the first non-matching row.  Reads only the bucket(s)
-        actually touched by the reorg — O(reorg depth), never O(entry)."""
-        # pass 1: locate the boundary reading ONLY (indx, block_hash) —
-        # a shallow reorg never deserializes the wide columns of a 10k-row
-        # bucket just to peel off a few victims
-        boundary: int | None = None
-        stop = False
+        the smallest indx of the longest suffix whose rows all satisfy
+        ``in_tail(row[column])`` (None when the last row does not), and
+        the files that hold that suffix.
+
+        Reads only ``(indx, column)`` and only the files it needs: buckets
+        top-down, within a bucket files by the max indx in their footer,
+        newest first.  Once a row outside the tail is seen, a file whose
+        max indx is below it cannot hold a tail row, so the walk stops —
+        rows of O(reorg depth) files, plus the footers of the buckets it
+        visits, never O(entry).  File names do not give the
+        order: ``part-rewrite-*``/``part-compacted-*`` sort after the
+        numbered appends but hold older rows, and Spark names the files
+        it writes by task, not by indx."""
+        stop = -1  # largest indx seen outside the tail
+        tail: list[int] = []
+        read: list[tuple[int, Path]] = []
         for k in reversed(self._buckets()):
-            keys = []
-            for f in self._bucket_files(k):
-                keys.extend(pq.read_table(f, columns=["indx", "block_hash"]).to_pylist())
-            keys.sort(key=lambda r: r["indx"])
-            for r in reversed(keys):
-                if r["block_hash"] in block_hashes:
-                    boundary = r["indx"]
-                else:
-                    stop = True
+            by_max = sorted(((_max_indx(f), f) for f in self._bucket_files(k)), reverse=True)
+            for mx, f in by_max:
+                if mx <= stop:
                     break
-            if stop:
+                read.append((mx, f))
+                for r in pq.read_table(f, columns=["indx", column]).to_pylist():
+                    if in_tail(r[column]):
+                        tail.append(r["indx"])
+                    else:
+                        stop = max(stop, r["indx"])
+            if stop >= 0:
                 break
-            # bucket empty or fully matched → walk into the previous bucket
+        tail = [i for i in tail if i > stop]
+        return (min(tail) if tail else None), [f for mx, f in read if mx > stop]
+
+    def scan_tail(self, block_hashes: set[str]) -> list[dict]:
+        """Collect rows from the end while their block_hash is in the
+        removed set; stop at the first non-matching row.  Reads only the
+        files actually touched by the reorg — O(reorg depth)."""
+        # pass 1 reads ONLY (indx, block_hash) — a shallow reorg never
+        # deserializes the wide columns of a 10k-row bucket just to peel
+        # off a few victims; pass 2 fetches exactly the reorg tail
+        boundary, files = self._tail_start("block_hash", lambda h: h in block_hashes)
         if boundary is None:
             return []
-        # pass 2: fetch the full victim rows (exactly the reorg tail)
         victims: list[dict] = []
-        for k in range(boundary // self.bucket_size, (self._last_index - 1) // self.bucket_size + 1):
-            for f in self._bucket_files(k):
-                t = pq.read_table(f, filters=[("indx", ">=", boundary)])
-                victims.extend(t.to_pylist())
+        for f in files:
+            victims.extend(pq.read_table(f, filters=[("indx", ">=", boundary)]).to_pylist())
         victims.sort(key=lambda r: r["indx"])
         return victims
 
@@ -330,21 +386,7 @@ class ParquetEntry:
         checkpoint.  Appends are block-ordered, so that suffix is
         contiguous — the same O(tail) reverse walk as :meth:`scan_tail`,
         with a block-number predicate instead of a hash set."""
-        boundary: int | None = None
-        stop = False
-        for k in reversed(self._buckets()):
-            keys = []
-            for f in self._bucket_files(k):
-                keys.extend(pq.read_table(f, columns=["indx", "block_num"]).to_pylist())
-            keys.sort(key=lambda r: r["indx"])
-            for r in reversed(keys):
-                if r["block_num"] > block_num:
-                    boundary = r["indx"]
-                else:
-                    stop = True
-                    break
-            if stop:
-                break
+        boundary, _ = self._tail_start("block_num", lambda n: n > block_num)
         if boundary is None:
             return 0
         removed = self._last_index - boundary
@@ -356,7 +398,14 @@ class ParquetEntry:
         a file per batch; finalized buckets should be single large files
         for scan efficiency).  Returns files merged.  At 100 TB this is
         the routine run on buckets crossing the finality boundary — they
-        are immutable afterwards, so compaction is safe and one-shot."""
+        are immutable afterwards, so compaction is safe and one-shot.
+
+        Crash-safe: the merged file is written hidden, then the intent
+        (bucket, inputs) is committed in meta.json, then the merged file
+        is renamed into place, then the inputs are deleted.  A crash
+        before the intent leaves the inputs as they were; reopening after
+        it finishes the swap (:meth:`_finish_compact`).  Either way every
+        row is stored exactly once."""
         targets = [bucket] if bucket is not None else self._buckets()
         merged_count = 0
         for k in targets:
@@ -364,14 +413,28 @@ class ParquetEntry:
             if len(files) <= 1:
                 continue
             t = pa.concat_tables([pq.read_table(f) for f in files]).cast(self.schema)
-            t = t.sort_by("indx")
-            tmp = self.path / f"bucket={k}" / "_compact.tmp"
-            pq.write_table(t, tmp)
-            for f in files:
-                f.unlink()
-            os.replace(tmp, self.path / f"bucket={k}" / f"part-compacted-{k:06d}.parquet")
+            pq.write_table(t.sort_by("indx"), self.path / f"bucket={k}" / _COMPACT_TMP)
+            intent = {"bucket": k, "inputs": [f.name for f in files]}
+            _atomic_write_json(
+                self._meta_path, {"last_index": self._last_index, "compacting": intent}
+            )
+            self._finish_compact(intent)
+            self._commit_meta()
             merged_count += len(files)
         return merged_count
+
+    def _finish_compact(self, intent: dict) -> None:
+        """Complete a committed compaction swap: rename the merged file
+        into place and delete the inputs it replaces.  Idempotent — the
+        hidden merged file exists exactly until its rename, so after a
+        crash its absence means the inputs left are the superseded ones."""
+        d = self.path / f"bucket={intent['bucket']}"
+        target = d / f"part-compacted-{intent['bucket']:06d}.parquet"
+        if (d / _COMPACT_TMP).exists():
+            os.replace(d / _COMPACT_TMP, target)
+        for name in intent["inputs"]:
+            if name != target.name:  # a re-compaction overwrites its predecessor
+                (d / name).unlink(missing_ok=True)
 
     # -- changelog retention compaction --------------------------------------
     _CC_STAGING = "_cc_staging"
@@ -434,8 +497,7 @@ class ParquetEntry:
         staging = self.path / self._CC_STAGING
         if staging.exists():
             shutil.rmtree(staging)  # stale pre-commit leftovers
-        src = [str(f) for k in affected for f in self._bucket_files(k)]
-        before_df = spark.read.parquet(*src)
+        before_df = self._read(spark, affected)
         pruned = prune_changelog(before_df, finalized_below)
         (
             pruned.select(*self.columns)

@@ -160,7 +160,7 @@ def test_fifty_streams_one_chain_dir_mixed_specs(tmp_path):
     from eth_event_tracker_spark.sources.file_chain import dump_chain
     from eth_event_tracker_spark.sources.mock_chain import EVENT_SIGS
 
-    from .test_web3_source import _drain
+    from .test_web3_source import _drain_all
 
     spark = get_spark("tests")
     register(spark)
@@ -259,10 +259,9 @@ def test_fifty_streams_one_chain_dir_mixed_specs(tmp_path):
                     break
                 time.sleep(0.25)
             queries.extend(q for _, q in wave)
-        # all 50 are live at once; drain order is irrelevant (each drain
-        # waits only for ITS query to go idle)
-        for q in queries:
-            _drain(q, timeout=300)
+        # all 50 are live at once; each query is stopped once IT has gone
+        # idle, and the 50 idle waits run side by side
+        _drain_all(queries, timeout=300)
 
     run_all()
     # one sidecar per distinct filter identity

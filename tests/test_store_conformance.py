@@ -5,6 +5,10 @@ monotonicity, truncate-then-reappend."""
 
 from __future__ import annotations
 
+import uuid
+from pathlib import Path
+from urllib.parse import unquote, urlparse
+
 import pytest
 
 from eth_event_tracker_spark.sources.mock_chain import mock
@@ -178,6 +182,64 @@ def test_entry_spark_readable(tmp_path, spark):
     assert [r.indx for r in df.select("indx").orderBy("indx").collect()] == list(range(9))
 
 
+def _spark_jobs(spark, action):
+    """Run ``action`` under a fresh job group; return its result and the
+    ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    prev = {p: sc.getLocalProperty(p) for p in props}
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        for p, v in prev.items():
+            sc.setLocalProperty(p, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def hundred_file_changelog(tmp_path):
+    """A one-bucket changelog of 100 head-batch files, plus the hidden
+    ``_compact.tmp`` a crash before a compaction's commit leaves."""
+    clog = ParquetStore(tmp_path).changelog_entry("plan")
+    for i in range(100):
+        clog.store_logs([{**r, "change_type": "add"} for r in _logs(0x100 + i, 1, i)])
+    (clog.path / "bucket=0" / "_compact.tmp").write_bytes(b"debris")
+    assert clog._buckets() == [0] and len(clog._bucket_files(0)) == 100
+    return clog
+
+
+def test_entry_df_plans_without_spark_jobs(hundred_file_changelog, spark):
+    """Building the DataFrame neither lists files with a Spark job (one
+    task per path above 32 paths) nor infers the schema from footers:
+    the bucket directory and the declared schema are passed."""
+    df, jobs = _spark_jobs(spark, lambda: hundred_file_changelog.df(spark))
+    assert jobs == []
+    assert df.columns == hundred_file_changelog.columns
+
+
+def test_entry_df_reads_exactly_the_bucket_files(hundred_file_changelog, spark):
+    clog = hundred_file_changelog
+    read = {Path(unquote(urlparse(u).path)).resolve() for u in clog.df(spark).inputFiles()}
+    assert read == {f.resolve() for f in clog._bucket_files(0)}
+
+
+def test_view_refresh_job_count(hundred_file_changelog, spark):
+    """The head path's view refresh over a 100-file changelog: the scan
+    and the window's shuffle, not a listing or footer job per refresh."""
+    from eth_event_tracker_spark.streaming.pipeline import current_view
+
+    clog = hundred_file_changelog
+    rows, jobs = _spark_jobs(
+        spark,
+        lambda: current_view(clog.df(spark)).groupBy("block_num", "block_hash").count().collect(),
+    )
+    assert len(rows) == 100
+    assert len(jobs) <= 3, jobs
+
+
 def test_entry_crash_recovery_meta_behind(tmp_path):
     """Crash between data write and meta commit: the reopened entry must
     trust the data files (no overlapping indx on the next append)."""
@@ -209,6 +271,57 @@ def test_entry_compaction(tmp_path):
     # appends continue normally after compaction
     e.store_logs(_logs(0x99, 2, 99))
     assert e.last_index() == 38
+
+
+class _Crash(Exception):
+    pass
+
+
+def test_entry_compaction_crash_at_every_step(tmp_path):
+    """A crash at any rename or delete of ``compact()`` — here a
+    re-compaction whose inputs include the previous merged file — leaves
+    every row stored exactly once after reopen."""
+    import os
+    import pathlib
+
+    real = {"replace": os.replace, "unlink": pathlib.Path.unlink}
+    step = 0
+    while True:
+        root = tmp_path / f"crash{step}"
+        e = ParquetStore(root).entry("f1", bucket_size=100)
+        for i in range(6):
+            if i == 3:
+                e.compact()
+            e.store_logs(_logs(0x1 + i, 3, i + 1))
+        before = e.all_logs()
+        calls = 0
+
+        def crash_on(op):
+            def wrapped(*args, **kwargs):
+                nonlocal calls
+                calls += 1
+                if calls > step:
+                    raise _Crash
+                return op(*args, **kwargs)
+
+            return wrapped
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(os, "replace", crash_on(real["replace"]))
+            mp.setattr(pathlib.Path, "unlink", crash_on(real["unlink"]))
+            try:
+                e.compact()
+                finished = True
+            except _Crash:
+                finished = False
+        reopened = ParquetStore(root).entry("f1", bucket_size=100)
+        assert reopened.all_logs() == before, f"crash after {step} file operations"
+        assert [r["indx"] for r in reopened.all_logs()] == list(range(18))
+        assert reopened.last_index() == 18
+        if finished:
+            break
+        step += 1
+    assert step >= 4  # intent commit, rename, and each input delete
 
 
 def test_tracker_runs_on_backend(make_store):
@@ -292,6 +405,40 @@ def test_scan_tail_stops_at_boundary(tmp_path):
     assert [r["indx"] for r in got] == [3, 4, 5, 6, 7, 8, 9]
     # a hash set matching only non-tail rows yields nothing (walk stops)
     assert e.scan_tail({mock(0x1).num(1).hash}) == []
+
+
+def test_tail_walk_reads_only_tail_files(tmp_path, monkeypatch):
+    """The tail walks order files by the max indx in their footers, not
+    by name (``part-compacted-*`` sorts after the numbered appends but
+    holds the oldest rows), and open only the files holding the tail."""
+    import pyarrow.parquet as pq
+
+    e = ParquetStore(tmp_path).entry("f1", bucket_size=100)
+    for num in range(1, 6):
+        e.store_logs(_logs(num, 3, num))  # indx 0-14
+    e.compact()
+    for num in range(6, 16):
+        e.store_logs(_logs(num, 3, num))  # indx 15-44, one file per block
+    read: list[str] = []
+    real_read_table = pq.read_table
+
+    def spy(source, *args, **kwargs):
+        read.append(Path(source).name)
+        return real_read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", spy)
+
+    def hashes(nums):
+        return {mock(n).num(n).hash for n in nums}
+
+    assert [r["indx"] for r in e.scan_tail(hashes([15]))] == [42, 43, 44]
+    # pass 1: block 15's file, then block 14's (its rows end the tail);
+    # pass 2: block 15's file only
+    assert len(read) == 3 and len(set(read)) == 2, read
+    assert [r["indx"] for r in e.scan_tail(hashes(range(4, 16)))] == list(range(9, 45))
+    assert [r["indx"] for r in e.scan_tail(hashes(range(1, 16)))] == list(range(45))
+    assert e.truncate_above_block(3) == 36
+    assert [r["block_num"] for r in e.all_logs()] == [n for n in range(1, 4) for _ in range(3)]
 
 
 # ---------------------------------------------------------------------------
@@ -462,6 +609,28 @@ def test_changelog_roundtrip_and_compaction(make_store, spark):
         for r in view_as_of(clog.df(spark), last - 1, exact_from=h).collect()
     }
     assert got_at_h == want
+
+
+def test_empty_changelog_current_view(make_store, spark):
+    """A changelog with no rows, never written or emptied by compaction,
+    reads with its declared columns on every backend: current_view has
+    0 rows instead of failing on a missing change_type."""
+    from eth_event_tracker_spark.streaming.pipeline import current_view
+
+    clog = make_store().changelog_entry("empty")
+    empty = clog.df(spark)
+    assert "change_type" in empty.columns
+    assert current_view(empty).count() == 0
+    adds = _logs(0x1, 2, 1)
+    clog.store_logs([{**r, "change_type": "add"} for r in adds])
+    assert clog.df(spark).dtypes == empty.dtypes
+    clog.store_logs([{**r, "change_type": "remove"} for r in reversed(adds)])
+    clog.compact_changelog(spark, finalized_below=100)  # every key retracted
+    # parquet and inmem drop every row; jdbc keeps its max-indx row so
+    # that last_index (MAX + 1 there) never regresses
+    assert len(clog.all_logs()) <= 1
+    assert clog.df(spark).dtypes == empty.dtypes
+    assert current_view(clog.df(spark)).count() == 0
 
 
 def test_horizon_bound_with_duplicate_adds(make_store, spark):

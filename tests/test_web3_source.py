@@ -52,24 +52,39 @@ def test_batch_filter_pushdown(registered, chain):
 def _drain(q, timeout=120):
     """Run a continuously-triggered stream until the engine reports no
     available data and no active trigger (stable for ~2s), then stop."""
+    _drain_all([q], timeout)
+
+
+def _drain_all(queries, timeout=120):
+    """:func:`_drain` for several live queries at once: each is stopped
+    as soon as it has been idle for ~2s (or has terminated), and they are
+    polled together, so their idle waits overlap instead of adding up."""
     import time
 
-    t0, stable = time.time(), 0
-    while time.time() - t0 < timeout and stable < 4:
-        if not q.isActive:
-            break  # already terminated — awaitTermination surfaces any error
+    t0 = time.time()
+    stable = dict.fromkeys(range(len(queries)), 0)  # the queries still draining
+    while stable and time.time() - t0 < timeout:
+        for i in [i for i in stable if not queries[i].isActive]:
+            del stable[i]  # already terminated — awaitTermination surfaces any error
+        if not stable:
+            break
         time.sleep(0.5)
-        st = q.status
-        if (
-            q.lastProgress is not None
-            and not st["isDataAvailable"]
-            and not st["isTriggerActive"]
-        ):
-            stable += 1
-        else:
-            stable = 0
-    q.stop()
-    q.awaitTermination(30)
+        for i in list(stable):
+            q, st = queries[i], queries[i].status
+            if (
+                q.lastProgress is not None
+                and not st["isDataAvailable"]
+                and not st["isTriggerActive"]
+            ):
+                stable[i] += 1
+                if stable[i] == 4:
+                    del stable[i]
+                    q.stop()
+            else:
+                stable[i] = 0
+    for q in queries:
+        q.stop()
+        q.awaitTermination(30)
 
 
 def test_stream_microbatches_and_resume(registered, chain, tmp_path):
