@@ -30,7 +30,9 @@ perf:
 	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 15 --trace 0
 
 # same-host A/B, alternating order: make perf-ab W=head_follow BASE=HEAD PAIRS=10
+# TRACE=1 runs both sides traced and compares the per-layer metrics
 BASE ?= HEAD
 PAIRS ?= 10
+TRACE ?= 0
 perf-ab:
-	python3 tools/perf_ab.py --base $(BASE) --workload $(W) --pairs $(PAIRS) --seed0 $(SEED)
+	python3 tools/perf_ab.py --base $(BASE) --workload $(W) --pairs $(PAIRS) --seed0 $(SEED) --trace $(TRACE)

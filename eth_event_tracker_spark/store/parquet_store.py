@@ -16,8 +16,15 @@ Why this layout scales:
     bucket(s) at/above the boundary — under O-5 depth-bounded reorgs
     (tracker.go:33-35) that is always the newest bucket, never the 100 TB
     of finalized history.
-  - Appends write new files; existing files are immutable (object-store
-    friendly, no read-modify-write of data).
+  - Appends write new files and never modify a file in place; small
+    files are merged by size tier, the logarithmic method of an LSM tree.
+    Each ``store_logs`` file is tier 0 (``part-t0-<first indx>``); once a
+    bucket holds ``_MERGE_FANIN`` files of one tier they are merged into
+    one file of the next tier.  A bucket of n rows written by one-row
+    appends therefore holds at most ``_MERGE_FANIN - 1`` files per tier,
+    O(log n) files, and each row is rewritten once per tier.  Files the
+    tier merge did not write (``append_df``'s Spark output, ``compact()``'s
+    merged file) are never tier-merged.
   - Spark reads the entry as its non-empty ``bucket=<k>`` directories
     with the entry's declared schema, so planning a read runs no Spark
     job (no per-file listing, no footer schema inference).  The
@@ -40,10 +47,12 @@ from __future__ import annotations
 import functools
 import json
 import os
+import re
 import shutil
 from pathlib import Path
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 ARROW_LOG_SCHEMA = pa.schema(
@@ -64,6 +73,15 @@ _LOG_COLS = [f.name for f in ARROW_LOG_SCHEMA]
 
 
 _COMPACT_TMP = "_compact.tmp"  # hidden: neither _bucket_files nor Spark reads it
+
+_MERGE_FANIN = 8  # files of one tier that merge into one of the next
+_TIER_FILE = re.compile(r"part-t(\d+)-(\d+)\.parquet")  # (tier, first indx)
+
+
+def _tier_file(tier: int, first_indx: int) -> str:
+    """Name of a tier file: its tier and its smallest indx, unique among
+    a bucket's live files because their rows are disjoint."""
+    return f"part-t{tier}-{first_indx:012d}.parquet"
 
 
 def _max_indx(f: Path) -> int:
@@ -139,7 +157,10 @@ class ParquetEntry:
         self.columns = [f.name for f in self.schema]
         self.path.mkdir(parents=True, exist_ok=True)
         self._meta_path = self.path / "meta.json"
-        self._seq = 0  # next file sequence number, per-process
+        # the tier files of the bucket store_logs last wrote: name -> the
+        # table this process wrote to it (None: read it to merge it);
+        # None whenever anything else may have changed the files
+        self._head: tuple[int, dict[str, pa.Table | None]] | None = None
         staging = self.path / self._CC_STAGING
         if staging.exists():
             if (staging / "_COMMIT").exists():
@@ -181,11 +202,7 @@ class ParquetEntry:
         # walk buckets top-down: the highest bucket directory can be empty
         # after a crashed truncation — fall through to the next one
         for k in reversed(self._buckets()):
-            mx = -1
-            for f in self._bucket_files(k):
-                t = pq.read_table(f, columns=["indx"])
-                if t.num_rows:
-                    mx = max(mx, pa.compute.max(t.column("indx")).as_py())
+            mx = max((_max_indx(f) for f in self._bucket_files(k)), default=-1)
             if mx >= 0:
                 return mx + 1
         return 0
@@ -204,12 +221,36 @@ class ParquetEntry:
     def _commit_meta(self) -> None:
         _atomic_write_json(self._meta_path, {"last_index": self._last_index})
 
+    def _head_tiers(self, k: int) -> dict[str, pa.Table | None]:
+        """The tier files of bucket ``k`` (see ``_head``), listed only when
+        ``k`` is not the bucket store_logs last wrote."""
+        if self._head is None or self._head[0] != k:
+            names = [f.name for f in self._bucket_files(k)]
+            self._head = (k, {n: None for n in names if _TIER_FILE.fullmatch(n)})
+        return self._head[1]
+
+    def _read_file(self, f: Path, columns: list[str] | None = None) -> pa.Table:
+        """One data file as a table of the entry schema (or of its
+        ``columns``).  Spark-written files declare ``indx``/``block_num``/
+        ``block_hash`` NOT NULL and name list items ``element``; the cast
+        makes tables from either writer concatenate."""
+        schema = self.schema if columns is None else pa.schema(
+            [self.schema.field(c) for c in columns]
+        )
+        with pq.ParquetFile(f) as pf:
+            t = pf.read(columns=schema.names)
+        return t if t.schema.equals(schema) else t.select(schema.names).cast(schema)
+
     # -- StoreLogs (store/store.go:28-29; append batch, assign indx) --------
     def store_logs(self, logs: list[dict]) -> list[dict]:
         """Append raw logs (no indx), assigning consecutive indx starting
         at last_index — the serialization point the reference implements
         with LastIndex()+i (postgresql_store.go:111-130). Returns the
-        indexed rows."""
+        indexed rows.
+
+        Each bucket the batch touches gets one tier-0 file; after the
+        meta commit, the bucket's full tiers are merged
+        (:meth:`_merge_tiers`)."""
         if not logs:
             return []
         rows = []
@@ -226,20 +267,46 @@ class ParquetEntry:
             t = pa.Table.from_pylist(
                 [{c: r.get(c) for c in self.columns} for r in rs], schema=self.schema
             )
-            pq.write_table(t, d / f"part-{self._last_index:012d}-{self._seq:06d}.parquet")
-            self._seq += 1
+            name = _tier_file(0, rs[0]["indx"])
+            pq.write_table(t, d / name)
+            self._head_tiers(k)[name] = t
         self._last_index += len(rows)
         self._commit_meta()
+        for k in sorted(by_bucket):
+            self._merge_tiers(k)
         return rows
+
+    def _merge_tiers(self, k: int) -> None:
+        """Merge every tier of bucket ``k`` that holds ``_MERGE_FANIN``
+        files into one file of the next tier, cascading upwards."""
+        tiers = self._head_tiers(k)
+        while True:
+            by_tier: dict[int, list[tuple[int, str]]] = {}
+            for name in tiers:
+                m = _TIER_FILE.fullmatch(name)
+                by_tier.setdefault(int(m[1]), []).append((int(m[2]), name))
+            full = [t for t, fs in sorted(by_tier.items()) if len(fs) >= _MERGE_FANIN]
+            if not full:
+                return
+            firsts, names = zip(*by_tier[full[0]])
+            target = _tier_file(full[0] + 1, min(firsts))
+            self._head = None  # listed again if the merge fails part-way
+            self._merge_files(k, list(names), target, [tiers.pop(n) for n in names])
+            tiers[target] = None
+            self._head = (k, tiers)
 
     # -- RemoveLogs (store/store.go:31-32; tail truncation from indx) -------
     def remove_logs(self, indx: int) -> None:
         """Delete every log with indx >= ``indx`` (reorg rollback, S-6).
-        Whole buckets above the boundary are dropped; the boundary bucket
-        is rewritten filtered — the only data rewrite a depth-bounded
-        reorg ever does."""
+        Whole buckets above the boundary are dropped; in the boundary
+        bucket only the files whose footer max indx is at or above
+        ``indx`` are touched: a file wholly at or above it is deleted, a
+        file straddling it is rewritten filtered under its own name (so
+        it keeps its tier) — the only data rewrite a depth-bounded reorg
+        ever does."""
         if indx >= self._last_index:
             return
+        self._head = None
         # commit the truncate INTENT before touching files: a crash during
         # deletion must not let recovery resurrect the doomed tail (the
         # append direction commits data-then-meta; truncation is the
@@ -247,23 +314,24 @@ class ParquetEntry:
         _atomic_write_json(self._meta_path, {"last_index": indx, "truncating": True})
         boundary = indx // self.bucket_size
         for k in self._buckets():
+            d = self.path / f"bucket={k}"
             if k > boundary:
-                shutil.rmtree(self.path / f"bucket={k}")
+                shutil.rmtree(d)
             elif k == boundary:
-                files = self._bucket_files(k)
-                kept = []
-                for f in files:
-                    t = pq.read_table(f)
-                    kept.append(t.filter(pa.compute.less(t.column("indx"), indx)))
-                    f.unlink()
-                merged = pa.concat_tables(kept) if kept else None
-                if merged is not None and merged.num_rows:
-                    pq.write_table(
-                        merged.cast(self.schema),
-                        self.path / f"bucket={k}" / f"part-rewrite-{indx:012d}.parquet",
-                    )
-                elif (self.path / f"bucket={k}").exists() and not self._bucket_files(k):
-                    shutil.rmtree(self.path / f"bucket={k}")
+                for f in self._bucket_files(k):
+                    if _max_indx(f) < indx:
+                        continue
+                    t = self._read_file(f)
+                    kept = t.filter(pc.less(t.column("indx"), indx))
+                    if kept.num_rows:
+                        # hidden write + rename: a crash leaves f whole,
+                        # and the reopened truncation rewrites it again
+                        pq.write_table(kept, d / _COMPACT_TMP)
+                        os.replace(d / _COMPACT_TMP, f)
+                    else:
+                        f.unlink()
+                if not self._bucket_files(k):
+                    shutil.rmtree(d)
         self._last_index = indx
         self._commit_meta()
 
@@ -312,6 +380,7 @@ class ParquetEntry:
 
         from ..operators.indexing import assign_indx_scalable
 
+        self._head = None
         base = self._last_index
         indexed = (
             assign_indx_scalable(df, base=base)
@@ -338,9 +407,10 @@ class ParquetEntry:
         max indx is below it cannot hold a tail row, so the walk stops —
         rows of O(reorg depth) files, plus the footers of the buckets it
         visits, never O(entry).  File names do not give the
-        order: ``part-rewrite-*``/``part-compacted-*`` sort after the
-        numbered appends but hold older rows, and Spark names the files
-        it writes by task, not by indx."""
+        order: a higher tier holds older rows than a lower one (except
+        after a truncation), ``part-compacted-*`` holds older rows than
+        the appends after it, and Spark names the files it writes by
+        task, not by indx."""
         stop = -1  # largest indx seen outside the tail
         tail: list[int] = []
         read: list[tuple[int, Path]] = []
@@ -350,7 +420,7 @@ class ParquetEntry:
                 if mx <= stop:
                     break
                 read.append((mx, f))
-                for r in pq.read_table(f, columns=["indx", column]).to_pylist():
+                for r in self._read_file(f, ["indx", column]).to_pylist():
                     if in_tail(r[column]):
                         tail.append(r["indx"])
                     else:
@@ -372,7 +442,8 @@ class ParquetEntry:
             return []
         victims: list[dict] = []
         for f in files:
-            victims.extend(pq.read_table(f, filters=[("indx", ">=", boundary)]).to_pylist())
+            t = self._read_file(f)
+            victims.extend(t.filter(pc.greater_equal(t.column("indx"), boundary)).to_pylist())
         victims.sort(key=lambda r: r["indx"])
         return victims
 
@@ -394,42 +465,59 @@ class ParquetEntry:
         return removed
 
     def compact(self, bucket: int | None = None) -> int:
-        """Merge a bucket's small files into one (head micro-batches write
-        a file per batch; finalized buckets should be single large files
-        for scan efficiency).  Returns files merged.  At 100 TB this is
-        the routine run on buckets crossing the finality boundary — they
-        are immutable afterwards, so compaction is safe and one-shot.
+        """Merge a bucket's files into one, sorted by indx.  Returns files
+        merged.  The tier merge of ``store_logs`` already bounds a head
+        bucket to O(log n) files; this is the one-shot routine for buckets
+        crossing the finality boundary — immutable afterwards, so a single
+        file whose row groups have disjoint indx ranges serves every later
+        scan and point lookup.  Its output is never tier-merged.
 
-        Crash-safe: the merged file is written hidden, then the intent
-        (bucket, inputs) is committed in meta.json, then the merged file
-        is renamed into place, then the inputs are deleted.  A crash
-        before the intent leaves the inputs as they were; reopening after
-        it finishes the swap (:meth:`_finish_compact`).  Either way every
-        row is stored exactly once."""
+        Crash-safe, the same swap as a tier merge (:meth:`_merge_files`)."""
+        self._head = None
         targets = [bucket] if bucket is not None else self._buckets()
         merged_count = 0
         for k in targets:
             files = self._bucket_files(k)
             if len(files) <= 1:
                 continue
-            t = pa.concat_tables([pq.read_table(f) for f in files]).cast(self.schema)
-            pq.write_table(t.sort_by("indx"), self.path / f"bucket={k}" / _COMPACT_TMP)
-            intent = {"bucket": k, "inputs": [f.name for f in files]}
-            _atomic_write_json(
-                self._meta_path, {"last_index": self._last_index, "compacting": intent}
-            )
-            self._finish_compact(intent)
-            self._commit_meta()
+            self._merge_files(k, [f.name for f in files], f"part-compacted-{k:06d}.parquet")
             merged_count += len(files)
         return merged_count
 
+    def _merge_files(
+        self, k: int, names: list[str], target: str, tables: list | None = None
+    ) -> None:
+        """Replace the files ``names`` of bucket ``k`` by one file
+        ``target`` holding their rows sorted by indx; ``tables`` holds
+        contents already in memory (None: read that file).
+
+        The merged file is written hidden, then the intent (bucket,
+        inputs, target) is committed in meta.json, then the merged file
+        is renamed into place, the inputs are deleted and the intent is
+        cleared.  A crash before the intent leaves the inputs as they
+        were; reopening after it finishes the swap
+        (:meth:`_finish_compact`).  Either way every row is stored
+        exactly once."""
+        d = self.path / f"bucket={k}"
+        tables = tables or [None] * len(names)
+        t = pa.concat_tables(
+            [self._read_file(d / n) if tb is None else tb for n, tb in zip(names, tables)]
+        )
+        pq.write_table(t.sort_by("indx"), d / _COMPACT_TMP)
+        intent = {"bucket": k, "inputs": names, "target": target}
+        _atomic_write_json(
+            self._meta_path, {"last_index": self._last_index, "compacting": intent}
+        )
+        self._finish_compact(intent)
+        self._commit_meta()
+
     def _finish_compact(self, intent: dict) -> None:
-        """Complete a committed compaction swap: rename the merged file
-        into place and delete the inputs it replaces.  Idempotent — the
-        hidden merged file exists exactly until its rename, so after a
-        crash its absence means the inputs left are the superseded ones."""
+        """Complete a committed merge swap: rename the merged file into
+        place and delete the inputs it replaces.  Idempotent — the hidden
+        merged file exists exactly until its rename, so after a crash its
+        absence means the inputs left are the superseded ones."""
         d = self.path / f"bucket={intent['bucket']}"
-        target = d / f"part-compacted-{intent['bucket']:06d}.parquet"
+        target = d / intent["target"]
         if (d / _COMPACT_TMP).exists():
             os.replace(d / _COMPACT_TMP, target)
         for name in intent["inputs"]:
@@ -478,7 +566,7 @@ class ParquetEntry:
             for f in fs:
                 t = pq.read_table(f, columns=["block_num"])
                 if t.num_rows:
-                    fmn = pa.compute.min(t.column("block_num")).as_py()
+                    fmn = pc.min(t.column("block_num")).as_py()
                     mn = fmn if mn is None else min(mn, fmn)
             if mn is not None and mn < finalized_below:
                 affected.append(k)
@@ -494,6 +582,7 @@ class ParquetEntry:
                 "rows_after": 0,
             }
 
+        self._head = None
         staging = self.path / self._CC_STAGING
         if staging.exists():
             shutil.rmtree(staging)  # stale pre-commit leftovers
@@ -591,8 +680,7 @@ class ParquetEntry:
 
     def all_logs(self) -> list[dict]:
         """Driver-side full read, ordered by indx (test/verification helper)."""
-        out = []
-        for k in self._buckets():
-            for f in self._bucket_files(k):
-                out.extend(pq.read_table(f).to_pylist())
-        return sorted(out, key=lambda r: r["indx"])
+        tables = [self._read_file(f) for k in self._buckets() for f in self._bucket_files(k)]
+        if not tables:
+            return []
+        return pa.concat_tables(tables).sort_by("indx").to_pylist()

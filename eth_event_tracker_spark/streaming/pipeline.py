@@ -141,10 +141,18 @@ def append_changelog(entry, event: ChangelogEvent) -> None:
 def current_view(changelog: DataFrame) -> DataFrame:
     """Reconstruct the live table from an append-only changelog:
     rows whose latest change is an 'add' (reorged-out rows have a later
-    'remove'). Keyed on the natural chain position key."""
+    'remove'). Keyed on the natural chain position key.
+
+    The changelog is hash-partitioned by ``block_hash`` alone before the
+    window: that one exchange satisfies the window's clustering on the
+    natural key and also any later grouping whose keys include
+    ``block_hash`` (the head refresh's per-block count), so such a
+    consumer shuffles once instead of twice.  Every other consumer pays
+    the one exchange the window needed anyway."""
     w = Window.partitionBy(*NATURAL_KEY).orderBy(F.desc("indx"))
     return (
-        changelog.withColumn("_rn", F.row_number().over(w))
+        changelog.repartition("block_hash")
+        .withColumn("_rn", F.row_number().over(w))
         .where((F.col("_rn") == 1) & (F.col("change_type") == "add"))
         .drop("_rn", "change_type")
     )

@@ -16,12 +16,14 @@ from __future__ import annotations
 import tempfile
 from pathlib import Path
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from eth_event_tracker_spark.sources.mock_chain import mock
-from eth_event_tracker_spark.store import ParquetStore
+from eth_event_tracker_spark.store import ParquetEntry, ParquetStore
 from eth_event_tracker_spark.store.inmem_store import InMemStore
+from eth_event_tracker_spark.store.parquet_store import _MERGE_FANIN, _TIER_FILE
 
 # an op is one of:
 #   ("add", n_logs)         one new head block with n logs
@@ -202,15 +204,29 @@ def test_jdbc_changelog_compaction_fuzz(ops, spark):
 def test_parquet_changelog_compaction_fuzz(ops, spark):
     """Parquet arm reopens the entry after every compaction — the swap
     protocol and recovery path run under every randomized interleaving
-    (each compaction is a Spark job; fewer examples)."""
-    with tempfile.TemporaryDirectory() as tmp:
+    (each compaction is a Spark job; fewer examples).  Each example
+    starts with ``2 * _MERGE_FANIN`` one-log blocks, so two buckets are
+    tier-merged before the random ops, whose compactions then rewrite
+    tier-merged buckets and later appends land next to Spark-written
+    files."""
+    merges = []
+    real_merge = ParquetEntry._merge_files
+
+    def counting(self, k, names, target, *args):
+        merges.append(target)
+        return real_merge(self, k, names, target, *args)
+
+    bucket = _MERGE_FANIN
+    with tempfile.TemporaryDirectory() as tmp, pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ParquetEntry, "_merge_files", counting)
         store = ParquetStore(Path(tmp))
         _run(
-            ops,
-            lambda: store.changelog_entry("cl", bucket_size=4),
+            [("add", 1)] * (2 * _MERGE_FANIN) + ops,
+            lambda: store.changelog_entry("cl", bucket_size=bucket),
             spark,
-            reopen=lambda: ParquetStore(Path(tmp)).changelog_entry("cl", bucket_size=4),
+            reopen=lambda: ParquetStore(Path(tmp)).changelog_entry("cl", bucket_size=bucket),
         )
+    assert sum(bool(_TIER_FILE.fullmatch(t)) for t in merges) >= 2
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ import pytest
 from eth_event_tracker_spark.config import FilterConfig
 from eth_event_tracker_spark.sources.file_chain import dump_chain
 from eth_event_tracker_spark.sources.mock_chain import MockProvider
-from eth_event_tracker_spark.store import ParquetStore
+from eth_event_tracker_spark.store import ParquetEntry, ParquetStore
 from eth_event_tracker_spark.streaming import Tracker
 from eth_event_tracker_spark.streaming.pipeline import (
     append_changelog,
@@ -80,8 +80,6 @@ def test_replay_guard_reads_only_tail_bucket(tmp_path, monkeypatch):
     """VERDICT r1 #6: the replay guard must walk back over the trailing
     bucket(s) only — an injected duplicate batch is fully dropped, and
     the guard's reads never touch finalized history."""
-    import pyarrow.parquet as pq
-
     from eth_event_tracker_spark.streaming.pipeline import dedup_against_tail
 
     store = ParquetStore(tmp_path / "store")
@@ -94,13 +92,13 @@ def test_replay_guard_reads_only_tail_bucket(tmp_path, monkeypatch):
     tail = [{k: v for k, v in r.items() if k != "indx"} for r in entry.all_logs()[-30:]]
 
     read_paths: list[str] = []
-    real_read_table = pq.read_table
+    real_read_file = ParquetEntry._read_file
 
-    def spy(source, *args, **kwargs):
-        read_paths.append(str(source))
-        return real_read_table(source, *args, **kwargs)
+    def spy(self, f, *args, **kwargs):
+        read_paths.append(str(f))
+        return real_read_file(self, f, *args, **kwargs)
 
-    monkeypatch.setattr(pq, "read_table", spy)
+    monkeypatch.setattr(ParquetEntry, "_read_file", spy)
 
     # injected duplicate batch (the last 30 rows) → nothing survives the guard
     assert dedup_against_tail(entry, tail) == []

@@ -201,13 +201,24 @@ def _spark_jobs(spark, action):
 
 @pytest.fixture
 def hundred_file_changelog(tmp_path):
-    """A one-bucket changelog of 100 head-batch files, plus the hidden
-    ``_compact.tmp`` a crash before a compaction's commit leaves."""
-    clog = ParquetStore(tmp_path).changelog_entry("plan")
+    """A one-bucket changelog of 100 one-row files, plus the hidden
+    ``_compact.tmp`` a crash before a compaction's commit leaves.  The
+    files are written straight into the entry layout (``store_logs``
+    tier-merges its appends, so it never leaves 100 files)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = ParquetStore(tmp_path).changelog_entry("plan").schema
+    bucket = tmp_path / "entries" / "changelog_plan" / "bucket=0"
+    bucket.mkdir()
     for i in range(100):
-        clog.store_logs([{**r, "change_type": "add"} for r in _logs(0x100 + i, 1, i)])
-    (clog.path / "bucket=0" / "_compact.tmp").write_bytes(b"debris")
+        [row] = _logs(0x100 + i, 1, i)
+        row = {**row, "indx": i, "change_type": "add"}
+        pq.write_table(pa.Table.from_pylist([row], schema=schema), bucket / f"part-{i:05d}.parquet")
+    (bucket / "_compact.tmp").write_bytes(b"debris")
+    clog = ParquetStore(tmp_path).changelog_entry("plan")
     assert clog._buckets() == [0] and len(clog._bucket_files(0)) == 100
+    assert clog.last_index() == 100
     return clog
 
 
@@ -228,7 +239,8 @@ def test_entry_df_reads_exactly_the_bucket_files(hundred_file_changelog, spark):
 
 def test_view_refresh_job_count(hundred_file_changelog, spark):
     """The head path's view refresh over a 100-file changelog: the scan
-    and the window's shuffle, not a listing or footer job per refresh."""
+    into the one ``block_hash`` exchange, then the window and the count
+    behind it — no listing or footer job, no second shuffle."""
     from eth_event_tracker_spark.streaming.pipeline import current_view
 
     clog = hundred_file_changelog
@@ -237,7 +249,7 @@ def test_view_refresh_job_count(hundred_file_changelog, spark):
         lambda: current_view(clog.df(spark)).groupBy("block_num", "block_hash").count().collect(),
     )
     assert len(rows) == 100
-    assert len(jobs) <= 3, jobs
+    assert len(jobs) <= 2, jobs
 
 
 def test_entry_crash_recovery_meta_behind(tmp_path):
@@ -257,15 +269,16 @@ def test_entry_crash_recovery_meta_behind(tmp_path):
 
 
 def test_entry_compaction(tmp_path):
-    """Many small head-batch files merge into one per bucket; contents and
-    order are unchanged."""
+    """A bucket's tier files merge into one; contents and order are
+    unchanged."""
     e = ParquetStore(tmp_path).entry("f1", bucket_size=100)
-    for i in range(12):  # 12 separate append files
+    for i in range(12):  # 12 appends: 8 merged into one tier-1 file, 4 tier-0
         e.store_logs(_logs(0x1 + i, 3, i + 1))
     before = e.all_logs()
-    assert len(list((tmp_path / "entries" / "f1" / "bucket=0").glob("*.parquet"))) == 12
+    files = sorted(f.name for f in (tmp_path / "entries" / "f1" / "bucket=0").glob("*.parquet"))
+    assert [n[:7] for n in files] == ["part-t0"] * 4 + ["part-t1"]
     merged = e.compact()
-    assert merged == 12
+    assert merged == 5
     assert len(list((tmp_path / "entries" / "f1" / "bucket=0").glob("*.parquet"))) == 1
     assert e.all_logs() == before
     # appends continue normally after compaction
@@ -322,6 +335,166 @@ def test_entry_compaction_crash_at_every_step(tmp_path):
             break
         step += 1
     assert step >= 4  # intent commit, rename, and each input delete
+
+
+def _tier_counts(bucket: Path) -> dict[int, int]:
+    """Files per tier in a bucket directory; every file must be a tier
+    file (``store_logs`` and its merges write nothing else)."""
+    from eth_event_tracker_spark.store.parquet_store import _TIER_FILE
+
+    counts: dict[int, int] = {}
+    for f in bucket.glob("*.parquet"):
+        m = _TIER_FILE.fullmatch(f.name)
+        assert m, f.name
+        counts[int(m[1])] = counts.get(int(m[1]), 0) + 1
+    return counts
+
+
+@pytest.mark.parametrize("bucket_size", [64, 10_000])
+def test_tier_merge_bounds_files_and_keeps_rows(tmp_path, bucket_size):
+    """600 appends of 1-3 rows: after each, every bucket holds fewer than
+    ``_MERGE_FANIN`` files of each tier and no tier above log_8 of its
+    rows (a tier-t file holds at least 8**t rows), and the stored rows
+    are the appended ones with indx 0..n-1."""
+    import random
+
+    from eth_event_tracker_spark.store.parquet_store import _MERGE_FANIN
+
+    rng = random.Random(bucket_size)
+    e = ParquetStore(tmp_path).entry("f1", bucket_size=bucket_size)
+    want: list[str] = []
+    for n in range(1, 601):
+        logs = _logs(n, rng.randint(1, 3), n)
+        first = e.last_index() // bucket_size
+        e.store_logs(logs)
+        want.extend(lg["tx_hash"] for lg in logs)
+        for k in range(first, (e.last_index() - 1) // bucket_size + 1):  # buckets written
+            rows = min(bucket_size, e.last_index() - k * bucket_size)
+            counts = _tier_counts(e.path / f"bucket={k}")
+            assert max(counts.values()) < _MERGE_FANIN, (n, k, counts)
+            assert _MERGE_FANIN ** max(counts) <= rows, (n, k, counts)
+        if n % 50 == 0 or n < 20:
+            got = e.all_logs()
+            assert [r["tx_hash"] for r in got] == want, n
+            assert [r["indx"] for r in got] == list(range(len(want))), n
+    assert e.last_index() == len(want)
+    if bucket_size == 10_000:  # one bucket: the cascade reached tier 3
+        assert max(_tier_counts(e.path / "bucket=0")) == 3
+
+
+def test_tier_merge_crash_at_every_step(tmp_path):
+    """A crash at any rename or delete of a cascading tier merge — the
+    64th one-row append merges eight tier-0 files into the eighth tier-1
+    file, then those eight into a tier-2 file — leaves every row stored
+    exactly once after reopen, and the next append restores the bound."""
+    import os
+    import pathlib
+    import shutil
+
+    from eth_event_tracker_spark.store.parquet_store import _MERGE_FANIN
+
+    seed = tmp_path / "seed"
+    e = ParquetStore(seed).entry("f1")
+    for i in range(63):
+        e.store_logs(_logs(0x100 + i, 1, i))
+    assert _tier_counts(e.path / "bucket=0") == {0: 7, 1: 7}
+    last = _logs(0x200, 1, 63)
+    want = [r["tx_hash"] for r in e.all_logs()] + [last[0]["tx_hash"]]
+    real = {"replace": os.replace, "unlink": pathlib.Path.unlink}
+    step = 0
+    while True:
+        root = tmp_path / f"crash{step}"
+        shutil.copytree(seed, root)
+        e = ParquetStore(root).entry("f1")
+        calls = 0
+
+        def crash_on(op):
+            def wrapped(*args, **kwargs):
+                nonlocal calls
+                calls += 1
+                if calls > step:
+                    raise _Crash
+                return op(*args, **kwargs)
+
+            return wrapped
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(os, "replace", crash_on(real["replace"]))
+            mp.setattr(pathlib.Path, "unlink", crash_on(real["unlink"]))
+            try:
+                e.store_logs(last)
+                finished = True
+            except _Crash:
+                finished = False
+        reopened = ParquetStore(root).entry("f1")
+        rows = reopened.all_logs()
+        assert [r["tx_hash"] for r in rows] == want, f"crash after {step} file operations"
+        assert [r["indx"] for r in rows] == list(range(64))
+        assert reopened.last_index() == 64
+        reopened.store_logs(_logs(0x201, 1, 64))
+        assert [r["indx"] for r in reopened.all_logs()] == list(range(65))
+        assert max(_tier_counts(reopened.path / "bucket=0").values()) < _MERGE_FANIN
+        if finished:
+            break
+        step += 1
+    # the append's meta commit, then per merge: intent, rename, the input
+    # deletes and the intent clear
+    assert step == 1 + 2 * (3 + _MERGE_FANIN)
+
+
+def test_tier_merge_after_truncation(tmp_path):
+    """Truncations that end inside a two-row tier-0 file, each followed by
+    appends that merge the bucket's tiers again: the straddling file is
+    rewritten under its name, merges with the later appends, and no
+    truncated row comes back."""
+    from eth_event_tracker_spark.store.parquet_store import _MERGE_FANIN
+
+    e = ParquetStore(tmp_path).entry("f1", bucket_size=1000)
+    want: list[str] = []
+    tag = 0
+    for _ in range(4):
+        for _ in range(_MERGE_FANIN + 3):
+            tag += 1
+            logs = _logs(tag, 2, tag)
+            e.store_logs(logs)
+            want.extend(lg["tx_hash"] for lg in logs)
+        e.remove_logs(len(want) - 3)
+        del want[-3:]
+        rows = e.all_logs()
+        assert [r["tx_hash"] for r in rows] == want
+        assert [r["indx"] for r in rows] == list(range(len(want)))
+    assert max(_tier_counts(e.path / "bucket=0").values()) < _MERGE_FANIN
+
+
+def test_mixed_writer_bucket_truncates_and_compacts(tmp_path, spark):
+    """A bucket holding a Spark-written file (``append_df``: ``indx`` is
+    NOT NULL there, list items are named ``element``) next to pyarrow
+    tier files: truncation, ``compact()`` and the reads cast every file
+    to the entry schema instead of failing to concatenate them."""
+    from eth_event_tracker_spark.schemas import RAW_LOG_SCHEMA
+
+    e = ParquetStore(tmp_path).entry("f1")
+    bulk = [lg for b in range(1, 9) for lg in _logs(b, 3, b)]  # indx 0-23
+    cols = [f.name for f in RAW_LOG_SCHEMA.fields]
+    e.append_df(spark.createDataFrame([tuple(lg[c] for c in cols) for lg in bulk], RAW_LOG_SCHEMA))
+    for b in range(9, 13):
+        e.store_logs(_logs(b, 1, b))  # indx 24-27
+    names = [f.name for f in e._bucket_files(0)]
+    assert sum(n.startswith("part-t0-") for n in names) == 4 and len(names) > 4
+    want = e.all_logs()
+    assert [r["tx_hash"] for r in want] == [lg["tx_hash"] for lg in bulk] + [
+        _logs(b, 1, b)[0]["tx_hash"] for b in range(9, 13)
+    ]
+    e.remove_logs(26)
+    assert e.all_logs() == want[:26]
+    e.remove_logs(20)  # inside the Spark-written rows
+    assert e.all_logs() == want[:20]
+    e.store_logs(_logs(13, 2, 13))
+    before = e.all_logs()
+    assert [r["indx"] for r in before] == list(range(22))
+    files = len(e._bucket_files(0))
+    assert e.compact() == files
+    assert e.all_logs() == before and len(e._bucket_files(0)) == 1
 
 
 def test_tracker_runs_on_backend(make_store):
@@ -409,24 +582,24 @@ def test_scan_tail_stops_at_boundary(tmp_path):
 
 def test_tail_walk_reads_only_tail_files(tmp_path, monkeypatch):
     """The tail walks order files by the max indx in their footers, not
-    by name (``part-compacted-*`` sorts after the numbered appends but
-    holds the oldest rows), and open only the files holding the tail."""
-    import pyarrow.parquet as pq
-
+    by name (the tier-1 file sorts after the tier-0 files but holds older
+    rows), and open only the files holding the tail."""
     e = ParquetStore(tmp_path).entry("f1", bucket_size=100)
     for num in range(1, 6):
         e.store_logs(_logs(num, 3, num))  # indx 0-14
     e.compact()
     for num in range(6, 16):
-        e.store_logs(_logs(num, 3, num))  # indx 15-44, one file per block
+        # indx 15-44: blocks 6-13 merge into one tier-1 file, 14 and 15
+        # stay tier-0 files
+        e.store_logs(_logs(num, 3, num))
     read: list[str] = []
-    real_read_table = pq.read_table
+    real_read_file = ParquetEntry._read_file
 
-    def spy(source, *args, **kwargs):
-        read.append(Path(source).name)
-        return real_read_table(source, *args, **kwargs)
+    def spy(self, f, *args, **kwargs):
+        read.append(Path(f).name)
+        return real_read_file(self, f, *args, **kwargs)
 
-    monkeypatch.setattr(pq, "read_table", spy)
+    monkeypatch.setattr(ParquetEntry, "_read_file", spy)
 
     def hashes(nums):
         return {mock(n).num(n).hash for n in nums}

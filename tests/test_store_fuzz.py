@@ -16,12 +16,16 @@ from __future__ import annotations
 import tempfile
 from pathlib import Path
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from eth_event_tracker_spark.sources.mock_chain import mock
-from eth_event_tracker_spark.store import ParquetStore
+from eth_event_tracker_spark.store import ParquetEntry, ParquetStore
 from eth_event_tracker_spark.store.inmem_store import InMemStore
+from eth_event_tracker_spark.store.parquet_store import _MERGE_FANIN, _TIER_FILE
+
+_BUCKET = _MERGE_FANIN  # the smallest bucket that can fill a tier
 
 # an op is one of:
 #   ("append", n_logs, topics_mode)   topics_mode: 0 normal, 1 empty, 2 none
@@ -50,12 +54,19 @@ def _mk_logs(tag: int, n: int, num: int, topics_mode: int) -> list[dict]:
     return logs
 
 
-def _run_ops(ops, make_store, reopen):
+def _run_ops(ops, make_store, reopen, prefix=0):
+    """Apply ``prefix`` one-row appends, then ``ops``; the store must
+    agree with the model after every op."""
     store = make_store()
-    entry = store.entry("f1", bucket_size=4)  # small buckets: force spans
+    entry = store.entry("f1", bucket_size=_BUCKET)  # small buckets: force spans
     model = InMemStore()
     m_entry = model.entry("f1")
     blk = 0
+    for i in range(prefix):
+        blk += 1
+        logs = _mk_logs(0x80 + i, 1, blk, 0)
+        entry.store_logs([dict(lg) for lg in logs])
+        m_entry.store_logs([dict(lg) for lg in logs])
     for step, op in enumerate(ops):
         if op[0] == "append":
             _, n, tmode = op
@@ -86,15 +97,27 @@ def _run_ops(ops, make_store, reopen):
 
 
 @settings(max_examples=20, deadline=None)
-@given(ops=_OPS)
-def test_parquet_store_matches_inmem_model(ops):
-    with tempfile.TemporaryDirectory() as tmp:
+@given(ops=_OPS, prefix=st.integers(2 * _MERGE_FANIN, 5 * _MERGE_FANIN))
+def test_parquet_store_matches_inmem_model(ops, prefix):
+    """Each example starts with ``prefix`` one-row appends, which fill at
+    least two buckets with ``_MERGE_FANIN`` tier-0 files each, so the
+    random ops run over tier-merged buckets (and may merge again)."""
+    merges = []
+    real_merge = ParquetEntry._merge_files
+
+    def counting(self, k, names, target, *args):
+        merges.append(target)
+        return real_merge(self, k, names, target, *args)
+
+    with tempfile.TemporaryDirectory() as tmp, pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ParquetEntry, "_merge_files", counting)
 
         def reopen(old):
             s = ParquetStore(Path(tmp))
-            return s, s.entry("f1", bucket_size=4)
+            return s, s.entry("f1", bucket_size=_BUCKET)
 
-        _run_ops(ops, lambda: ParquetStore(Path(tmp)), reopen)
+        _run_ops(ops, lambda: ParquetStore(Path(tmp)), reopen, prefix)
+    assert sum(bool(_TIER_FILE.fullmatch(t)) for t in merges) >= 2
 
 
 @settings(max_examples=10, deadline=None)

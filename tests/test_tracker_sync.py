@@ -228,6 +228,14 @@ def test_distributed_bulk_backfill_matches_driver_path(tmp_path, spark):
     assert [r["tx_hash"] for r in t2.entry.all_logs()] == [
         lg["tx_hash"] for lg in chain_logs(prov)
     ]
+    # a reorg rolls back a bucket that mixes the Spark-written bulk files
+    # with the head path's pyarrow files
+    prov.fork(3, logs_per_block=1)
+    events = t2.poll()
+    assert sum(len(e.removed) for e in events) == 3
+    rows = t2.entry.all_logs()
+    assert [r["tx_hash"] for r in rows] == [lg["tx_hash"] for lg in chain_logs(prov)]
+    assert [r["indx"] for r in rows] == list(range(len(rows)))
 
 
 def test_sync_progress_monotonic(tmp_path):

@@ -2,16 +2,19 @@
 the working tree, in alternating order.
 
     python3 tools/perf_ab.py --base HEAD --workload head_follow --pairs 10 --seed0 11
-    make perf-ab W=head_follow BASE=HEAD PAIRS=10
+    make perf-ab W=head_follow BASE=HEAD PAIRS=10 [TRACE=1]
 
 The base revision's committed files are extracted (``git archive``) into
 a fresh temporary directory, which is deleted afterwards.  Pair ``i``
-runs ``perfbench/run.py --trace 0`` once on each side with seed
-``seed0 + i`` and the run length of ``BENCHMARK.json``; even pairs run
-the base first, odd pairs the change.  Prints every run's end-to-end
-metrics, then per metric each side's median, the base's interquartile
-spread and how many pairs the change won (ties count for neither side).
-Exits 1 when any run failed or reported incorrect output.
+runs ``perfbench/run.py`` once on each side with seed ``seed0 + i`` and
+the run length of ``BENCHMARK.json``; even pairs run the base first, odd
+pairs the change.  Prints every run's metrics, then per metric each
+side's median, the base's interquartile spread and how many pairs the
+change won (ties count for neither side).  The metrics are the
+end-to-end ones of ``BENCHMARK.json``, or with ``--trace 1`` its
+per-layer ones (traced runs; metrics that read 0 in every run are left
+out), which shows in which layer a change saves or costs.  Exits 1 when
+any run failed or reported incorrect output.
 """
 
 from __future__ import annotations
@@ -36,10 +39,10 @@ def _extract(rev: str, dest: Path) -> None:
         raise SystemExit(f"git archive {rev} failed")
 
 
-def _run(checkout: Path, workload: str, seed: int, seconds: float) -> dict:
-    """One untraced run; its last stdout line, or a failed record."""
+def _run(checkout: Path, workload: str, seed: int, seconds: float, trace: int) -> dict:
+    """One run; its last stdout line, or a failed record."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     try:
@@ -63,11 +66,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed0", type=int, required=True)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: traced runs, per-layer metrics")
     args = ap.parse_args(argv)
 
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     seconds = spec["run_seconds"]
-    better = {m["name"]: m["better"] for m in spec["end_to_end"]}
+    better = {m["name"]: m["better"] for m in spec["per_layer" if args.trace else "end_to_end"]}
     runs: dict[str, list[dict]] = {"base": [], "change": []}
     base_dir = Path(tempfile.mkdtemp(prefix="perf-ab-"))
     try:
@@ -76,10 +81,10 @@ def main(argv: list[str] | None = None) -> int:
         for i in range(args.pairs):
             seed = args.seed0 + i
             for side in ("base", "change") if i % 2 == 0 else ("change", "base"):
-                out = _run(checkouts[side], args.workload, seed, seconds)
+                out = _run(checkouts[side], args.workload, seed, seconds, args.trace)
                 runs[side].append(out)
                 shown = " ".join(
-                    f"{k}={v['value']:.4g}" for k, v in sorted(out["metrics"].items())
+                    f"{k}={v['value']:.4g}" for k, v in sorted(out["metrics"].items()) if v["value"]
                 )
                 print(f"pair {i} {side:6s} seed={seed} correct={out['correct']} "
                       f"failed={out['failed']} {shown}", flush=True)
@@ -91,15 +96,18 @@ def main(argv: list[str] | None = None) -> int:
         print("some runs failed or reported incorrect output; no summary")
         return 1
     print(f"\n{args.workload}: {args.pairs} pairs, base {args.base} vs working tree")
-    print(f"{'metric':18s} {'base median':>12s} {'change median':>14s} "
+    width = max(len(n) for n in better)
+    print(f"{'metric':{width}s} {'base median':>12s} {'change median':>14s} "
           f"{'base IQR':>10s} {'change wins':>12s}")
     for name in sorted(better):
         b = [r["metrics"][name]["value"] for r in runs["base"]]
         c = [r["metrics"][name]["value"] for r in runs["change"]]
+        if not any(b) and not any(c):
+            continue
         sign = 1 if better[name] == "higher" else -1
         wins = sum(sign * (cv - bv) > 0 for bv, cv in zip(b, c))
         q1, q3 = _quartiles(b)
-        print(f"{name:18s} {statistics.median(b):12.4g} {statistics.median(c):14.4g} "
+        print(f"{name:{width}s} {statistics.median(b):12.4g} {statistics.median(c):14.4g} "
               f"{q3 - q1:10.4g} {wins:>8d}/{len(b)}")
     return 0
 
