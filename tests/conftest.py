@@ -22,6 +22,29 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def registry_plan(spark):
+    """``registry_plan(name, sf_dir)``: the formatted physical plan of a
+    registry entry, built once per (entry, sf_dir) in the session.  The
+    plan audits of test_plan_sweep.py and test_plans.py read the same
+    plans, and building one runs the entry's driver-side jobs (k-means
+    fits, PQ training), so each is built once, not once per audit."""
+    from eth_event_tracker_spark.queries import all_queries
+
+    fns = all_queries()
+    plans: dict[tuple[str, str], str] = {}
+
+    def plan(name: str, sf: str) -> str:
+        if (name, sf) not in plans:
+            df = fns[name](spark, sf)
+            plans[name, sf] = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        return plans[name, sf]
+
+    return plan
+
+
+@pytest.fixture(scope="session")
 def duck():
     import duckdb
 

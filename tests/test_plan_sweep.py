@@ -25,10 +25,7 @@ FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 
 
 @pytest.mark.parametrize("name", sorted(entry.queries()))
-def test_plan_has_no_scale_killers(spark, name):
-    df = entry.queries()[name](spark, "/root/testdata/sf0.001")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+def test_plan_has_no_scale_killers(registry_plan, name):
+    plan = registry_plan(name, "/root/testdata/sf0.001")
     hits = [p for p in FORBIDDEN if p in plan]
     assert not hits, f"{name}: {hits}\n{plan[:2000]}"

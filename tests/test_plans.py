@@ -158,12 +158,12 @@ def test_q5_all_dims_broadcast(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 3  # supplier, nation, region
 
 
-def test_global_scalars_are_not_single_partition_windows(spark, sf_dir):
+def test_global_scalars_are_not_single_partition_windows(registry_plan, sf_dir):
     """Global scalar max must be agg + broadcast cross join — an
     empty-partitionBy window would move the entire fact table into one
     task before filtering (the round-1 scale-killer)."""
     for name in ("logs_tail_truncate", "logs_finality_split"):
-        plan = plan_of(REGISTRY[name].fn(spark, sf_dir))
+        plan = registry_plan(name, sf_dir)
         assert "Window" not in plan, f"{name}: global scalar must not use a window"
         assert "BroadcastNestedLoopJoin" in plan, f"{name}: scalar must be broadcast"
 
@@ -176,14 +176,14 @@ def test_derived_blocks_no_global_window(spark, sf_dir):
         assert "Window" not in plan
 
 
-def test_indx_assignment_two_phase_value_keyed(spark, sf_dir):
+def test_indx_assignment_two_phase_value_keyed(registry_plan, sf_dir):
     """The driver-verified indx query must run the scale plan: per-block
     offsets + within-block row_number, NOT a single-reducer global sort.
     The fact table's window must partition on block_num (value-keyed —
     deterministic across re-evaluations, unlike spark_partition_id over
     sampled range boundaries); the only SinglePartition step allowed is
     the cumulative window over the tiny per-block counts."""
-    plan = plan_of(REGISTRY["logs_indx_assignment"].fn(spark, sf_dir))
+    plan = registry_plan("logs_indx_assignment", sf_dir)
     assert "partition_id" not in plan.lower()
     # the fact-side window is keyed by block_num
     assert "hashpartitioning(block_num" in plan
@@ -191,71 +191,71 @@ def test_indx_assignment_two_phase_value_keyed(spark, sf_dir):
     assert plan.count("Exchange SinglePartition") <= 1
 
 
-def test_decontamination_broadcast_semi_join(spark, sf_dir):
+def test_decontamination_broadcast_semi_join(registry_plan, sf_dir):
     """The eval gram set must reach the train side as a broadcast
     left-semi join — a sort-merge join would shuffle the 100 TB train
     gram table on the gram key."""
-    plan = plan_of(REGISTRY["decontamination_ngram"].fn(spark, sf_dir))
+    plan = registry_plan("decontamination_ngram", sf_dir)
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_exact_similarity_no_position_shuffle(spark, sf_dir):
+def test_exact_similarity_no_position_shuffle(registry_plan, sf_dir):
     """The exact cosine tiers must compute dot products row-locally
     (zip_with + decimal aggregate) with the small side broadcast — not
     posexplode + a 64-key position join, which shuffles Q*N*d rows
     through a skewed exchange."""
     for name in ("embedding_cosine_topk", "embedding_near_dup"):
-        plan = plan_of(REGISTRY[name].fn(spark, sf_dir))
+        plan = registry_plan(name, sf_dir)
         assert "BroadcastNestedLoopJoin" in plan, name
         assert "SortMergeJoin" not in plan, name
         assert "Generate" not in plan, f"{name}: no posexplode in the dot product"
 
 
-def test_sample_stratified_no_shuffle(spark, sf_dir):
+def test_sample_stratified_no_shuffle(registry_plan, sf_dir):
     """Hash sampling is a single filtered scan: no Exchange anywhere in
     the plan — the mixture CASE is a literal expression, not a join."""
-    plan = plan_of(REGISTRY["sample_stratified"].fn(spark, sf_dir))
+    plan = registry_plan("sample_stratified", sf_dir)
     assert "Exchange" not in plan, "sampling must not shuffle"
     assert "Join" not in plan, "mixture rates must be literals, not a join"
 
 
-def test_doc_pipeline_packing_is_shard_windowed(spark, sf_dir):
+def test_doc_pipeline_packing_is_shard_windowed(registry_plan, sf_dir):
     """Sequence packing must window per hash shard — a global (empty
     partitionBy) running sum would single-partition the whole chunk
     manifest."""
-    plan = plan_of(REGISTRY["doc_pipeline"].fn(spark, sf_dir))
+    plan = registry_plan("doc_pipeline", sf_dir)
     assert "hashpartitioning(shard" in plan, "packing window must partition by shard"
     assert "Exchange SinglePartition" not in plan
 
 
-def test_multimodal_features_plan_is_jvm_only(spark, sf_dir):
+def test_multimodal_features_plan_is_jvm_only(registry_plan, sf_dir):
     """The registered multimodal feature path is native column expressions
     (length/substring/sha2 on binary) — no Python evaluation operator and
     no shuffle anywhere in its physical plan.  The mapInPandas decoder
     seam (decode_features) is a separate, pytest-pinned function."""
-    plan = plan_of(REGISTRY["multimodal_features"].fn(spark, sf_dir))
+    plan = registry_plan("multimodal_features", sf_dir)
     for marker in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
         assert marker not in plan, f"Python operator {marker} in multimodal_features plan"
     assert "Exchange" not in plan, "feature extraction must not shuffle"
 
 
-def test_stats_unpivot_broadcasts_dim_and_generates(spark, sf_dir):
+def test_stats_unpivot_broadcasts_dim_and_generates(registry_plan, sf_dir):
     """The unpivot query: nation dim reaches customer via broadcast (no
     SortMergeJoin) and stack() compiles to a Generate over the tiny
     aggregated table — never over the fact table."""
-    plan = plan_of(REGISTRY["stats_unpivot"].fn(spark, sf_dir))
+    plan = registry_plan("stats_unpivot", sf_dir)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "Generate" in plan
 
 
-def test_dedup_spans_agg_shuffles_topk(spark, sf_dir):
+def test_dedup_spans_agg_shuffles_topk(registry_plan, sf_dir):
     """Span dedup: explode → the standard two-phase exact count-distinct
     (partial on (chunk, doc_id), merge, final on chunk — at most 3
     exchanges, all partial-aggregated) → TakeOrdered top-25 (no global
     sort, no join)."""
-    plan = plan_of(REGISTRY["dedup_spans"].fn(spark, sf_dir))
+    plan = registry_plan("dedup_spans", sf_dir)
     assert "TakeOrdered" in plan, "top-25 must be TakeOrdered, not Sort+Limit"
     assert "Join" not in plan
     # formatted explain lists every node twice (tree + detail section)
@@ -364,10 +364,10 @@ _ARROW_SEAM_OK = {
 }
 
 
-def test_registry_wide_plan_lint(spark, sf_dir):
+def test_registry_wide_plan_lint(registry_plan, sf_dir):
     bad: list[str] = []
-    for name, q in REGISTRY.items():
-        plan = plan_of(q.fn(spark, sf_dir))
+    for name in REGISTRY:
+        plan = registry_plan(name, sf_dir)
         if "CartesianProduct" in plan:
             bad.append(f"{name}: CartesianProduct")
         if "BatchEvalPython" in plan:

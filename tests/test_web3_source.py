@@ -4,6 +4,7 @@ with checkpoint resume, filter pushdown, finality holdback, AIMD pacing."""
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 
@@ -50,38 +51,34 @@ def test_batch_filter_pushdown(registered, chain):
 
 
 def _drain(q, timeout=120):
-    """Run a continuously-triggered stream until the engine reports no
-    available data and no active trigger (stable for ~2s), then stop."""
+    """Run a continuously-triggered stream until a trigger finds no new
+    data and every batch before it is committed, then stop it."""
     _drain_all([q], timeout)
 
 
 def _drain_all(queries, timeout=120):
-    """:func:`_drain` for several live queries at once: each is stopped
-    as soon as it has been idle for ~2s (or has terminated), and they are
-    polled together, so their idle waits overlap instead of adding up."""
-    import time
+    """:func:`_drain` for several live queries at once.  Each query waits
+    in ``processAllAvailable`` (the engine's own "caught up" signal: a
+    trigger that planned no batch, so no fixed idle window is paid) on
+    its own thread and is stopped as soon as it returns, so the waits
+    overlap instead of adding up.  Queries still busy after ``timeout``
+    seconds are stopped; a failed query's error is raised."""
+    import threading
 
-    t0 = time.time()
-    stable = dict.fromkeys(range(len(queries)), 0)  # the queries still draining
-    while stable and time.time() - t0 < timeout:
-        for i in [i for i in stable if not queries[i].isActive]:
-            del stable[i]  # already terminated — awaitTermination surfaces any error
-        if not stable:
-            break
-        time.sleep(0.5)
-        for i in list(stable):
-            q, st = queries[i], queries[i].status
-            if (
-                q.lastProgress is not None
-                and not st["isDataAvailable"]
-                and not st["isTriggerActive"]
-            ):
-                stable[i] += 1
-                if stable[i] == 4:
-                    del stable[i]
-                    q.stop()
-            else:
-                stable[i] = 0
+    def drain(q):
+        try:
+            q.processAllAvailable()
+        except Exception:
+            pass  # a failed query: awaitTermination below raises its error
+        finally:
+            q.stop()
+
+    threads = [threading.Thread(target=drain, args=(q,), daemon=True) for q in queries]
+    for t in threads:
+        t.start()
+    deadline = time.time() + timeout
+    for t in threads:
+        t.join(max(0.0, deadline - time.time()))
     for q in queries:
         q.stop()
         q.awaitTermination(30)
