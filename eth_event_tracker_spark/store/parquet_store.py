@@ -7,7 +7,7 @@ Spark-readable parquet layout:
     root/
       kv.json                       # KV metadata (Get/Set/ListPrefix)
       entries/<filter_hash>/
-        meta.json                   # {"last_index": N}
+        meta.json                   # {"last_index": N} + an intent
         bucket=<k>/part-*.parquet   # k = indx // bucket_size
 
 Why this layout scales:
@@ -40,6 +40,16 @@ produce the same layout.
 Durability contract matches the reference: StoreLogs persists before the
 checkpoint advances (tracker.go:369-382), so a crash between the two
 replays a suffix — dedupable by deterministic (block_hash, log_index).
+
+On an append the data files are the source of truth: a reopen takes the
+max of ``meta.json``'s ``last_index`` and the footer scan, so appends
+never rewrite ``meta.json``.  It is written when the entry is created
+and otherwise holds only what the data cannot say: the truncate intent
+(``remove_logs``, committed before its deletes) and the merge intent
+(``_merge_files``), and the floors below which ``last_index`` must not
+fall although the rows that set it are gone — the one ``remove_logs``
+leaves and the one ``compact_changelog`` commits, since it can prune the
+row with the largest ``indx``.
 """
 
 from __future__ import annotations
@@ -192,6 +202,7 @@ class ParquetEntry:
                 self._last_index = max(meta, self._scan_last_index())
         else:
             self._last_index = self._scan_last_index()
+            self._commit_meta()
 
     # -- LastIndex (store/store.go:25-26) -----------------------------------
     def last_index(self) -> int:
@@ -248,9 +259,9 @@ class ParquetEntry:
         with LastIndex()+i (postgresql_store.go:111-130). Returns the
         indexed rows.
 
-        Each bucket the batch touches gets one tier-0 file; after the
-        meta commit, the bucket's full tiers are merged
-        (:meth:`_merge_tiers`)."""
+        Each bucket the batch touches gets one tier-0 file; then the
+        bucket's full tiers are merged (:meth:`_merge_tiers`).  The files
+        are the commit: ``meta.json`` is not rewritten."""
         if not logs:
             return []
         rows = []
@@ -271,7 +282,6 @@ class ParquetEntry:
             pq.write_table(t, d / name)
             self._head_tiers(k)[name] = t
         self._last_index += len(rows)
-        self._commit_meta()
         for k in sorted(by_bucket):
             self._merge_tiers(k)
         return rows
@@ -350,8 +360,22 @@ class ParquetEntry:
         column: range filters on ``indx``/``block_num`` prune by parquet
         row-group statistics.  Unordered — an orderBy here would force a
         global sort exchange on every read; callers that need the
-        sequence order by ``indx``."""
-        return self._read(spark, self._buckets())
+        sequence order by ``indx``.
+
+        An entry whose files total at most ``spark.sql.files.openCostInBytes``
+        is read as one partition: Spark prices opening one file at that
+        many bytes, so splitting less data cannot pay, and a single
+        partition needs no exchange for any grouping or window over it
+        (the head path's view refresh runs as one job).
+
+        The DataFrame holds the file list of the moment it was built:
+        after a later append, truncation or compaction, build a new one
+        (re-running it may read files that were since replaced)."""
+        buckets = self._buckets()
+        df = self._read(spark, buckets)
+        open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+        size = sum(f.stat().st_size for k in buckets for f in self._bucket_files(k))
+        return df.coalesce(1) if size <= open_cost else df
 
     @functools.cached_property
     def _spark_schema(self):
@@ -374,8 +398,8 @@ class ParquetEntry:
     def append_df(self, df) -> int:
         """Bulk path: append a Spark DataFrame of raw logs (no indx).
         Distributed write — assigns indx via the scalable two-phase
-        sequence, partitions by bucket, then advances the meta counter.
-        Returns rows appended."""
+        sequence and partitions by bucket; like ``store_logs`` it leaves
+        ``meta.json`` alone.  Returns rows appended."""
         from pyspark.sql import functions as F  # noqa: N812
 
         from ..operators.indexing import assign_indx_scalable
@@ -392,7 +416,6 @@ class ParquetEntry:
         indexed.write.mode("append").partitionBy("bucket").parquet(str(self.path))
         indexed.unpersist()
         self._last_index = base + n
-        self._commit_meta()
         return n
 
     def _tail_start(self, column: str, in_tail) -> tuple[int | None, list[Path]]:
@@ -626,6 +649,9 @@ class ParquetEntry:
             for p in staging.iterdir()
             if p.is_dir() and p.name.startswith("bucket=")
         }
+        # the pruned rows may include the one with the largest indx: the
+        # footer scan of a reopen would then fall short of last_index
+        self._commit_meta()
         (staging / "_COMMIT").touch()
         # buckets whose every row was pruned are deleted only AFTER the
         # commit marker: deleting them earlier opened a crash window

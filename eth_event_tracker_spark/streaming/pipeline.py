@@ -143,18 +143,18 @@ def current_view(changelog: DataFrame) -> DataFrame:
     rows whose latest change is an 'add' (reorged-out rows have a later
     'remove'). Keyed on the natural chain position key.
 
-    The changelog is hash-partitioned by ``block_hash`` alone before the
-    window: that one exchange satisfies the window's clustering on the
-    natural key and also any later grouping whose keys include
-    ``block_hash`` (the head refresh's per-block count), so such a
-    consumer shuffles once instead of twice.  Every other consumer pays
-    the one exchange the window needed anyway."""
-    w = Window.partitionBy(*NATURAL_KEY).orderBy(F.desc("indx"))
+    The window is partitioned by ``block_hash`` alone and keeps each
+    natural key's first row in ``(tx_index, log_index, indx desc)``
+    order, its latest change.  Over several partitions Spark places one
+    ``block_hash`` exchange, which also serves any later grouping whose
+    keys include ``block_hash`` (the head refresh's per-block count);
+    over one partition (a small ``ParquetEntry.df``) it places none."""
+    w = Window.partitionBy("block_hash").orderBy("tx_index", "log_index", F.desc("indx"))
+    pos = F.struct("tx_index", "log_index")
     return (
-        changelog.repartition("block_hash")
-        .withColumn("_rn", F.row_number().over(w))
-        .where((F.col("_rn") == 1) & (F.col("change_type") == "add"))
-        .drop("_rn", "change_type")
+        changelog.withColumn("_first", ~F.lag(pos).over(w).eqNullSafe(pos))
+        .where(F.col("_first") & (F.col("change_type") == "add"))
+        .drop("_first", "change_type")
     )
 
 

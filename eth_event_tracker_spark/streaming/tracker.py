@@ -6,14 +6,24 @@ Execution model mapping (SURVEY §3):
                        backfill with AIMD pacing up to head−backlog, then
                        head catch-up through the reconcile window.
   - ``poll()``       = the continuous phase: one head observation →
-                       reconcile → apply diff (handleBlockEvnt/doFilter).
-  - checkpoint       = KV ``lastBlock_<filter_hash>`` + persisted head
-                       window (the reference stores only the last block,
+                       reconcile each new header → apply the diffs
+                       (handleBlockEvnt/doFilter) as one batch.
+  - checkpoint       = persisted head window + KV ``lastBlock_<filter_hash>``
+                       (the reference stores only the last block,
                        tracker.go:237-247; persisting the whole ≤10-block
-                       window makes restart-time reorg repair exact).
+                       window makes restart-time reorg repair exact).  The
+                       window is written first: ``sync()`` resumes from
+                       the max of the two, so a crash between the writes
+                       cannot leave a block to be fetched twice.
   - events           = returned ChangelogEvent(added, removed) lists; the
                        durable store is written *before* the checkpoint
-                       advances, exactly like tracker.go:369-382.
+                       advances, exactly like tracker.go:369-382.  As the
+                       reference commits one StoreLogs and one checkpoint
+                       per synced batch, a poll (and the head phase of
+                       ``sync()``) makes one entry write for all its blocks
+                       and one checkpoint, so a crash leaves at most one
+                       poll's rows above the checkpoint, which the restart
+                       drops (``truncate_above_block``).
 
 Every mutable piece here is O(backlog) driver state; all data-scale work
 (append/truncate/scan) happens in the parquet entry store, readable as a
@@ -22,12 +32,13 @@ Spark DataFrame with partition pruning.
 
 from __future__ import annotations
 
+import itertools
 import json
 import time
 from dataclasses import dataclass, field
 
 from ..config import KEY_CHAIN_ID, KEY_GENESIS, FilterConfig, key_filter, key_last_block
-from ..reorg import BlockDiff, HeadWindow, ReorgTooDeepError, reconcile
+from ..reorg import HeadWindow, ReorgTooDeepError, reconcile
 from ..sources.mock_chain import Header, TooMuchDataError
 from ..sources.rpc_provider import RpcError
 from ..store import ParquetStore
@@ -113,15 +124,29 @@ class Tracker:
 
     # -- S-11: checkpoint (storeLastBlock/GetLastBlock, tracker.go:218-247) -
     def _commit_checkpoint(self, head: Header) -> None:
-        self.store.set(key_last_block(self.config.filter_hash), _header_to_json(head))
+        # window first: a crash before the lastBlock write resumes from the
+        # window tail; the other order would resume one block (one poll)
+        # behind the stored rows and store that block's logs again
         self.store.set(
             f"headWindow_{self.config.filter_hash}",
             json.dumps([_header_to_json(b) for b in self.window.blocks]),
         )
+        self.store.set(key_last_block(self.config.filter_hash), _header_to_json(head))
 
     def get_last_block(self) -> Header | None:
         s = self.store.get(key_last_block(self.config.filter_hash))
         return _header_from_json(s) if s else None
+
+    def _checkpoint_height(self) -> int:
+        """The height a restart resumes after: the MAX of the head-window
+        tail and the lastBlock checkpoint.  A crash mid-bulk leaves the
+        persisted window empty/stale while _sync_batch advanced lastBlock
+        per batch; resuming from the window alone would re-sync from 0 and
+        append duplicates.  The reference resumes from last.Number+1
+        (tracker.go:646)."""
+        last = self.get_last_block()
+        window_tail = self.window.blocks[-1].number if self.window.blocks else -1
+        return max(window_tail, last.number if last else -1)
 
     # -- C-5: progress reporting --------------------------------------------
     def _report(self, phase: str, height: int, target: int, synced: bool = False) -> None:
@@ -234,24 +259,54 @@ class Tracker:
         self.entry.remove_logs(boundary)
         return victims  # oldest-first (A-3, revertLogs tracker.go:756-761)
 
-    # -- A-4: apply one block diff (doFilter, tracker.go:786-829) -----------
-    def _apply_diff(self, diff: BlockDiff) -> ChangelogEvent:
-        evnt = ChangelogEvent()
-        if diff.removed:
-            evnt.removed = self._rollback(diff.removed)
-        for hdr in diff.added:
-            logs = self._logs_by_hash(hdr.hash)
-            evnt.added.extend(self.entry.store_logs(logs))
-        if diff.added:
-            self._commit_checkpoint(diff.added[-1])
-        return evnt
+    # -- A-4: apply block diffs (doFilter, tracker.go:786-829) --------------
+    def _apply_heads(self, headers) -> tuple[list[ChangelogEvent], Header | None]:
+        """Reconcile each header of ``headers`` (an iterable, consumed
+        lazily) and fetch the logs of the blocks it adds; store them all
+        with one ``store_logs`` and commit one checkpoint.  Returns one
+        event per non-empty diff (the same rows, ``indx`` and order as
+        applying the headers one at a time) and the last header applied,
+        or None when every diff was empty.
+
+        A diff that removes blocks first stores the adds still pending,
+        since the rolled-back blocks may be among them."""
+        events: list[ChangelogEvent] = []
+        pending: list[tuple[ChangelogEvent, int]] = []  # (event, logs it adds)
+        logs: list[dict] = []
+
+        def flush() -> None:
+            stored = self.entry.store_logs(logs) if logs else []
+            i = 0
+            for ev, n in pending:
+                ev.added = stored[i : i + n]
+                i += n
+            pending.clear()
+            logs.clear()
+
+        last = None
+        for hdr in headers:
+            diff = reconcile(self.window, hdr, self.provider.get_block_by_hash)
+            if diff.empty:
+                continue
+            ev = ChangelogEvent()
+            if diff.removed:
+                flush()
+                ev.removed = self._rollback(diff.removed)
+            before = len(logs)
+            for added in diff.added:
+                logs.extend(self._logs_by_hash(added.hash))
+            pending.append((ev, len(logs) - before))
+            events.append(ev)
+            last = hdr
+        flush()
+        if last is not None:
+            self._commit_checkpoint(last)
+        return events, last
 
     # -- head event handling (handleBlockEvnt, tracker.go:763-784) ----------
     def handle_head(self, incoming: Header) -> ChangelogEvent | None:
-        diff = reconcile(self.window, incoming, self.provider.get_block_by_hash)
-        if diff.empty:
-            return None
-        return self._apply_diff(diff)
+        events, _ = self._apply_heads([incoming])
+        return events[0] if events else None
 
     # -- restart-time reorg repair (tracker.go:627-666) ---------------------
     def _repair_on_restart(self) -> ChangelogEvent | None:
@@ -299,24 +354,19 @@ class Tracker:
         self.pre_sync_check()
         events: list[ChangelogEvent] = []
         if self.get_last_block() is not None:
+            # The append protocol stores logs BEFORE committing the
+            # checkpoint, so a crash in between leaves ≤ one batch (one
+            # poll) of rows above the checkpoint in the entry; drop them
+            # so the re-fetch can't duplicate (they were never exposed past
+            # a committed checkpoint, so no retraction event is owed).
+            # Dropping them before the repair lets its tail walk reach the
+            # committed rows of blocks that forked out while we were down.
+            self.entry.truncate_above_block(self._checkpoint_height())
             repair = self._repair_on_restart()
             if repair:
                 events.append(repair)
-            # Resume from the MAX of the head-window tail and the lastBlock
-            # checkpoint (re-read after repair — repair rewrites both).  A
-            # crash mid-bulk leaves the persisted window empty/stale while
-            # _sync_batch advanced lastBlock per batch; resuming from the
-            # window alone would re-sync from 0 and append duplicates.  The
-            # reference resumes from last.Number+1 (tracker.go:646).
-            last = self.get_last_block()
-            window_tail = self.window.blocks[-1].number if self.window.blocks else -1
-            origin = max(window_tail, last.number if last else -1) + 1
-            # The append protocol stores logs BEFORE committing the
-            # checkpoint, so a crash in between leaves ≤ one batch of rows
-            # above `origin-1` in the entry; drop them so the re-fetch
-            # can't duplicate (they were never exposed past a committed
-            # checkpoint, so no retraction event is owed)
-            self.entry.truncate_above_block(origin - 1)
+            # re-read after repair — repair rewrites both
+            origin = self._checkpoint_height() + 1
         else:
             origin = self._fast_track()  # O-2 skip-scan / S-3 probe
         target = self.provider.latest()
@@ -340,35 +390,36 @@ class Tracker:
             self._commit_checkpoint(hdr)
             origin = bulk_end + 1
             target = self.provider.latest()  # head may have moved (tracker.go:683-697)
-        # HEAD phase: remaining ≤ backlog blocks through the reconcile window
-        for n in range(origin, target.number + 1):
-            hdr = self.provider.get_block_by_number(n)
-            if hdr is None:
-                break
-            ev = self.handle_head(hdr)
-            if ev is not None:
-                events.append(ev)
-            self._report("head", n, target.number)
+        # HEAD phase: remaining ≤ backlog blocks through the reconcile
+        # window, one entry write and one checkpoint for all of them
+        headers = itertools.takewhile(
+            lambda h: h is not None,
+            map(self.provider.get_block_by_number, range(origin, target.number + 1)),
+        )
+        head_events, last = self._apply_heads(headers)
+        events.extend(head_events)
+        if last is not None:
+            self._report("head", last.number, target.number)
         self._report("synced", target.number, target.number, synced=True)
         return events
 
     # -- continuous phase: one poll of the head -----------------------------
     def poll(self) -> list[ChangelogEvent]:
         target = self.provider.latest()
-        events: list[ChangelogEvent] = []
         known = self.window.hashes()
         if target.hash in known:
-            return events
+            return []
         start = (self.window.blocks[-1].number + 1) if self.window.blocks else 0
         start = min(start, target.number)
-        for n in range(start, target.number + 1):
-            hdr = self.provider.get_block_by_number(n)
-            if hdr is None or hdr.hash in known:
-                continue
-            ev = self.handle_head(hdr)
-            if ev is not None:
-                events.append(ev)
-            self._report("poll", n, target.number, synced=True)
+        headers = (
+            hdr
+            for hdr in map(self.provider.get_block_by_number, range(start, target.number + 1))
+            if hdr is not None and hdr.hash not in known
+        )
+        events, last = self._apply_heads(headers)
+        if last is not None:
+            # only now are the rows and the checkpoint of its height committed
+            self._report("poll", last.number, target.number, synced=True)
         return events
 
 

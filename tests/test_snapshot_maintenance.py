@@ -67,15 +67,17 @@ def test_maintenance_refreshes_snapshot_and_reads_identical(spark, tmp_path):
     served = views_as_of_maintained(spark, clog, instants, sdir)
     # the fast path actually reads the maintained snapshot parquet
     assert any("data-" in f for f in served.inputFiles())
-    full = views_as_of(
-        clog.df(spark), instants, exact_from=clog.time_travel_horizon() or None
+    # collected once: a DataFrame snapshots the entry's file list, and the
+    # maintenance below replaces the files it would re-read
+    full = _rows(
+        views_as_of(clog.df(spark), instants, exact_from=clog.time_travel_horizon() or None)
     )
-    assert _rows(served) == _rows(full)
+    assert _rows(served) == full
 
     # idempotent re-maintenance (same horizon) rebuilds the same position
     stats2 = maintain_changelog(spark, clog, t, snapshot_dir=sdir)
     assert stats2["snapshot_pos"] == pos
-    assert _rows(views_as_of_maintained(spark, clog, instants, sdir)) == _rows(full)
+    assert _rows(views_as_of_maintained(spark, clog, instants, sdir)) == full
 
 
 def test_stale_snapshot_refused_after_unswapped_compaction(spark, tmp_path):
@@ -112,17 +114,18 @@ def test_stale_snapshot_refused_after_unswapped_compaction(spark, tmp_path):
     served = views_as_of_maintained(spark, clog, instants, sdir)
     # fallback: the stale snapshot parquet is NOT in the plan
     assert not any("data-" in f for f in served.inputFiles())
-    full = views_as_of(
-        clog.df(spark), instants, exact_from=clog.time_travel_horizon() or None
+    # collected once, before the maintenance replaces the files it reads
+    full = _rows(
+        views_as_of(clog.df(spark), instants, exact_from=clog.time_travel_horizon() or None)
     )
-    assert _rows(served) == _rows(full)
+    assert _rows(served) == full
 
     # re-running maintenance heals: fresh snapshot, fast path again
     stats2 = maintain_changelog(spark, clog, t, snapshot_dir=sdir)
     assert stats2["snapshot_pos"] > pos0
     served2 = views_as_of_maintained(spark, clog, instants, sdir)
     assert any("data-" in f for f in served2.inputFiles())
-    assert _rows(served2) == _rows(full)
+    assert _rows(served2) == full
 
 
 def test_torn_or_old_instant_paths_fall_back(spark, tmp_path):

@@ -5,6 +5,7 @@ monotonicity, truncate-then-reappend."""
 
 from __future__ import annotations
 
+import re
 import uuid
 from pathlib import Path
 from urllib.parse import unquote, urlparse
@@ -237,19 +238,41 @@ def test_entry_df_reads_exactly_the_bucket_files(hundred_file_changelog, spark):
     assert read == {f.resolve() for f in clog._bucket_files(0)}
 
 
-def test_view_refresh_job_count(hundred_file_changelog, spark):
-    """The head path's view refresh over a 100-file changelog: the scan
-    into the one ``block_hash`` exchange, then the window and the count
-    behind it — no listing or footer job, no second shuffle."""
+def _view_refresh(spark, clog):
     from eth_event_tracker_spark.streaming.pipeline import current_view
 
+    return current_view(clog.df(spark)).groupBy("block_num", "block_hash").count()
+
+
+def test_view_refresh_job_count(hundred_file_changelog, spark):
+    """The head path's view refresh over a 100-file changelog smaller
+    than one file's open cost: one partition, so the scan, the window
+    and the count run as one job — no listing or footer job, no
+    shuffle."""
     clog = hundred_file_changelog
-    rows, jobs = _spark_jobs(
-        spark,
-        lambda: current_view(clog.df(spark)).groupBy("block_num", "block_hash").count().collect(),
-    )
+    rows, jobs = _spark_jobs(spark, lambda: _view_refresh(spark, clog).collect())
     assert len(rows) == 100
-    assert len(jobs) <= 2, jobs
+    assert len(jobs) <= 1, jobs
+
+
+def test_view_refresh_one_exchange_above_bound(hundred_file_changelog, spark):
+    """Above ``spark.sql.files.openCostInBytes`` the entry is read split,
+    and the view refresh shuffles exactly once: the window's
+    ``block_hash`` exchange also serves the per-block count."""
+    clog = hundred_file_changelog
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        df = _view_refresh(spark, clog)
+        assert clog.df(spark).rdd.getNumPartitions() > 1
+        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        assert len(df.collect()) == 100
+    finally:
+        spark.conf.set(key, prev)
+    exchanges = [ln for ln in plan.splitlines() if re.match(r"\(\d+\) Exchange", ln)]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(block_hash" in plan
 
 
 def test_entry_crash_recovery_meta_behind(tmp_path):
@@ -437,9 +460,9 @@ def test_tier_merge_crash_at_every_step(tmp_path):
         if finished:
             break
         step += 1
-    # the append's meta commit, then per merge: intent, rename, the input
-    # deletes and the intent clear
-    assert step == 1 + 2 * (3 + _MERGE_FANIN)
+    # per merge: intent, rename, the input deletes and the intent clear
+    # (an append itself writes no meta.json)
+    assert step == 2 * (3 + _MERGE_FANIN)
 
 
 def test_tier_merge_after_truncation(tmp_path):
@@ -782,6 +805,26 @@ def test_changelog_roundtrip_and_compaction(make_store, spark):
         for r in view_as_of(clog.df(spark), last - 1, exact_from=h).collect()
     }
     assert got_at_h == want
+
+
+def test_compaction_pruning_top_row_keeps_index_across_reopen(tmp_path, spark):
+    """``compact_changelog`` can prune the row with the largest indx, and
+    appends do not rewrite ``meta.json``: the compaction commits
+    ``last_index`` itself, so a reopened entry's next append reuses no
+    indx."""
+    clog = ParquetStore(tmp_path).changelog_entry("cl")
+    adds = _logs(0x1, 2, 1)
+    clog.store_logs([{**r, "change_type": "add"} for r in adds])
+    clog.store_logs([{**r, "change_type": "add"} for r in _logs(0x2, 1, 2)])
+    clog.store_logs([{**r, "change_type": "remove"} for r in reversed(adds)])
+    assert clog.last_index() == 5
+    clog.compact_changelog(spark, finalized_below=100)  # prunes indx 0, 1, 3, 4
+    assert [r["indx"] for r in clog.all_logs()] == [2]
+    reopened = ParquetStore(tmp_path).changelog_entry("cl")
+    assert reopened.last_index() == 5
+    [row] = reopened.store_logs([{**_logs(0x3, 1, 3)[0], "change_type": "add"}])
+    assert row["indx"] == 5
+    assert [r["indx"] for r in reopened.all_logs()] == [2, 5]
 
 
 def test_empty_changelog_current_view(make_store, spark):

@@ -405,3 +405,140 @@ def test_multi_filter_resume(tmp_path):
     assert n_a + n_b == 30  # every log matched exactly one signature
     want_a = sum(1 for lg in chain_logs(prov) if lg["topics"][0] == EVENT_SIGS[0])
     assert n_a == want_a
+
+
+class _Crash(Exception):
+    pass
+
+
+class _CrashOnCheckpoint(ParquetStore):
+    """A store that crashes right after the first write whose value names
+    the block hash ``needle`` — the first write of that block's
+    checkpoint, whichever key the tracker writes first."""
+
+    def __init__(self, root, needle: str) -> None:
+        super().__init__(root)
+        self.needle = needle
+
+    def set(self, key: str, val: str) -> None:
+        super().set(key, val)
+        if self.needle in val:
+            raise _Crash
+
+
+def _assert_canonical(t, prov) -> None:
+    rows = t.entry.all_logs()
+    assert [r["tx_hash"] for r in rows] == [lg["tx_hash"] for lg in chain_logs(prov)]
+    assert [r["indx"] for r in rows] == list(range(len(rows)))
+
+
+def test_crash_between_checkpoint_writes_stores_no_block_twice(tmp_path):
+    """A crash between the two writes of a checkpoint must not leave the
+    head window behind lastBlock: a restart would then resume from
+    lastBlock while the next poll walks from the window tail and stores
+    that block's logs a second time."""
+    prov = MockProvider()
+    prov.advance(30, logs_per_block=3)
+    t = Tracker(prov, _CrashOnCheckpoint(tmp_path, prov.latest().hash), FilterConfig())
+    with pytest.raises(_Crash):
+        t.sync()
+    t2 = Tracker(prov, ParquetStore(tmp_path), FilterConfig())
+    t2.sync()
+    prov.advance(2, logs_per_block=3)
+    t2.poll()
+    _assert_canonical(t2, prov)
+
+
+def test_crash_between_poll_store_and_checkpoint(tmp_path, monkeypatch):
+    """A poll stores all its blocks' logs, then commits one checkpoint; a
+    crash in between leaves the whole poll above the checkpoint.  The
+    chain then forks below the checkpoint while the tracker is down: the
+    restart drops the uncommitted rows, retracts the committed rows of
+    the forked-out blocks, and ends on the canonical chain."""
+    prov = MockProvider()
+    prov.advance(20, logs_per_block=2)
+    t = Tracker(prov, ParquetStore(tmp_path), FilterConfig())
+    t.sync()
+    prov.advance(5, logs_per_block=2)
+
+    def crash(head):
+        raise _Crash
+
+    monkeypatch.setattr(t, "_commit_checkpoint", crash)
+    with pytest.raises(_Crash):
+        t.poll()
+    assert max(r["block_num"] for r in t.entry.all_logs()) == 25
+    assert t2_last_block(tmp_path) == 20
+    forked = [lg["tx_hash"] for b in prov.canonical[19:21] for lg in b.logs()]
+    prov.fork(7, logs_per_block=2)  # replaces blocks 19..25
+
+    t2 = Tracker(prov, ParquetStore(tmp_path), FilterConfig())
+    events = t2.sync()
+    assert [r["tx_hash"] for r in events[0].removed] == forked
+    _assert_canonical(t2, prov)
+
+
+class _ForkingProvider:
+    """Delegates to a MockProvider and forks it just before the
+    ``fork_at``-th ``get_block_by_number`` call; records every header
+    that call returns."""
+
+    def __init__(self, inner, fork_at: int, depth: int) -> None:
+        self._inner = inner
+        self._fork_at = fork_at
+        self._depth = depth
+        self.headers = []
+
+    def get_block_by_number(self, n):
+        if len(self.headers) + 1 == self._fork_at:
+            self._inner.fork(self._depth, logs_per_block=2)
+        h = self._inner.get_block_by_number(n)
+        self.headers.append(h)
+        return h
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+
+def test_fork_inside_one_poll_matches_per_header_handling(tmp_path):
+    """The chain forks while a poll walks its new heights: the poll has
+    stored blocks that the fork retracts.  Its events (rows, indx, order)
+    and its entry equal those of a twin tracker handed the same headers
+    one at a time."""
+    prov = MockProvider()
+    prov.advance(20, logs_per_block=2)
+    forking = _ForkingProvider(prov, fork_at=4, depth=4)
+    t = Tracker(forking, ParquetStore(tmp_path / "a"), FilterConfig())
+    twin = Tracker(prov, ParquetStore(tmp_path / "b"), FilterConfig())
+    t.sync()
+    twin.sync()
+    prov.advance(6, logs_per_block=2)
+    forking.headers.clear()
+    events = t.poll()
+    assert any(e.removed for e in events)  # the fork retracted stored blocks
+    twin_events = [twin.handle_head(h) for h in forking.headers]
+    assert [(e.added, e.removed) for e in events] == [
+        (e.added, e.removed) for e in twin_events if e is not None
+    ]
+    assert t.entry.all_logs() == twin.entry.all_logs()
+    _assert_canonical(t, prov)
+
+
+def test_poll_writes_entry_and_checkpoint_once(tmp_path, monkeypatch):
+    """A poll over many new blocks makes one entry write and commits one
+    checkpoint (its window, then lastBlock)."""
+    prov = MockProvider()
+    prov.advance(20, logs_per_block=2)
+    store = ParquetStore(tmp_path)
+    t = Tracker(prov, store, FilterConfig())
+    t.sync()
+    prov.advance(8, logs_per_block=2)
+    writes, keys = [], []
+    store_logs = t.entry.store_logs
+    set_ = store.set
+    monkeypatch.setattr(t.entry, "store_logs", lambda logs: writes.append(len(logs)) or store_logs(logs))
+    monkeypatch.setattr(store, "set", lambda k, v: keys.append(k) or set_(k, v))
+    events = t.poll()
+    assert len(events) == 8 and writes == [16]
+    assert [k.split("_")[0] for k in keys] == ["headWindow", "lastBlock"]
+    _assert_canonical(t, prov)

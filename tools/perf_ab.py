@@ -10,7 +10,10 @@ runs ``perfbench/run.py`` once on each side with seed ``seed0 + i`` and
 the run length of ``BENCHMARK.json``; even pairs run the base first, odd
 pairs the change.  Prints every run's metrics, then per metric each
 side's median, the base's interquartile spread and how many pairs the
-change won (ties count for neither side).  The metrics are the
+change won (ties count for neither side), and the relative change of
+the median.  An end-to-end metric whose change median is worse than the
+base median by more than its ``bound`` in ``BENCHMARK.json`` is marked
+``BEYOND BOUND``.  The metrics are the
 end-to-end ones of ``BENCHMARK.json``, or with ``--trace 1`` its
 per-layer ones (traced runs; metrics that read 0 in every run are left
 out), which shows in which layer a change saves or costs.  Exits 1 when
@@ -60,6 +63,23 @@ def _quartiles(xs: list[float]) -> tuple[float, float]:
     return q1, q3
 
 
+def _summary_line(
+    name: str, width: int, b: list[float], c: list[float], better: str, bound: float | None
+) -> str:
+    """One metric's summary: both medians, the base IQR, the pairs the
+    change won, the relative change of the median, and ``BEYOND BOUND``
+    when the change median is worse than the base median by more than
+    ``bound`` (a fraction; None: no bound)."""
+    sign = 1 if better == "higher" else -1
+    wins = sum(sign * (cv - bv) > 0 for bv, cv in zip(b, c))
+    q1, q3 = _quartiles(b)
+    mb, mc = statistics.median(b), statistics.median(c)
+    rel = (mc - mb) / mb if mb else 0.0
+    beyond = bound is not None and -sign * rel > bound
+    return (f"{name:{width}s} {mb:12.4g} {mc:14.4g} {q3 - q1:10.4g} "
+            f"{wins:>8d}/{len(b)} {rel:+8.1%}" + ("  BEYOND BOUND" if beyond else ""))
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", required=True, help="git revision to compare against")
@@ -72,7 +92,9 @@ def main(argv: list[str] | None = None) -> int:
 
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     seconds = spec["run_seconds"]
-    better = {m["name"]: m["better"] for m in spec["per_layer" if args.trace else "end_to_end"]}
+    metrics = spec["per_layer" if args.trace else "end_to_end"]
+    better = {m["name"]: m["better"] for m in metrics}
+    bound = {m["name"]: m["bound"] for m in metrics if "bound" in m}
     runs: dict[str, list[dict]] = {"base": [], "change": []}
     base_dir = Path(tempfile.mkdtemp(prefix="perf-ab-"))
     try:
@@ -98,17 +120,12 @@ def main(argv: list[str] | None = None) -> int:
     print(f"\n{args.workload}: {args.pairs} pairs, base {args.base} vs working tree")
     width = max(len(n) for n in better)
     print(f"{'metric':{width}s} {'base median':>12s} {'change median':>14s} "
-          f"{'base IQR':>10s} {'change wins':>12s}")
+          f"{'base IQR':>10s} {'change wins':>12s} {'change':>8s}")
     for name in sorted(better):
         b = [r["metrics"][name]["value"] for r in runs["base"]]
         c = [r["metrics"][name]["value"] for r in runs["change"]]
-        if not any(b) and not any(c):
-            continue
-        sign = 1 if better[name] == "higher" else -1
-        wins = sum(sign * (cv - bv) > 0 for bv, cv in zip(b, c))
-        q1, q3 = _quartiles(b)
-        print(f"{name:{width}s} {statistics.median(b):12.4g} {statistics.median(c):14.4g} "
-              f"{q3 - q1:10.4g} {wins:>8d}/{len(b)}")
+        if any(b) or any(c):
+            print(_summary_line(name, width, b, c, better[name], bound.get(name)))
     return 0
 
 
