@@ -54,7 +54,41 @@ from pyspark.sql.types import StructType
 from ..reorg import ReorgTooDeepError
 from ..schemas import CHANGELOG_STREAM_SCHEMA
 from .file_chain import FileChainReader
-from .web3_source import _parse_topics, load_offset_sidecar, save_offset_sidecar
+from .web3_source import _parse_topics
+
+
+def load_offset_sidecar(options, key: list) -> tuple[str, dict | None]:
+    """Path and last committed offset of the stream reader's sidecar.
+
+    ``commit()`` mirrors the engine checkpoint into the sidecar so a
+    recreated reader resumes ``latestOffset`` from the last committed
+    offset instead of ``start_block`` (Spark restores the range start
+    from its own checkpoint; the sidecar keeps the reader's end
+    computation and AIMD pace consistent with it).  The sidecar belongs
+    to ONE query: it lives in that query's ``checkpoint_location`` when
+    given — keyed by the filter ``key`` alone, a fresh query would resume
+    another query's offset.  Without the option it falls back to
+    ``chain_dir``.  An absent or torn sidecar loads as ``None``."""
+    import hashlib
+
+    fid = hashlib.sha256(json.dumps(key, sort_keys=True).encode()).hexdigest()[:12]
+    base = options.get("checkpoint_location") or options["chain_dir"]
+    path = f"{base}/_source_offset_{fid}.json"
+    try:
+        with open(path) as f:
+            return path, json.load(f)
+    except (OSError, ValueError):
+        return path, None
+
+
+def save_offset_sidecar(path: str, end: dict) -> None:
+    """Atomic tmp+rename write: a torn write must not poison restarts."""
+    import os
+
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(end, f)
+    os.replace(tmp, path)
 
 
 class BlockListPartition(InputPartition):

@@ -47,10 +47,12 @@ def start_finalized_ingest(
 ):
     """Streaming query: web3logs → idempotent entry append.
 
-    Each micro-batch commits with ONE Spark action: ``toArrow()`` lands
-    the batch on the driver, where it is ordered, passed through the
-    replay guard and appended with ``entry.store_logs`` — the writer the
-    head path uses, so the source is read once per batch.  The source's
+    The source reads each micro-batch's rows on the driver, with one
+    range fetch, and Spark keeps them as cached Arrow blocks.  The batch
+    then commits with ONE Spark action: ``toArrow()`` (one task, no
+    executor Python worker) hands the rows to the callback, where they
+    are ordered, passed through the replay guard and appended with
+    ``entry.store_logs`` — the writer the head path uses.  The source's
     admission caps bound what the driver holds: at most
     ``max(max_rows_per_batch, one block's logs)`` rows per batch (the row
     cap halves the block range down to a single block, never below).
@@ -85,7 +87,6 @@ def start_finalized_ingest(
     reader = (
         spark.readStream.format("web3logs")
         .option("chain_dir", chain_dir)
-        .option("checkpoint_location", checkpoint_dir)
         .option("addresses", json.dumps(list(config.addresses)))
         .option("topics", json.dumps(list(config.topics)))
         .option("start_block", str(config.start_block))

@@ -3,11 +3,15 @@ ingest (exactly-once), plus the changelog/current-view model."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from eth_event_tracker_spark.config import FilterConfig
+from eth_event_tracker_spark.schemas import RAW_LOG_SCHEMA
 from eth_event_tracker_spark.sources.file_chain import dump_chain
 from eth_event_tracker_spark.sources.mock_chain import MockProvider
+from eth_event_tracker_spark.sources.web3_source import Web3LogStreamReader
 from eth_event_tracker_spark.store import ParquetEntry, ParquetStore
 from eth_event_tracker_spark.streaming import Tracker
 from eth_event_tracker_spark.streaming.pipeline import (
@@ -162,12 +166,73 @@ def test_redelivered_batch_admits_nothing(spark, tmp_path, backend):
         after = entry.all_logs()
         assert after == before
         assert [r["indx"] for r in after] == list(range(len(after)))
+
+        # the replay re-reads exactly the rows the original batch stored
+        start, end = (_logged_offset(ckpt, b) for b in (last - 1, last))
+        reader = Web3LogStreamReader({"chain_dir": cdir})
+        replayed = [dict(zip(RAW_LOG_SCHEMA.fieldNames(), r))
+                    for r in reader.readBetweenOffsets(start, end)]
+        stored = [{k: v for k, v in r.items() if k != "indx"} for r in before
+                  if start["block"] <= r["block_num"] < end["block"]]
+        assert replayed and sorted(replayed, key=_position) == sorted(stored, key=_position)
     finally:
         store.close()
 
 
+def _logged_offset(ckpt, batch_id: int) -> dict:
+    """The source's end offset of ``batch_id`` in the query's offset log
+    (a version line, the batch metadata, then one offset per source)."""
+    return json.loads((ckpt / "offsets" / str(batch_id)).read_text().splitlines()[2])
+
+
+def _position(row: dict) -> tuple:
+    return (row["block_num"], row["tx_index"], row["log_index"])
+
+
+def test_warm_finalized_batch_is_one_task(spark, tmp_path, monkeypatch):
+    """A warm micro-batch of the finalized stream reads its rows as one
+    Spark job of one task: the source read them on the driver, so
+    ``toArrow`` only collects the cached Arrow blocks."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    sc = spark.sparkContext
+    group_props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    groups: list[str] = []
+    real_to_arrow = DataFrame.toArrow
+
+    def to_arrow_in_group(self):
+        groups.append(f"finalized-batch-{len(groups)}-{tmp_path.name}")
+        prev = {p: sc.getLocalProperty(p) for p in group_props}
+        sc.setJobGroup(groups[-1], groups[-1])
+        try:
+            return real_to_arrow(self)
+        finally:  # the stream's own job group comes back
+            for p, v in prev.items():
+                sc.setLocalProperty(p, v)
+
+    monkeypatch.setattr(DataFrame, "toArrow", to_arrow_in_group)
+    prov = MockProvider()
+    prov.advance(60, logs_per_block=2)
+    cdir = str(tmp_path / "chain")
+    dump_chain(prov, cdir)
+    cfg = FilterConfig(batch_size=10, max_block_backlog=10)
+    q = start_finalized_ingest(spark, cdir, ParquetStore(tmp_path / "store"), cfg,
+                               str(tmp_path / "ckpt"))
+    _drain(q)
+    monkeypatch.undo()
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert len(groups) == 6  # blocks 0..50 in batches of 10
+    for g in groups[1:]:
+        jobs = tracker.getJobIdsForGroup(g)
+        stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+        assert len(jobs) == 1, g
+        assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1, g
+
+
 def test_fresh_checkpoint_keeps_batch_caps(spark, tmp_path):
-    """The source's offset sidecar belongs to one query: a fresh query
+    """A query's offsets belong to its own checkpoint: a fresh query
     (new checkpoint, fresh store) on a chain another query already
     drained starts at block 0 and keeps the per-batch block cap."""
     prov = MockProvider()
