@@ -133,10 +133,14 @@ class InMemEntry:
         return self._tt_horizon
 
     def df(self, spark):
+        """The rows as a one-partition Arrow ``LocalRelation``, the way
+        ``ParquetEntry.df`` hands Spark a small entry."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from ..schemas import CHANGELOG_SCHEMA, LOG_SCHEMA
+        from .parquet_store import arrow_rows_df
 
         schema = CHANGELOG_SCHEMA if self.changelog else LOG_SCHEMA
-        cols = [f.name for f in schema.fields]
-        return spark.createDataFrame(
-            [tuple(r.get(c) for c in cols) for r in self._rows], schema
-        )
+        rows = pa.Table.from_pylist(self._rows, schema=to_arrow_schema(schema))
+        return arrow_rows_df(spark, rows, schema)

@@ -25,11 +25,15 @@ Why this layout scales:
     O(log n) files, and each row is rewritten once per tier.  Files the
     tier merge did not write (``append_df``'s Spark output, ``compact()``'s
     merged file) are never tier-merged.
-  - Spark reads the entry as its non-empty ``bucket=<k>`` directories
-    with the entry's declared schema, so planning a read runs no Spark
-    job (no per-file listing, no footer schema inference).  The
-    DataFrame has no ``bucket`` column; range filters on ``indx`` and
-    ``block_num`` prune by row-group statistics.
+  - An entry whose rows total at most a quarter of
+    ``spark.sql.files.openCostInBytes`` uncompressed reaches Spark as one
+    Arrow table read on the driver, so reading it opens no file from a
+    task.  A larger one is scanned
+    by Spark as its non-empty ``bucket=<k>`` directories with the
+    entry's declared schema, so planning the read runs no Spark job (no
+    per-file listing, no footer schema inference); range filters on
+    ``indx`` and ``block_num`` prune by row-group statistics.  Neither
+    DataFrame has a ``bucket`` column.
 
 Micro-batch appends go through pyarrow (``store_logs``, driver-side):
 the head path's batches are ≤ backlog blocks and the finalized stream's
@@ -87,6 +91,15 @@ _COMPACT_TMP = "_compact.tmp"  # hidden: neither _bucket_files nor Spark reads i
 _MERGE_FANIN = 8  # files of one tier that merge into one of the next
 _TIER_FILE = re.compile(r"part-t(\d+)-(\d+)\.parquet")  # (tier, first indx)
 
+# ``ParquetEntry.df`` hands Spark an entry as rows when they total at most
+# ``spark.sql.files.openCostInBytes // _ROWS_READ_DIVISOR`` uncompressed.
+# Rows cost the driver per row (the Arrow copy into the JVM, the
+# optimizer's projection of the ``LocalRelation``), a scan costs per
+# file: on a 4-core host the head refresh is about even at 1-2 MB, and
+# the scan wins from 2.3 MB in a warm session and from 3.7 MB in a fresh
+# one (``tools/refresh_crossover.py``).
+_ROWS_READ_DIVISOR = 4
+
 
 def _tier_file(tier: int, first_indx: int) -> str:
     """Name of a tier file: its tier and its smallest indx, unique among
@@ -107,6 +120,22 @@ def _max_indx(f: Path) -> int:
         ),
         default=-1,
     )
+
+
+def _uncompressed_bytes(f: Path) -> int:
+    """Uncompressed size of a data file's rows, from its footer."""
+    md = pq.read_metadata(f)
+    return sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+
+
+def arrow_rows_df(spark, table: pa.Table, schema):
+    """Rows held on the driver as a one-partition DataFrame of Spark
+    ``schema``: the Arrow table becomes a ``LocalRelation``, so reading it
+    opens no file and starts no Python worker (a DataFrame made from
+    Python rows is an RDD that Python workers serialize).  One partition:
+    the rows are already in one process, and a grouping or window over
+    them then needs no exchange."""
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def _atomic_write_json(path: Path, obj) -> None:
@@ -252,6 +281,11 @@ class ParquetEntry:
             t = pf.read(columns=schema.names)
         return t if t.schema.equals(schema) else t.select(schema.names).cast(schema)
 
+    def _read_files(self, files: list[Path]) -> pa.Table:
+        """The rows of ``files`` as one table of the entry schema."""
+        tables = [self._read_file(f) for f in files]
+        return pa.concat_tables(tables) if tables else self.schema.empty_table()
+
     # -- StoreLogs (store/store.go:28-29; append batch, assign indx) --------
     def store_logs(self, logs: list[dict]) -> list[dict]:
         """Append raw logs (no indx), assigning consecutive indx starting
@@ -357,24 +391,38 @@ class ParquetEntry:
     def df(self, spark):
         """The entry as a Spark DataFrame with the entry's declared
         schema; building it runs no Spark job.  There is no ``bucket``
-        column: range filters on ``indx``/``block_num`` prune by parquet
-        row-group statistics.  Unordered — an orderBy here would force a
-        global sort exchange on every read; callers that need the
-        sequence order by ``indx``.
+        column.  Unordered — an orderBy here would force a global sort
+        exchange on every read; callers that need the sequence order by
+        ``indx``.
 
-        An entry whose files total at most ``spark.sql.files.openCostInBytes``
-        is read as one partition: Spark prices opening one file at that
-        many bytes, so splitting less data cannot pay, and a single
-        partition needs no exchange for any grouping or window over it
-        (the head path's view refresh runs as one job).
+        An entry whose rows total at most a quarter of
+        ``spark.sql.files.openCostInBytes`` uncompressed (summed from the
+        parquet footers; ``_ROWS_READ_DIVISOR``) is read on the driver
+        with pyarrow and handed to Spark as one Arrow table
+        (:func:`arrow_rows_df`): Spark prices opening a file at the open
+        cost, so its task would spend more opening the entry's small
+        files than reading them, and one partition needs no exchange for
+        any grouping or window over it (the head path's view refresh runs
+        as one job that opens no file).  The bound is on uncompressed
+        bytes, which the driver holds and ships in the task; on-disk size
+        understates them about four times.  Such a DataFrame is a snapshot
+        of the rows: re-running it after an append, truncation or
+        compaction gives the same rows and cannot fail with
+        ``FILE_NOT_EXIST`` on a file that was since replaced.
 
-        The DataFrame holds the file list of the moment it was built:
-        after a later append, truncation or compaction, build a new one
-        (re-running it may read files that were since replaced)."""
+        A larger entry is scanned by Spark, and range filters on
+        ``indx``/``block_num`` prune by parquet row-group statistics; one
+        whose files total at most the open cost on disk is read as one
+        partition.  That DataFrame holds the file list of the moment it
+        was built: after a later append, truncation or compaction, build a
+        new one (re-running it may read files that were since replaced)."""
         buckets = self._buckets()
-        df = self._read(spark, buckets)
+        files = [f for k in buckets for f in self._bucket_files(k)]
         open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
-        size = sum(f.stat().st_size for k in buckets for f in self._bucket_files(k))
+        if sum(_uncompressed_bytes(f) for f in files) <= open_cost // _ROWS_READ_DIVISOR:
+            return arrow_rows_df(spark, self._read_files(files), self._spark_schema)
+        df = self._read(spark, buckets)
+        size = sum(f.stat().st_size for f in files)
         return df.coalesce(1) if size <= open_cost else df
 
     @functools.cached_property
@@ -384,15 +432,13 @@ class ParquetEntry:
         return from_arrow_schema(self.schema)
 
     def _read(self, spark, buckets: list[int]):
-        """The rows of ``buckets`` as one DataFrame.  Spark gets the
-        bucket directories, not their files, and the declared schema:
-        above 32 paths Spark lists files with a job of one task per path,
-        and without a schema it runs a footer job to infer one.  Spark
-        skips the ``_``/``.``-prefixed debris as ``_bucket_files`` does,
-        so the files read are exactly those."""
+        """Spark's scan of the rows of ``buckets``, at least one of which
+        holds a file.  Spark gets the bucket directories, not their files,
+        and the declared schema: above 32 paths Spark lists files with a
+        job of one task per path, and without a schema it runs a footer
+        job to infer one.  Spark skips the ``_``/``.``-prefixed debris as
+        ``_bucket_files`` does, so the files read are exactly those."""
         dirs = [str(self.path / f"bucket={k}") for k in buckets if self._bucket_files(k)]
-        if not dirs:
-            return spark.createDataFrame([], self._spark_schema)
         return spark.read.schema(self._spark_schema).parquet(*dirs)
 
     def append_df(self, df) -> int:
@@ -706,7 +752,5 @@ class ParquetEntry:
 
     def all_logs(self) -> list[dict]:
         """Driver-side full read, ordered by indx (test/verification helper)."""
-        tables = [self._read_file(f) for k in self._buckets() for f in self._bucket_files(k)]
-        if not tables:
-            return []
-        return pa.concat_tables(tables).sort_by("indx").to_pylist()
+        files = [f for k in self._buckets() for f in self._bucket_files(k)]
+        return self._read_files(files).sort_by("indx").to_pylist()

@@ -5,6 +5,7 @@ monotonicity, truncate-then-reappend."""
 
 from __future__ import annotations
 
+import contextlib
 import re
 import uuid
 from pathlib import Path
@@ -232,10 +233,47 @@ def test_entry_df_plans_without_spark_jobs(hundred_file_changelog, spark):
     assert df.columns == hundred_file_changelog.columns
 
 
+@contextlib.contextmanager
+def _open_cost(spark, value: str):
+    """``spark.sql.files.openCostInBytes`` set to ``value`` for the block:
+    1k sends the test entries, whose rows are a few kB, down the scan
+    path of ``ParquetEntry.df``."""
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
 def test_entry_df_reads_exactly_the_bucket_files(hundred_file_changelog, spark):
+    """The scan path reads exactly the entry's files: Spark skips the
+    ``_compact.tmp`` debris as ``_bucket_files`` does."""
     clog = hundred_file_changelog
-    read = {Path(unquote(urlparse(u).path)).resolve() for u in clog.df(spark).inputFiles()}
+    with _open_cost(spark, "1k"):
+        read = {Path(unquote(urlparse(u).path)).resolve() for u in clog.df(spark).inputFiles()}
     assert read == {f.resolve() for f in clog._bucket_files(0)}
+
+
+def test_entry_df_rows_path_holds_exactly_the_bucket_files_rows(hundred_file_changelog, spark):
+    """Under the open cost the entry reaches Spark as rows, not files: the
+    plan scans no file and the rows are those of ``_bucket_files``, with
+    the ``_compact.tmp`` debris left out."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    clog = hundred_file_changelog
+    df = clog.df(spark)
+    assert df.inputFiles() == []
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    files = pa.concat_tables([pq.ParquetFile(f).read() for f in clog._bucket_files(0)])
+    got = [r.asDict() for r in df.orderBy("indx").collect()]
+    assert [{**r, "data": bytes(r["data"])} for r in got] == files.sort_by("indx").to_pylist()
 
 
 def _view_refresh(spark, clog):
@@ -246,13 +284,17 @@ def _view_refresh(spark, clog):
 
 def test_view_refresh_job_count(hundred_file_changelog, spark):
     """The head path's view refresh over a 100-file changelog smaller
-    than one file's open cost: one partition, so the scan, the window
-    and the count run as one job — no listing or footer job, no
-    shuffle."""
+    than one file's open cost: its rows reach Spark in one partition and
+    no task opens a file, so the window and the count run as one job —
+    no listing or footer job, no shuffle, no file scan."""
     clog = hundred_file_changelog
-    rows, jobs = _spark_jobs(spark, lambda: _view_refresh(spark, clog).collect())
+    df = _view_refresh(spark, clog)
+    rows, jobs = _spark_jobs(spark, df.collect)
     assert len(rows) == 100
     assert len(jobs) <= 1, jobs
+    plan = _formatted_plan(df)
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
+    assert not re.search(r"\(\d+\) Exchange", plan), plan
 
 
 def test_view_refresh_one_exchange_above_bound(hundred_file_changelog, spark):
@@ -260,19 +302,35 @@ def test_view_refresh_one_exchange_above_bound(hundred_file_changelog, spark):
     and the view refresh shuffles exactly once: the window's
     ``block_hash`` exchange also serves the per-block count."""
     clog = hundred_file_changelog
-    key = "spark.sql.files.openCostInBytes"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "1k")
-    try:
+    with _open_cost(spark, "1k"):
         df = _view_refresh(spark, clog)
         assert clog.df(spark).rdd.getNumPartitions() > 1
-        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        plan = _formatted_plan(df)
         assert len(df.collect()) == 100
-    finally:
-        spark.conf.set(key, prev)
     exchanges = [ln for ln in plan.splitlines() if re.match(r"\(\d+\) Exchange", ln)]
     assert len(exchanges) == 1, plan
     assert "hashpartitioning(block_hash" in plan
+
+
+def test_current_view_plans_in_few_py4j_round_trips(hundred_file_changelog, spark, monkeypatch):
+    """``current_view`` builds its window as one SQL expression: a dozen
+    py4j round trips, not the ~140 of the column-object form, a fixed
+    cost the head path pays on every refresh."""
+    from eth_event_tracker_spark.streaming.pipeline import current_view
+
+    df = hundred_file_changelog.df(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(None)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    current_view(df)
+    monkeypatch.undo()
+    assert len(calls) <= 20, len(calls)
 
 
 def test_entry_crash_recovery_meta_behind(tmp_path):
@@ -836,6 +894,8 @@ def test_empty_changelog_current_view(make_store, spark):
     clog = make_store().changelog_entry("empty")
     empty = clog.df(spark)
     assert "change_type" in empty.columns
+    # no RDD of Python rows: collecting one starts a Python worker
+    assert "LogicalRDD" not in empty._jdf.queryExecution().optimizedPlan().toString()
     assert current_view(empty).count() == 0
     adds = _logs(0x1, 2, 1)
     clog.store_logs([{**r, "change_type": "add"} for r in adds])
@@ -882,3 +942,45 @@ def test_horizon_bound_with_duplicate_adds(make_store, spark):
     }
     assert live_at_1 == {(a[0]["block_hash"], a[0]["tx_index"], a[0]["log_index"])}
     assert current_view(clog.df(spark)).count() == 2
+
+
+def _view_hash(spark, clog) -> tuple:
+    """Row count and order-insensitive value hash of ``current_view``."""
+    from pyspark.sql import functions as F
+
+    from eth_event_tracker_spark.streaming.pipeline import current_view
+
+    view = current_view(clog.df(spark))
+    row_hash = F.xxhash64(*sorted(view.columns)).cast("decimal(38,0)")
+    return tuple(view.agg(F.count("*"), F.sum(row_hash)).first())
+
+
+def test_current_view_same_through_every_read(tmp_path, spark):
+    """One changelog with a reorg and a redelivered add gives the same
+    ``current_view`` through the parquet rows path, the forced parquet
+    scan path, and the inmem and jdbc entries."""
+    adds1, adds2, adds2b = _logs(0x1, 3, 1), _logs(0x2, 3, 2), _logs(0x3, 2, 2)
+    batches = [
+        [{**r, "change_type": "add"} for r in adds1 + adds2],
+        [{**r, "change_type": "remove"} for r in reversed(adds2)],
+        [{**r, "change_type": "add"} for r in adds2b],
+        [{**adds1[0], "change_type": "add"}],  # redelivered
+    ]
+    jdbc = _derby_store(spark, tmp_path)
+    stores = {"parquet": ParquetStore(tmp_path / "pq"), "inmem": InMemStore(), "jdbc": jdbc}
+    hashes = {}
+    try:
+        for name, store in stores.items():
+            clog = store.changelog_entry("diff")
+            for batch in batches:
+                clog.store_logs(batch)
+            hashes[name] = _view_hash(spark, clog)
+            if name == "parquet":
+                assert clog.df(spark).inputFiles() == []
+                with _open_cost(spark, "1k"):
+                    assert clog.df(spark).inputFiles()
+                    hashes["parquet scan"] = _view_hash(spark, clog)
+    finally:
+        jdbc.close()
+    assert hashes["parquet"][0] == len(adds1) + len(adds2b)
+    assert len(set(hashes.values())) == 1, hashes
