@@ -28,12 +28,11 @@ Why this layout scales:
   - An entry whose rows total at most a quarter of
     ``spark.sql.files.openCostInBytes`` uncompressed reaches Spark as one
     Arrow table read on the driver, so reading it opens no file from a
-    task.  A larger one is scanned
-    by Spark as its non-empty ``bucket=<k>`` directories with the
-    entry's declared schema, so planning the read runs no Spark job (no
-    per-file listing, no footer schema inference); range filters on
-    ``indx`` and ``block_num`` prune by row-group statistics.  Neither
-    DataFrame has a ``bucket`` column.
+    task.  A larger one is scanned by Spark as its non-empty
+    ``bucket=<k>`` directories with the entry's declared schema, so
+    planning the read runs no Spark job (no per-file listing, no footer
+    schema inference); range filters on ``indx`` and ``block_num`` prune
+    by row-group statistics.  Neither DataFrame has a ``bucket`` column.
 
 Micro-batch appends go through pyarrow (``store_logs``, driver-side):
 the head path's batches are ≤ backlog blocks and the finalized stream's
