@@ -61,7 +61,10 @@ def test_semi_anti_join_operators(spark, sf_dir):
 
 def test_address_filter_is_source_predicate(spark, sf_dir):
     """P-1 on a *stored* entry table pushes the IN-set to parquet, the
-    engine's analogue of the reference's server-side filter."""
+    engine's analogue of the reference's server-side filter.  An entry
+    under a quarter of ``spark.sql.files.openCostInBytes`` reaches Spark
+    as rows, not a scan; the open cost is set to 1k here so the 20-row
+    entry is scanned, as an entry of real size is."""
     from eth_event_tracker_spark.operators.filters import address_filter
     from eth_event_tracker_spark.sources.mock_chain import MockProvider
     from eth_event_tracker_spark.store import ParquetStore
@@ -73,9 +76,16 @@ def test_address_filter_is_source_predicate(spark, sf_dir):
     store = ParquetStore(tempfile.mkdtemp())
     e = store.entry("f1")
     e.store_logs([lg for b in prov.canonical for lg in b.logs()])
-    df = address_filter(e.df(spark), ["0x" + "aa" * 20]).select("indx", "address")
-    plan = plan_of(df)
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        df = address_filter(e.df(spark), ["0x" + "aa" * 20]).select("indx", "address")
+        plan = plan_of(df)
+    finally:
+        spark.conf.set(key, prev)
     squashed = plan.replace(" ", "")
+    assert "Scan parquet" in plan
     assert "PushedFilters" in plan
     assert "In(address" in squashed or "EqualTo(address" in squashed
     # reading an entry must not cost a shuffle
